@@ -40,54 +40,6 @@ object IndexOps {
   def renumberByDenseKey(df: DataFrame, key: Column): DataFrame =
     df.withColumn("ord", key.cast("long")).withColumn("idx", col("ord"))
 
-  /** Catalyst-only rank for a (group, minor) composite order over a
-    * detail table whose NUMERIC group key has many distinct values and
-    * bounded per-group row counts — the PK/FK detail shape, e.g.
-    * (l_orderkey, l_linenumber). Within-group `row_number` runs over
-    * window partitions bounded by the group size (≤ lines-per-order,
-    * never data-dependent equal-width buckets), and each group's global
-    * offset is a distributed prefix sum of the per-group counts
-    * (bucketed over the counts frame — itself ~rows/avg-group-size —
-    * never a single-partition window). The counts aggregate and the
-    * offset join reuse the group window's hash exchange, so the data
-    * shuffles ONCE. Compared to [[renumberByUniqueKey]] on a packed
-    * `group·stride + minor` key: no min/max stats branch, no
-    * equal-width-bucket skew sensitivity, and the window-partition bound
-    * (max rows per group) holds at any scale regardless of key
-    * distribution. Measured cost at sf0.1 local[32] (interleaved A/B,
-    * medians of 5-9, BENCH_NOTES.md Round 7): parity to ~1.6× SLOWER
-    * than the packed-key rank — the plan is one node deeper — so prefer
-    * the packed key when a collision-free stride exists and group-minor
-    * rank when it doesn't or when key skew would starve equal-width
-    * buckets. The caller asserts that (group, minor) pairs are unique
-    * and minor is numeric. */
-  def rankByGroupedMinor(df: DataFrame, group: Column, minor: Column,
-                         renumberIdx: Boolean = true): DataFrame = {
-    requireNumericLead(df, group)
-    requireNumericLead(df, minor)
-    val w = Window.partitionBy(group).orderBy(minor.asc)
-    val rn = df.withColumn("__rn", row_number().over(w).cast("long"))
-    val counts = rn.groupBy(group.as("__g")).agg(count(lit(1)).as("__tot"))
-    val wc = Window.partitionBy(col("__b")).orderBy(col("__g"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = bucketizeByLead(counts, col("__g"))
-      .withColumn("__cum", sum(col("__tot")).over(wc))
-    val boff = prefixOffsets(
-      cum.groupBy(col("__b")).agg(sum(col("__tot")).as("__tot")),
-      ascending = true)
-    // exclusive prefix: everything before this group = bucket offset +
-    // within-bucket inclusive cum − own total. The offsets join is left
-    // unhinted: the planner broadcasts it while it is small and falls
-    // back to a co-partitioned join (the big side already hashes on the
-    // group key from the window) when group cardinality outgrows that.
-    val offsets = cum.join(broadcast(boff), "__b")
-      .select(col("__g"), (col("__off") + col("__cum") - col("__tot")).as("__off"))
-    val out = rn.join(offsets, group === col("__g"))
-      .withColumn("ord", col("__off") + col("__rn") - 1L)
-    (if (renumberIdx) out.withColumn("idx", col("ord")) else out)
-      .drop("__g", "__rn", "__off")
-  }
-
   /** Rank following `order` written to `ord` only; `idx` passes through
     * (used by ordered materialization, where idx holds wrapped values). */
   def reorderKeepIdx(df: DataFrame, order: Seq[Column]): DataFrame =

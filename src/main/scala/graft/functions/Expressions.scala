@@ -535,8 +535,6 @@ case class UnicodeNormalize(child: Expression, form: java.text.Normalizer.Form)
     copy(child = newChild)
 }
 
-/** Session registration for the native expressions, so they are usable
-  * from SQL and via `call_function`. */
 /** Identity expression DECLARED non-deterministic — an optimizer
   * barrier. Use case (r19, measured on the ADC rankers): the optimizer
   * collapses a scoring projection into the input expressions of a
@@ -565,9 +563,17 @@ case class EvalBarrier(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** The native graft functions by SQL name, so they are usable from SQL
+  * and via `call_function`. [[table]] is the ONE list: [[register]]
+  * reads it per session and [[graft.plans.GraftExtensions]] injects it
+  * at session build. Expressions built from constructor data (PQ
+  * codebooks, BPE merge lists) have no SQL form and are reached through
+  * `GraftColumnShim` instead. */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
+  import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+
+  /** (name, usage, builder) of every SQL-callable graft function. */
+  val table: Seq[(String, String, FunctionBuilder)] = Seq[(String, String, FunctionBuilder)](
     // CONSTRAINT (r19 verdict): the non-determinism flag that stops the
     // optimizer inlining the barrier's child into an aggregate's input
     // ALSO blocks predicate pushdown through any projection containing
@@ -576,25 +582,32 @@ object GraftFunctions {
     // shields (an aggregate/udaf input); never upstream of a selective
     // filter that should reach the scan. Every current call site sits
     // directly under an aggregation (ExpressionSpec pins the plan shape).
-    reg.createOrReplaceTempFunction("graft_barrier",
-      exprs => EvalBarrier(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_hex_votes16",
-      exprs => HexVotes16Expr(exprs.head), "built-in")
-    java.text.Normalizer.Form.values().foreach { form =>
-      reg.createOrReplaceTempFunction(s"graft_${form.name().toLowerCase}",
-        exprs => UnicodeNormalize(exprs.head, form), "built-in")
+    ("graft_barrier", "x -> x, an optimizer barrier against inlining",
+      exprs => EvalBarrier(exprs.head)),
+    ("graft_hex_votes16", "hex string -> int, bit i = hex digit i in [8-f]",
+      exprs => HexVotes16Expr(exprs.head)),
+    ("graft_code_points", "string -> array<int> of Unicode code points",
+      exprs => CodePointsExpr(exprs.head)),
+    ("graft_dot", "array<double> x array<double> -> dot product",
+      exprs => DotProductExpr(exprs(0), exprs(1))),
+    ("graft_utf32le_encode", "string -> UTF-32LE bytes",
+      exprs => Utf32Encode(exprs.head, bigEndian = false)),
+    ("graft_utf32be_encode", "string -> UTF-32BE bytes",
+      exprs => Utf32Encode(exprs.head, bigEndian = true)),
+    ("graft_utf32le_decode", "UTF-32LE bytes -> string (U+FFFD policy)",
+      exprs => Utf32Decode(exprs.head, bigEndian = false)),
+    ("graft_utf32be_decode", "UTF-32BE bytes -> string (U+FFFD policy)",
+      exprs => Utf32Decode(exprs.head, bigEndian = true))
+  ) ++ java.text.Normalizer.Form.values().toSeq.map { form =>
+    (s"graft_${form.name().toLowerCase}",
+      s"string -> ${form.name()}-normalized string",
+      (exprs => UnicodeNormalize(exprs.head, form)): FunctionBuilder)
+  }
+
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    table.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, build, "built-in")
     }
-    reg.createOrReplaceTempFunction("graft_code_points",
-      exprs => CodePointsExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_dot",
-      exprs => DotProductExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_utf32le_encode",
-      exprs => Utf32Encode(exprs.head, bigEndian = false), "built-in")
-    reg.createOrReplaceTempFunction("graft_utf32be_encode",
-      exprs => Utf32Encode(exprs.head, bigEndian = true), "built-in")
-    reg.createOrReplaceTempFunction("graft_utf32le_decode",
-      exprs => Utf32Decode(exprs.head, bigEndian = false), "built-in")
-    reg.createOrReplaceTempFunction("graft_utf32be_decode",
-      exprs => Utf32Decode(exprs.head, bigEndian = true), "built-in")
   }
 }

@@ -142,17 +142,10 @@ object Classifier {
         .withColumnRenamed(idCol, "__pid")
       // joint gradient: features join probs on the doc id (both sides
       // hash on it — colocated), partial-aggregated to ≤257 rows
-      val gradDf = full.join(probs, col(idCol) === col("__pid"))
+      val grad = full.join(probs, col(idCol) === col("__pid"))
         .groupBy(col("bk"))
         .agg((sum((col("__pp") - col("__py")) * col("x")) / n).as("g"))
-      val grad = gradDf
         .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-      // plan-audit instrumentation (dev-only, env-gated): the per-round
-      // plan is internal — dump the AQE-final executed plan of round 2
-      if (it == 1 && sys.env.contains("GRAFT_GD_EXPLAIN")) {
-        println("===== logisticTrainOnFeatures executed round plan =====")
-        println(gradDf.queryExecution.executedPlan.toString)
-      }
       var i = 0
       while (i < 257) { w(i) -= lr * grad.getOrElse(i, 0.0); i += 1 }
       it += 1

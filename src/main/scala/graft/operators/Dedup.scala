@@ -275,12 +275,12 @@ object Dedup {
     // Join strategy MEASURED and left to the planner (r20): forcing
     // SHUFFLE_HASH so both sides share one Exchange(band, key) — vs the
     // planner's broadcast of the capped frame — is a statistical TIE in
-    // a same-JVM interleaved A/B (QProbeMh: bcast 2.645 s / shj 2.690 s
-    // median of 7 on the full q32 spine); the broadcast side's apparent
-    // pipeline duplication is mostly healed by ReuseExchange on the
-    // signature and election exchanges already, and at scale the size
-    // estimates rule out the broadcast on their own. Pinned here so the
-    // hint isn't re-tried blindly.
+    // a same-JVM interleaved A/B (bcast 2.645 s / shj 2.690 s median of
+    // 7 on the full q32 spine, OPTIMIZATION_r20.md §3); the broadcast
+    // side's apparent pipeline duplication is mostly healed by
+    // ReuseExchange on the signature and election exchanges already, and
+    // at scale the size estimates rule out the broadcast on their own.
+    // Pinned here so the hint isn't re-tried blindly.
     val l = capped.as("l"); val r = capped.as("r")
     l.join(r, col("l.band") === col("r.band") && col("l.key") === col("r.key") &&
         col("l.id") < col("r.id"))
@@ -619,7 +619,8 @@ object Dedup {
     // char i of md5 is in [8-f]") instead of 16 substring+isin subtrees
     // per row; each per-bit sum then reads its vote with two bit-ops.
     // Vote identity with the old form is pinned in ExpressionSpec;
-    // before/after in OPTIMIZATION_r20.md (§4 expression work).
+    // before/after in OPTIMIZATION_r20.md (§4 expression work). The vote
+    // mask assumes non-null tokens: a null `m` would be skipped by sum().
     val toks = df.select(col(idCol).as("id"),
         explode(TextAnalysis.tokens(col(textCol))).as("tok"))
       .withColumn("m", org.apache.spark.sql.GraftColumnShim
@@ -754,10 +755,10 @@ object Dedup {
     // the duplicated segments are cheap (q33 pins the whole fingerprint
     // aggregation at ~70 ms task time at sf0.1) and a SHUFFLE_HASH
     // rewrite that shares one Exchange(band, key) across both sides
-    // measured canary-flat (targeted runs, q17 canary; QProbeMh pins
-    // the same tie on the minhash twin). The real cost is the verified
-    // pair VOLUME (the output-density contract above) — pinned so the
-    // hint isn't re-tried blindly.
+    // measured canary-flat (targeted runs, q17 canary; the minhash twin
+    // measured the same tie, OPTIMIZATION_r20.md §2-3). The real cost is
+    // the verified pair VOLUME (the output-density contract above) —
+    // pinned so the hint isn't re-tried blindly.
     val l = banded.as("l")
     val r = banded.as("r")
     // popcount verify BEFORE the pair dedup: a pair's XOR is a pure

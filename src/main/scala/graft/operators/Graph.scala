@@ -104,77 +104,20 @@ object Graph {
       .join(dict.select(col("name").as("src"), col("nid").as("srcId")), "src")
       .join(dict.select(col("name").as("dst"), col("nid").as("dstId")), "dst")
       .select(col("srcId").as("src"), col("dstId").as("dst"))
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // (src, dst, deg) long-keyed spine — reused by every round's join
-    val spine = e.join(outDeg, "src").ckpt()
-    // Nodes with NO in-edges receive zero contribution in EVERY round
-    // (every spine src has rank > 0 and deg ≥ 1, so every node with an
-    // in-edge appears in every round's contribution aggregate), hence
-    // their rank is the CONSTANT (1−d)/N after any round. Computing
-    // that set once — a node-sized anti join — replaces the per-round
-    // dict ⋈ contribs left join that re-scanned and re-shuffled the
-    // node frame every round (guide §2.4 remove shuffles outright;
-    // in-loop plan evidence in plans/r20/). Same double: the old path
-    // computed (1−d)/N + d·0.0, and x + d·0.0 ≡ x for x > 0.
-    val noInRanks = dict.select(col("nid"))
-      .join(e.select(col("dst").as("nid")).distinct(), Seq("nid"), "left_anti")
-      .select(col("nid").as("id"), lit((1.0 - damping) / n).as("rank"))
-      .ckpt(false) // node-sized; materializes inside the output job
-    var ranks = dict.select(col("nid").as("id"), lit(1.0 / n).as("rank"))
-    val intermediates = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (round <- 0 until iters) {
-      // SHUFFLE_HASH on the node-sized ranks side: SMJ would SORT the
-      // edge-sized spine every round after its exchange; the hash join
-      // streams the spine unsorted and builds per-partition tables
-      // bounded by nodes/parts rows of 16 bytes — spillable,
-      // partition-count-scaled (guide §3.1). Same-JVM interleaved probe
-      // (QProbePr): leftjoin 3.19 s / union 2.79 / union+SHJ 2.00 —
-      // plans committed under plans/r20/.
-      ranks = spine
-        .join(ranks.select(col("id").as("src"), col("rank"))
-          .hint("SHUFFLE_HASH"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("rank") / col("deg")).as("cin"))
-        .select(col("id"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * col("cin")).as("rank"))
-        .unionByName(noInRanks)
-      // periodic eager checkpoint: deep iteration counts keep lineage
-      // and planning time bounded; shallow runs stay one lazy chain
-      // into the final checkpoint below
-      if ((round + 1) % checkpointEvery == 0 && round + 1 < iters) {
-        ranks = ranks.ckpt()
-        intermediates += ranks
-      }
-    }
-    // ONE eager checkpoint of the (node, rank)-sized result — mapped
-    // back to the CALLER's node ids — then free every working block:
-    // dict, spine, periodic round checkpoints. Without this the
-    // returned lazy chain re-runs all `iters` joins on EVERY caller
-    // action, and the working blocks stay pinned for the session (the
-    // long-lived-session leak class: a hundred queries of leaked spines
-    // eventually evict each other into disk thrash).
+    val (ranks, working) = rankRounds(e, dict.select(col("nid")), n,
+      iters, damping, checkpointEvery)
+    // ONE eager checkpoint of the (node, rank)-sized result, mapped back
+    // to the CALLER's node ids, then every working block is freed
     val out = ranks.join(dict, ranks("id") === dict("nid"))
       .select(col("name").as("id"), col("rank"))
       .ckpt()
-    (Seq(eStr, dict, spine, noInRanks) ++ intermediates).foreach(
+    (Seq(eStr, dict) ++ working).foreach(
       org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint)
     out
   }
 
-  /** [[pageRank]] for integer-typed endpoint ids — identical rank
-    * arithmetic, no relabel. Round shape (r20, from the executed-plan
-    * audit in plans/r20/): a checkpoint scan carries NO recognizable
-    * partitioning under AQE (micro-checked: eager and lazy alike get an
-    * Exchange on a same-key join), so the per-round spine exchange
-    * cannot be elided — AQE's ReusedExchange collapses the identical
-    * per-round spine exchanges to one write re-read per round, which is
-    * the best this structure admits. What each round pays beyond that
-    * read: one node-sized ranks exchange, one hash join (SHUFFLE_HASH —
-    * no edge-sized sorts), and the partial-aggregated contribution
-    * groupBy on dst. In-neighborless nodes are re-attached by a UNION
-    * with a once-computed constant frame, not a per-round join — see
-    * `noInRanks`. */
+  /** [[pageRank]] for integer-typed endpoint ids — the caller's ids are
+    * the spine keys, no relabel. */
   private def pageRankLong(edges: DataFrame, srcCol: String, dstCol: String,
                            iters: Int, damping: Double,
                            checkpointEvery: Int): DataFrame = {
@@ -191,8 +134,8 @@ object Graph {
     // the whole edge list through a separate repartition(src) when
     // building the spine (plan diff in plans/r20/). REPARTITION_BY_NUM
     // so AQE cannot coalesce the width. NOTE the layout does NOT
-    // survive the checkpoint (see the round-shape doc below) — this is
-    // purely a setup-job saving.
+    // survive the checkpoint (see [[rankRounds]]) — this is purely a
+    // setup-job saving.
     val parts = math.max(1,
       edges.sparkSession.sessionState.conf.numShufflePartitions)
     val e = edges.select(col(srcCol).cast("long").as("src"),
@@ -205,20 +148,55 @@ object Graph {
       .distinct()
       .ckpt(false)
     val n = nodes.count() // materializes e + nodes; one driver scalar
-    // SHUFFLE_HASH: both sides are already hash(src, parts), SMJ would
-    // only add two sorts; the build side is the ≤nodes-sized outDeg
+    val (ranks, working) = rankRounds(e, nodes, n, iters, damping,
+      checkpointEvery)
+    // ONE eager checkpoint of the (node, rank)-sized result, then free
+    // every working block. Without it the returned lazy chain re-runs
+    // all `iters` joins on EVERY caller action, and the working blocks
+    // stay pinned for the session (the long-lived-session leak class: a
+    // hundred queries of leaked spines eventually evict each other into
+    // disk thrash).
+    val out = ranks.ckpt()
+    (Seq(e, nodes) ++ working).foreach(
+      org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint)
+    out
+  }
+
+  /** The rank rounds of [[pageRank]] over a deduplicated long edge list
+    * `e` (src, dst), its node frame `nodes` (one column, `nid`) and
+    * node count `n`. Returns the LAZY (id, rank) frame and
+    * the working checkpoints the caller frees once it has materialized
+    * its output.
+    *
+    * Round shape (r20, from the executed-plan audit in plans/r20/): a
+    * checkpoint scan carries NO recognizable partitioning under AQE
+    * (eager and lazy alike get an Exchange on a same-key join), so the
+    * per-round spine exchange cannot be elided — AQE's ReusedExchange
+    * collapses the identical per-round spine exchanges to one write
+    * re-read per round, which is the best this structure admits. What
+    * each round pays beyond that read: one node-sized ranks exchange,
+    * one hash join (SHUFFLE_HASH — no edge-sized sorts), and the
+    * partial-aggregated contribution groupBy on dst. */
+  private def rankRounds(e: DataFrame, nodes: DataFrame, n: Long,
+                         iters: Int, damping: Double,
+                         checkpointEvery: Int): (DataFrame, Seq[DataFrame]) = {
+    // SHUFFLE_HASH: the build side is the ≤nodes-sized outDeg; SMJ would
+    // only add two sorts
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+    // (src, dst, deg) long-keyed spine — reused by every round's join
     val spine = e.join(outDeg.hint("SHUFFLE_HASH"), "src")
       .ckpt(false) // materialized inside the output job's first round
-    // Nodes with NO in-edges take zero contribution in EVERY round, so
-    // their rank is the constant (1−d)/N after any round — computed
-    // ONCE here (node-sized anti join) and unioned into each round's
-    // result instead of the per-round nodes ⋈ contribs left join that
-    // re-scanned and re-shuffled the node frame every round (guide
-    // §2.4; the r20 in-loop plan dump shows the join and its exchanges
-    // gone — plans/r20/q84_pagerank_round_{before,after}.txt). The
-    // double is unchanged: the old path computed (1−d)/N + d·0.0 and
-    // x + d·0.0 ≡ x for x > 0.
+    // Nodes with NO in-edges take zero contribution in EVERY round (every
+    // spine src has rank > 0 and deg ≥ 1, so every node with an in-edge
+    // appears in every round's contribution aggregate), so their rank is
+    // the constant (1−d)/N after any round — computed ONCE here
+    // (node-sized anti join) and unioned into each round's result instead
+    // of the per-round nodes ⋈ contribs left join that re-scanned and
+    // re-shuffled the node frame every round (guide §2.4; the r20 in-loop
+    // plan dump shows the join and its exchanges gone —
+    // plans/r20/q84_pagerank_round_{before,after}.txt). The double is
+    // unchanged: the old path computed (1−d)/N + d·0.0 and x + d·0.0 ≡ x
+    // for x > 0.
     val noInRanks = nodes
       .join(e.select(col("dst").as("nid")).distinct(), Seq("nid"), "left_anti")
       .select(col("nid").as("id"), lit((1.0 - damping) / n).as("rank"))
@@ -226,7 +204,13 @@ object Graph {
     var ranks = nodes.select(col("nid").as("id"), lit(1.0 / n).as("rank"))
     val intermediates = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (round <- 0 until iters) {
-      // SHUFFLE_HASH on the node-sized ranks side — see pageRankLong
+      // SHUFFLE_HASH on the node-sized ranks side: SMJ would SORT the
+      // edge-sized spine every round after its exchange; the hash join
+      // streams the spine unsorted and builds per-partition tables
+      // bounded by nodes/parts rows of 16 bytes — spillable,
+      // partition-count-scaled (guide §3.1). Same-JVM interleaved A/B,
+      // 5 rounds each: leftjoin 3.19 s / union 2.79 / union+SHJ 2.00
+      // (OPTIMIZATION_r20.md §1; plans under plans/r20/).
       ranks = spine
         .join(ranks.select(col("id").as("src"), col("rank"))
           .hint("SHUFFLE_HASH"), "src")
@@ -236,21 +220,14 @@ object Graph {
           (lit((1.0 - damping) / n) +
             lit(damping) * col("cin")).as("rank"))
         .unionByName(noInRanks)
+      // periodic eager checkpoint: deep iteration counts keep lineage
+      // and planning time bounded; shallow runs stay one lazy chain
+      // into the caller's output checkpoint
       if ((round + 1) % checkpointEvery == 0 && round + 1 < iters) {
         ranks = ranks.ckpt()
         intermediates += ranks
       }
     }
-    val out = ranks.ckpt()
-    // plan-audit instrumentation (dev-only, env-gated): the round-loop
-    // plan is internal — the checkpoint above ran ranks' own
-    // queryExecution, so its executedPlan is the AQE-FINAL loop plan
-    if (sys.env.contains("GRAFT_PR_EXPLAIN")) {
-      println("===== pageRankLong executed round-loop plan =====")
-      println(ranks.queryExecution.executedPlan.toString)
-    }
-    (Seq(e, nodes, spine, noInRanks) ++ intermediates).foreach(
-      org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint)
-    out
+    (ranks, Seq(spine, noInRanks) ++ intermediates)
   }
 }

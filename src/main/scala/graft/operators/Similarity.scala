@@ -263,15 +263,15 @@ object Similarity {
     // dims) computes the identical reduced-L2 argmin with identical
     // arithmetic (ascending double fold, d = −2s + |c|² with |c|²
     // precomputed from the same float-widened doubles) and the identical
-    // tie-break: seedCentroids returns cids ASCENDING by construction,
-    // so PqCodes' smaller-INDEX tie equals least's smaller-CID tie. The
-    // index maps back to the cid through a k-element literal lookup.
+    // tie-break: the centroids are sorted by cid here (seedCentroids
+    // orders by the caller's id column, which for string ids is not
+    // numeric order), so PqCodes' smaller-INDEX tie equals least's
+    // smaller-CID tie for any input. The index maps back to the cid
+    // through a k-element literal lookup.
+    val sorted = cents.sortBy(_._1)
     val books: Array[Array[Array[Double]]] =
-      Array(cents.map(_._2.map(_.toDouble)))
-    val cids: Array[Long] = cents.map(_._1)
-    require(cids.length <= 1 ||
-      cids.sliding(2).forall(p => p(0) < p(1)),
-      "stepFrom: centroid ids must be ascending (index-tie == cid-tie)")
+      Array(sorted.map(_._2.map(_.toDouble)))
+    val cids: Array[Long] = sorted.map(_._1)
     val t = element_at(
       org.apache.spark.sql.GraftColumnShim.pqCodesColumn(vec, books), 1)
     val best = element_at(typedLit(cids), (t + 1).cast("int"))

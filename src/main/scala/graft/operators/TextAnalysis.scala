@@ -74,7 +74,7 @@ object TextAnalysis {
   // deliberately the replace-and-measure form, NOT regexp_count: for
   // single-CHARACTER classes the count form walks one regex match per
   // character and measured ~9% slower than one replace pass
-  // (BenchExprAB alpha_ratio, OPTIMIZATION_r19.md)
+  // (same-JVM interleaved A/B, OPTIMIZATION_r19.md §8)
   def alphaRatio(c: Column): Column =
     length(regexp_replace(c, "[^a-zA-Z]", "")).cast("double") /
       greatest(length(c), lit(1)).cast("double")

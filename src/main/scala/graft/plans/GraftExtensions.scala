@@ -2,14 +2,15 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{CodePointsExpr, DotProductExpr, UnicodeNormalize, Utf32Decode, Utf32Encode}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.GraftFunctions
 
 /** Session extensions: registers the native graft expressions at session
   * build time, so a cluster deployment enables them with
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions` (no driver
   * code required). Per-session registration for notebooks/tests lives in
-  * [[graft.functions.GraftFunctions.register]].
+  * [[graft.functions.GraftFunctions.register]]; both read the one
+  * [[graft.functions.GraftFunctions.table]].
   *
   * Deliberately NO custom optimizer rules or planner strategies: the
   * reference has no optimizer to mirror (SURVEY.md §4 — closures are
@@ -22,33 +23,10 @@ import graft.functions.{CodePointsExpr, DotProductExpr, UnicodeNormalize, Utf32D
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "4.0.0", "", "scala_udf")
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    java.text.Normalizer.Form.values().foreach { form =>
-      val name = s"graft_${form.name().toLowerCase}"
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.table.foreach { case (name, usage, build) =>
       e.injectFunction((FunctionIdentifier(name),
-        info(name, s"string -> ${form.name()}-normalized string"),
-        (exprs: Seq[Expression]) => UnicodeNormalize(exprs.head, form)))
+        new ExpressionInfo("graft", null, name, usage, "", "", "", "", "4.0.0", "", "scala_udf"),
+        build))
     }
-    e.injectFunction((FunctionIdentifier("graft_code_points"),
-      info("graft_code_points", "string -> array<int> of Unicode code points"),
-      (exprs: Seq[Expression]) => CodePointsExpr(exprs.head)))
-    e.injectFunction((FunctionIdentifier("graft_dot"),
-      info("graft_dot", "array<double> x array<double> -> dot product"),
-      (exprs: Seq[Expression]) => DotProductExpr(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_utf32le_encode"),
-      info("graft_utf32le_encode", "string -> UTF-32LE bytes"),
-      (exprs: Seq[Expression]) => Utf32Encode(exprs.head, bigEndian = false)))
-    e.injectFunction((FunctionIdentifier("graft_utf32be_encode"),
-      info("graft_utf32be_encode", "string -> UTF-32BE bytes"),
-      (exprs: Seq[Expression]) => Utf32Encode(exprs.head, bigEndian = true)))
-    e.injectFunction((FunctionIdentifier("graft_utf32le_decode"),
-      info("graft_utf32le_decode", "UTF-32LE bytes -> string (U+FFFD policy)"),
-      (exprs: Seq[Expression]) => Utf32Decode(exprs.head, bigEndian = false)))
-    e.injectFunction((FunctionIdentifier("graft_utf32be_decode"),
-      info("graft_utf32be_decode", "UTF-32BE bytes -> string (U+FFFD policy)"),
-      (exprs: Seq[Expression]) => Utf32Decode(exprs.head, bigEndian = true)))
-  }
 }

@@ -335,27 +335,7 @@ class IndexOpsSpec extends AnyFunSuite {
     assert(agot == Seq(1, 3, 2, 4, 0))
   }
 
-  test("rankByGroupedMinor == packed-key rank; renumberByDenseKey is a projection") {
-    // variable group sizes (1..13), NON-contiguous minors (gaps, not
-    // starting at 1), sparse group keys — the PK/FK detail shape that
-    // defeats any analytic shortcut
-    val rows = (0 until 500).flatMap { g =>
-      val gk = g * 3 + 7 // sparse group key
-      (0 until (g % 13) + 1).map(l => (gk.toLong, (l * 2 + g % 3).toLong))
-    }
-    val df = rows.toDF("g", "m").repartition(11)
-    val got = IndexOps.rankByGroupedMinor(df, col("g"), col("m"))
-      .orderBy(col("idx")).collect().map(r => (r.getAs[Long]("g"), r.getAs[Long]("m")))
-    val expected = rows.sortBy(identity).toArray
-    assert(got.toSeq == expected.toSeq)
-    // and idx is contiguous 0..n-1 with ord == idx
-    val ranked = IndexOps.rankByGroupedMinor(df, col("g"), col("m")).collect()
-    assert(ranked.map(_.getAs[Long]("idx")).sorted.toSeq == rows.indices.map(_.toLong))
-    assert(ranked.forall(r => r.getAs[Long]("ord") == r.getAs[Long]("idx")))
-    // no RDD hop anywhere
-    val plan = IndexOps.rankByGroupedMinor(df, col("g"), col("m"))
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("ExistingRDD"))
+  test("renumberByDenseKey is a projection: no exchange, idx is the key") {
     // dense-key shortcut: ord/idx are the key itself, no exchange at all
     val dense = (0 until 100).map(i => (i.toLong, s"v$i")).toDF("k", "v")
     val dr = IndexOps.renumberByDenseKey(dense, col("k"))

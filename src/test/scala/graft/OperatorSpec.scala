@@ -1066,6 +1066,26 @@ class OperatorSpec extends AnyFunSuite {
     assert(out((1L, 0)) == ((2L, 10.5)) && out((1L, 1)) == ((2L, 10.5)))
   }
 
+  test("kmeans with string ids: lexicographic seeds, tie goes to the smaller cid") {
+    import graft.operators.Similarity
+    // seeds are the first 2 ids in STRING order: "10" (10,10) then
+    // "9" (0,0) — descending as numbers. (5,5) is exactly equidistant
+    // from both (reduced L2 0 vs −200+200) and must take cid 9.
+    val df = Seq(
+      ("10", Array(10f, 10f)), ("9", Array(0f, 0f)),
+      ("95", Array(1f, 0f)), ("96", Array(0f, 1f)), ("97", Array(9f, 10f)),
+      ("98", Array(10f, 9f)), ("99", Array(5f, 5f))).toDF("vec_id", "embedding")
+    def byCell(out: org.apache.spark.sql.DataFrame) = out.collect()
+      .map(r => (r.getLong(0), r.getInt(1)) -> (r.getLong(2), r.getDouble(3))).toMap
+    val step = byCell(Similarity.kmeansStep(df, "vec_id", "embedding", 2))
+    assert(step.keySet.map(_._1) == Set(9L, 10L))
+    assert(step((9L, 0)) == ((4L, 1.5)) && step((9L, 1)) == ((4L, 1.5)))
+    assert(step((10L, 0))._1 == 3L && math.abs(step((10L, 0))._2 - 29.0 / 3) < 1e-12)
+    // the Lloyd loop reaches that fixpoint in one more round
+    val iter = byCell(Similarity.kmeansIterate(df, "vec_id", "embedding", 2))
+    assert(iter == step)
+  }
+
   test("grouped running total: per-group cumsum matches the naive window, string lead") {
     import graft.operators.Windows
     import org.apache.spark.sql.expressions.{Window => W}

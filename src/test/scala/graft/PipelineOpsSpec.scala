@@ -109,9 +109,61 @@ class PipelineOpsSpec extends AnyFunSuite {
     r.foreach(x => assert(math.abs(x.getDouble(1) - 1.0 / 3) < 1e-12))
   }
 
+  test("pageRank string ids: ranks match the long path; one output block; job count") {
+    // 30 nodes on two out-edges each, plus 3 sources nobody links to
+    val pairs = (0 until 30).flatMap(i => Seq((i, (i * 7 + 3) % 30),
+      (i, (i * 11 + 5) % 30))) ++ Seq((30, 0), (31, 1), (32, 2))
+    val longRanks = Graph.pageRank(pairs.map { case (a, b) => (a.toLong, b.toLong) }
+        .toDF("src", "dst"), iters = 5, checkpointEvery = 2).collect()
+      .map(r => r.getLong(0).toString -> r.getDouble(1)).toMap
+    val strEdges = pairs.map { case (a, b) => (a.toString, b.toString) }
+      .toDF("src", "dst")
+    def pinnedIds: Set[Int] =
+      spark.sparkContext.getPersistentRDDs.keysIterator.toSet
+    val sc = spark.sparkContext
+    org.apache.spark.sql.GraftTestShim.drainListeners(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val before = pinnedIds
+    sc.addSparkListener(listener)
+    var out = try Graph.pageRank(strEdges, iters = 5, checkpointEvery = 2)
+    finally {
+      org.apache.spark.sql.GraftTestShim.drainListeners(sc)
+      sc.removeSparkListener(listener)
+    }
+    // relabel, periodic round checkpoints and the output checkpoint,
+    // AQE stage jobs included: 32 on this graph
+    assert(jobs.get <= 32, s"pageRank ran ${jobs.get} jobs")
+    val strRanks = out.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(strRanks.keySet == longRanks.keySet)
+    strRanks.foreach { case (k, v) => assert(math.abs(v - longRanks(k)) < 1e-12, k) }
+    // while the result is held: exactly ONE new pinned RDD, the output
+    // checkpoint — dict, spine, no-in-edge frame and round checkpoints
+    // are freed
+    val deadline = System.nanoTime + 120L * 1000 * 1000 * 1000
+    var extra = (pinnedIds -- before).toSeq.sorted
+    while (extra.size > 1 && System.nanoTime < deadline) {
+      System.gc(); Thread.sleep(500)
+      extra = (pinnedIds -- before).toSeq.sorted
+    }
+    assert(extra.size == 1, s"blocks pinned after the call: ${extra.mkString(",")}")
+    // drop the result: the output checkpoint itself must be reapable
+    out = null
+    var remaining = (pinnedIds -- before).toSeq
+    while (remaining.nonEmpty && System.nanoTime < deadline) {
+      System.gc(); Thread.sleep(500)
+      remaining = (pinnedIds -- before).toSeq
+    }
+    assert(remaining.isEmpty, "output checkpoint still pinned after the result was dropped")
+  }
+
   // long-id twins: the integral-id fast path (no relabel, id returned as
-  // LONG — the documented id-type contract) reimplements the iteration,
-  // so it needs the same behavioral pins as the string path (r19 ADVICE)
+  // LONG — the documented id-type contract) has its own set-up, so it
+  // needs the same behavioral pins as the string path (r19 ADVICE)
   test("pageRank long ids: uniform two-node, star closed form, dangling leak, iters=0") {
     val e2 = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
     val r2 = Graph.pageRank(e2, iters = 5).collect()

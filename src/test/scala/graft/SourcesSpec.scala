@@ -60,6 +60,9 @@ class SourcesSpec extends AnyFunSuite {
 
   test("GraftExtensions injects native functions at session build") {
     val base = spark // force TestSpark init first
+    // the one table GraftFunctions.register reads
+    val names = graft.functions.GraftFunctions.table.map(_._1)
+    assert(names.contains("graft_barrier") && names.contains("graft_hex_votes16"))
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
@@ -69,11 +72,15 @@ class SourcesSpec extends AnyFunSuite {
       val s2 = SparkSession.builder()
         .withExtensions(new graft.plans.GraftExtensions())
         .getOrCreate()
+      val missing = names.filterNot(n => s2.catalog.functionExists(n))
+      assert(missing.isEmpty, s"not injected by GraftExtensions: $missing")
       val r = s2.sql("SELECT graft_code_points('hi') AS c, " +
-        "graft_utf32be_decode(graft_utf32be_encode('héllo')) AS s")
+        "graft_utf32be_decode(graft_utf32be_encode('héllo')) AS s, " +
+        "graft_barrier(7) AS b, graft_hex_votes16('f000000000000000') AS v")
         .collect()(0)
       assert(r.getSeq[Int](0) == Seq(104, 105))
       assert(r.getString(1) == "héllo")
+      assert(r.getInt(2) == 7 && r.getInt(3) == 1)
     } finally {
       SparkSession.setDefaultSession(base)
       SparkSession.setActiveSession(base)

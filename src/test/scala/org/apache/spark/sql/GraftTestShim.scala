@@ -14,7 +14,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   *   - [[setCheckpointDir]] sets or CLEARS the context checkpoint dir
   *     (the public `SparkContext.setCheckpointDir` cannot clear it), so
   *     a spec can exercise the reliable-checkpoint mode and restore the
-  *     shared session for the suites that follow. */
+  *     shared session for the suites that follow.
+  *   - [[drainListeners]] blocks until every posted scheduler event has
+  *     reached the listeners, so a spec can count a call's jobs. */
 object GraftTestShim {
 
   /** Simulate executor loss for a localCheckpoint()ed Dataset: drop its
@@ -35,4 +37,8 @@ object GraftTestShim {
       case Some(d) => sc.setCheckpointDir(d)
       case None => sc.checkpointDir = None
     }
+
+  /** Wait until the listener bus has delivered every posted event. */
+  def drainListeners(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }
