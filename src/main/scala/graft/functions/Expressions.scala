@@ -339,6 +339,93 @@ object ExprHelpers {
     new GenericArrayData(cur)
   }
 
+  private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+  private val hexDigits = "0123456789abcdef".getBytes("US-ASCII")
+
+  /** MinHash signature of one text, in one pass and with no per-shingle
+    * String, hex string or row ([[graft.operators.Dedup.minhashSignature]]).
+    * Tokens are the maximal runs of bytes outside the six ASCII
+    * whitespace bytes — [[graft.operators.Dedup.shingleArray]]'s
+    * tokenization; those bytes never occur inside a multi-byte UTF-8
+    * sequence, so U+00A0 and U+3000 are token characters. Every window of
+    * `w` tokens is joined with one space, and family 4j+q is the minimum,
+    * compared unsigned, of big-endian word q of md5("j#" + shingle).
+    * Returns the `k` minima as 8-char lowercase hex (whose string order is
+    * the unsigned order), or null when the text is null or has fewer than
+    * `w` tokens. Bytes are hashed as stored: on malformed UTF-8 this
+    * differs from a String-decoding tokenizer, which would hash U+FFFD. */
+  def minhashSignature(text: UTF8String, w: Int, k: Int): GenericArrayData = {
+    if (text == null) return null
+    val bytes = text.getBytes
+    val len = bytes.length
+    def isWs(b: Byte): Boolean =
+      b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == 0x0B || b == '\f'
+    var starts = new Array[Int](32)
+    var ends = new Array[Int](32)
+    var n = 0
+    var i = 0
+    while (i < len) {
+      while (i < len && isWs(bytes(i))) i += 1
+      if (i < len) {
+        if (n == starts.length) {
+          starts = java.util.Arrays.copyOf(starts, 2 * n)
+          ends = java.util.Arrays.copyOf(ends, 2 * n)
+        }
+        starts(n) = i
+        while (i < len && !isWs(bytes(i))) i += 1
+        ends(n) = i
+        n += 1
+      }
+    }
+    if (n < w) return null
+    val numDigests = (k + 3) / 4
+    val prefixes = Array.tabulate(numDigests)(j => s"$j#".getBytes("US-ASCII"))
+    val mins = Array.fill(k)(-1) // 0xffffffff: the unsigned maximum
+    val md = md5.get()
+    val dig = new Array[Byte](16)
+    val shingle = new Array[Byte](len) // a joined window is never longer than the text
+    var t = 0
+    while (t + w <= n) {
+      var m = 0
+      var u = t
+      while (u < t + w) {
+        if (u > t) { shingle(m) = ' '; m += 1 }
+        val l = ends(u) - starts(u)
+        System.arraycopy(bytes, starts(u), shingle, m, l)
+        m += l
+        u += 1
+      }
+      var j = 0
+      while (j < numDigests) {
+        md.update(prefixes(j))
+        md.update(shingle, 0, m)
+        md.digest(dig, 0, 16)
+        var q = 0
+        while (q < 4 && 4 * j + q < k) {
+          val o = 4 * q
+          val v = ((dig(o) & 0xff) << 24) | ((dig(o + 1) & 0xff) << 16) |
+            ((dig(o + 2) & 0xff) << 8) | (dig(o + 3) & 0xff)
+          if (Integer.compareUnsigned(v, mins(4 * j + q)) < 0) mins(4 * j + q) = v
+          q += 1
+        }
+        j += 1
+      }
+      t += 1
+    }
+    val out = new Array[AnyRef](k)
+    var f = 0
+    while (f < k) {
+      val hex = new Array[Byte](8)
+      var v = mins(f)
+      var p = 7
+      while (p >= 0) { hex(p) = hexDigits(v & 0xf); v >>>= 4; p -= 1 }
+      out(f) = UTF8String.fromBytes(hex)
+      f += 1
+    }
+    new GenericArrayData(out)
+  }
+
   def utf32Encode(input: UTF8String, bigEndian: Boolean): Array[Byte] = {
     val cps = input.toString.codePoints().toArray
     val out = new Array[Byte](cps.length * 4)
@@ -463,6 +550,41 @@ case class BpeMergesExpr(child: Expression, merges: Array[(String, String)])
   }
 
   override protected def withNewChildInternal(newChild: Expression): BpeMergesExpr =
+    copy(child = newChild)
+}
+
+/** The MinHash signature of a text column as ONE native expression:
+  * `numHashes` 8-hex minima over the `shingleWidth`-token shingles (see
+  * [[ExprHelpers.minhashSignature]]), null when the text is null or too
+  * short for one shingle. One row per document instead of one per
+  * shingle, and no md5 hex string or substring per shingle: ExpressionSpec
+  * pins the values against that explode/md5/substring/min form. */
+case class MinHashSigExpr(child: Expression, shingleWidth: Int, numHashes: Int)
+  extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_minhash_signature"
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (child.dataType != StringType)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
+    else if (shingleWidth < 1 || numHashes < 1)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires shingleWidth >= 1 and numHashes >= 1, " +
+          s"got $shingleWidth and $numHashes")
+    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+
+  override def nullSafeEval(input: Any): Any =
+    ExprHelpers.minhashSignature(input.asInstanceOf[UTF8String], shingleWidth, numHashes)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.ExprHelpers.minhashSignature($c, $shingleWidth, $numHashes);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
     copy(child = newChild)
 }
 
@@ -604,10 +726,15 @@ object GraftFunctions {
       (exprs => UnicodeNormalize(exprs.head, form)): FunctionBuilder)
   }
 
+  /** Register the names this session does not already resolve. Idempotent:
+    * operators and query builders call it per invocation, and a repeat
+    * call (or a session built with [[graft.plans.GraftExtensions]])
+    * replaces nothing. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     table.foreach { case (name, _, build) =>
-      reg.createOrReplaceTempFunction(name, build, "built-in")
+      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
+      if (!reg.functionExists(id)) reg.createOrReplaceTempFunction(name, build, "built-in")
     }
   }
 }

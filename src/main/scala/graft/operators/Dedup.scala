@@ -204,28 +204,29 @@ object Dedup {
     * hashes than numHashes, degrading LSH recall, and the downstream
     * exact-Jaccard verify can only kill false positives, never recover
     * misses.) Needs no RNG and is identical in any engine with md5.
+    * Shingles are [[shingleArray]]'s w-token windows; documents with
+    * fewer than w tokens have no signature and are dropped.
     *
-    * Shape: one narrow explode of the in-row shingle array (no window, no
-    * pre-shuffle) feeding a hash aggregate with k `min` columns over
-    * ⌈k/4⌉ md5 per shingle occurrence (3 for the default k=12 — still 4×
-    * fewer digest blocks than one-salt-per-family). The md5 runs inside
-    * whole-stage codegen (an `array_min(transform())` formulation is 10×
-    * slower — higher-order-function lambdas are interpreted), and
-    * map-side partial aggregation shrinks the shuffle to k 8-char keys
-    * per doc per partition. */
+    * Shape: one native per-row expression,
+    * [[graft.functions.MinHashSigExpr]], computes a document's k minima
+    * in one pass over its bytes (⌈k/4⌉ md5 per shingle occurrence, no
+    * per-shingle String, hex string or row), and an aggregate takes
+    * the min of each h_i per id over one row per document, so rows
+    * that share an id merge; its exchange carries k 8-char keys per id
+    * per partition. Short documents are filtered AFTER the aggregate
+    * (all their h_i are null): a filter on the signature column below
+    * it could be pushed through the projection and run the expression
+    * twice. */
   def minhashSignature(df: DataFrame, idCol: String, textCol: String,
                        shingleWidth: Int, numHashes: Int): DataFrame = {
-    val numDigests = (numHashes + 3) / 4
-    // min over the shingle SET == min over the occurrence multiset, and
-    // the md5s are the dominant cost — dedup in-row before exploding so
-    // repeated shingles (natural text repeats plenty) hash once
-    val sh = df.select(col(idCol).as("id"),
-      explode(array_distinct(shingleArray(col(textCol), shingleWidth))).as("shingle"))
-    val withDigests = sh.select(col("id") +: (0 until numDigests).map(j =>
-      md5(concat(lit(s"$j#"), col("shingle"))).as(s"d$j")): _*)
-    val aggs = (0 until numHashes).map(i =>
-      min(substring(col(s"d${i / 4}"), (i % 4) * 8 + 1, 8)).as(s"h$i"))
-    withDigests.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
+    require(shingleWidth >= 1 && numHashes >= 1,
+      s"shingleWidth and numHashes must be >= 1, got $shingleWidth and $numHashes")
+    val sig = df.select(col(idCol).as("id"),
+      org.apache.spark.sql.GraftColumnShim
+        .minhashSignatureColumn(col(textCol), shingleWidth, numHashes).as("sig"))
+    val aggs = (0 until numHashes).map(i => min(col("sig").getItem(i)).as(s"h$i"))
+    sig.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
+      .filter(col("h0").isNotNull)
   }
 
   /** LSH banding: split the signature into `bands` bands of `rowsPerBand`
@@ -430,11 +431,14 @@ object Dedup {
     // rounds into fixed-width task storms (q65 0.37 → 0.55 s, q99
     // +9%) — the per-round exchanges stay ENSURE_REQUIREMENTS so AQE
     // sizes them to the real propagated volumes at every scale.
-    // LAZY (r19): materialized inside round 1's convergence-count job
-    // together with the initial labels — the eager form paid two extra
-    // driver jobs per call before any round ran. The blocks bound
-    // lineage exactly as before once materialized, and every unpersist
-    // below runs strictly after the materializing count.
+    // LAZY (r19): the result stage runs inside round 1's
+    // convergence-count job together with the initial labels — the
+    // eager form paid two extra driver jobs per call before any round
+    // ran. Under AQE a lazy checkpoint still runs its shuffle map stages
+    // (labelsCkpt's groupBy exchange) at call time: only the result
+    // stage is deferred. The blocks bound lineage exactly as before
+    // once materialized, and every unpersist below runs strictly after
+    // the materializing count.
     val sym = edges.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .union(edges.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
       .ckpt(false)

@@ -121,12 +121,14 @@ object Graph {
   private def pageRankLong(edges: DataFrame, srcCol: String, dstCol: String,
                            iters: Int, damping: Double,
                            checkpointEvery: Int): DataFrame = {
-    // LAZY checkpoints, materialized by the two actions that already
-    // exist (nodes.count here, the output checkpoint below): the eager
-    // form ran one driver job per checkpoint — three extra job
-    // round-trips whose scheduling cost rivals the rank rounds at
-    // bench scale. Blocks still bound lineage exactly as before; the
-    // unpersists at the end run strictly after materialization.
+    // LAZY checkpoints: the eager form ran one more driver job per
+    // checkpoint. Lazy defers only the RESULT stage to the two actions
+    // that already exist (nodes.count here, the output checkpoint
+    // below): under AQE, `localCheckpoint(eager = false)` still runs
+    // every shuffle map stage of its plan at call time (it builds the
+    // final plan to get the RDD), so the shuffles below are paid here.
+    // Blocks still bound lineage exactly as before; the unpersists at
+    // the end run strictly after materialization.
     // Repartition on src FIRST: hash(src) satisfies the distinct's
     // (src, dst) clustering (same src ⇒ same partition), so the edge
     // list is shuffled ONCE in the materialization job — the r19 shape
@@ -185,7 +187,8 @@ object Graph {
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // (src, dst, deg) long-keyed spine — reused by every round's join
     val spine = e.join(outDeg.hint("SHUFFLE_HASH"), "src")
-      .ckpt(false) // materialized inside the output job's first round
+      .ckpt(false) // result stage runs in the output job's first round;
+                   // its shuffle map stages run here (AQE, see pageRankLong)
     // Nodes with NO in-edges take zero contribution in EVERY round (every
     // spine src has rank > 0 and deg ≥ 1, so every node with an in-edge
     // appears in every round's contribution aggregate), so their rank is
@@ -200,7 +203,7 @@ object Graph {
     val noInRanks = nodes
       .join(e.select(col("dst").as("nid")).distinct(), Seq("nid"), "left_anti")
       .select(col("nid").as("id"), lit((1.0 - damping) / n).as("rank"))
-      .ckpt(false) // node-sized; materializes inside the output job
+      .ckpt(false) // node-sized; shuffle stages run here, the rest in the output job
     var ranks = nodes.select(col("nid").as("id"), lit(1.0 / n).as("rank"))
     val intermediates = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (round <- 0 until iters) {

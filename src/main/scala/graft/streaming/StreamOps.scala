@@ -103,6 +103,15 @@ object StreamOps {
     events.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(keyCols)
 
+  /** One text's MinHash signature through the helper the batch
+    * [[graft.functions.MinHashSigExpr]] calls, so the streaming twins
+    * band exactly the batch values; None when the text is null or has
+    * fewer than `w` tokens (the batch signature drops those docs). */
+  private def minhashSig(text: String, w: Int, k: Int): Option[IndexedSeq[String]] =
+    Option(graft.functions.ExprHelpers.minhashSignature(
+        org.apache.spark.unsafe.types.UTF8String.fromString(text), w, k))
+      .map(a => (0 until k).map(i => a.getUTF8String(i).toString))
+
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -142,23 +151,10 @@ object StreamOps {
       FreeRunGuard.arm(docs.sparkSession, "streamingNearDupCandidates(ttl)")
     val rows = numHashes / bands
     val banded: Dataset[(String, Long)] = docs.flatMap { case (id, text) =>
-      // explicit ASCII whitespace class — lockstep with the batch
-      // tokenizer (TextAnalysis.tokens / Dedup.shingleArray): Java \s
-      // and RE2 \s disagree on \x0B, so the set is spelled out
-      val toks = "[^ \t\n\u000B\f\r]+".r.findAllIn(text).toSeq
       // docs shorter than one full shingle produce NO band keys — the
-      // batch operator's shingleArray is empty for them, and mapping
-      // them to a sentinel would make every blank doc collide
-      if (toks.length < shingleWidth) Seq.empty[(String, Long)]
-      else {
-        // distinct for the same reason as the batch signature: the mins
-        // are set-functions and md5 is the dominant per-shingle cost
-        val shingles = toks.sliding(shingleWidth).map(_.mkString(" ")).toSeq.distinct
-        val numDigests = (numHashes + 3) / 4
-        val digests = shingles.map(s =>
-          (0 until numDigests).map(j => md5hex(s"$j#$s")))
-        val sig = (0 until numHashes).map(i =>
-          digests.map(_(i / 4).substring((i % 4) * 8, (i % 4) * 8 + 8)).min)
+      // batch signature drops them, and mapping them to a sentinel would
+      // make every blank doc collide
+      minhashSig(text, shingleWidth, numHashes).toSeq.flatMap { sig =>
         (0 until bands).map { b =>
           (b.toString + "|" + (0 until rows).map(r => sig(b * rows + r)).mkString("|"), id)
         }
@@ -365,17 +361,9 @@ object StreamOps {
       .select(col("band"), col("key"), col("id").as("corpus_id"))
       .localCheckpoint() // one batch computation, re-read per micro-batch
     val streamKeys = docs.flatMap { case (id, text) =>
-      // lockstep with the batch tokenizer/banding (see
-      // streamingNearDupCandidates for the whitespace-class note)
-      val toks = "[^ \t\n\u000B\f\r]+".r.findAllIn(text).toSeq
-      if (toks.length < shingleWidth) Seq.empty[(Int, String, Long)]
-      else {
-        val shingles = toks.sliding(shingleWidth).map(_.mkString(" ")).toSeq.distinct
-        val numDigests = (numHashes + 3) / 4
-        val digests = shingles.map(s =>
-          (0 until numDigests).map(j => md5hex(s"$j#$s")))
-        val sig = (0 until numHashes).map(i =>
-          digests.map(_(i / 4).substring((i % 4) * 8, (i % 4) * 8 + 8)).min)
+      // the batch signature and banding, row by row (see
+      // streamingNearDupCandidates for short docs)
+      minhashSig(text, shingleWidth, numHashes).toSeq.flatMap { sig =>
         (0 until bands).map { b =>
           (b, (0 until rows).map(r => sig(b * rows + r)).mkString("|"), id)
         }

@@ -42,6 +42,15 @@ object GraftColumnShim {
       graft.functions.HexVotes16Expr(
         org.apache.spark.sql.classic.ExpressionUtils.expression(hex)))
 
+  /** Column over the native [[graft.functions.MinHashSigExpr]] (same
+    * direct construction as [[hexVotes16Column]]). */
+  def minhashSignatureColumn(text: Column, shingleWidth: Int,
+                             numHashes: Int): Column =
+    org.apache.spark.sql.classic.ExpressionUtils.column(
+      graft.functions.MinHashSigExpr(
+        org.apache.spark.sql.classic.ExpressionUtils.expression(text),
+        shingleWidth, numHashes))
+
   /** Column over the native [[graft.functions.BpeMergesExpr]] — the
     * merge list is constructor data (same registry bypass as
     * [[pqCodesColumn]]). */

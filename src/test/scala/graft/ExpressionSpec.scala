@@ -339,6 +339,67 @@ class ExpressionSpec extends AnyFunSuite {
     assert(got("aaa") == List("aa", "a"))
   }
 
+  /** The signature as it was computed before [[graft.functions.MinHashSigExpr]]:
+    * explode the in-row shingle set, ⌈k/4⌉ md5 hex digests per shingle,
+    * and a `min` aggregate over k 8-char substrings. */
+  private def explodeSignature(df: org.apache.spark.sql.DataFrame,
+                               w: Int, k: Int): org.apache.spark.sql.DataFrame = {
+    val sh = df.select(col("id"),
+      explode(array_distinct(graft.operators.Dedup.shingleArray(col("text"), w))).as("shingle"))
+    val withDigests = sh.select(col("id") +: (0 until (k + 3) / 4).map(j =>
+      md5(concat(lit(s"$j#"), col("shingle"))).as(s"d$j")): _*)
+    val aggs = (0 until k).map(i =>
+      min(substring(col(s"d${i / 4}"), (i % 4) * 8 + 1, 8)).as(s"h$i"))
+    withDigests.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  test("MinHashSigExpr signature == the explode/md5/substring/min form, eval and codegen") {
+    val texts = Seq[String](
+      null, "", "   ", "one", "one two",
+      "the quick brown fox jumps over the lazy dog",
+      "  leading and trailing spaces  ",
+      "\ttab\tsep\u000Bvt\fff\r\ncrlf\nnl end\t",
+      "nbsp\u00A0joins one token here", "ideographic\u3000space is a token char",
+      "日本語 の テキスト です ね", "astral 🎉 𝔘𝔫𝔦 tokens 🎊 end",
+      "a b a b a b a b a b", "dup dup dup dup dup", "only  two")
+    val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) } ++
+      // two rows per id merge by min
+      Seq((100L, "alpha beta gamma delta"), (100L, "delta epsilon zeta eta theta"),
+        (101L, "x"), (101L, "lone row survives with its id"))
+    // an RDD source, not a local relation: the optimizer would fold the
+    // projection over local rows through `eval` in every mode
+    val df = spark.sparkContext.parallelize(rows, 2).toDF("id", "text")
+    def sigs(d: org.apache.spark.sql.DataFrame): Map[Long, Seq[String]] =
+      d.collect().map(r => r.getLong(0) -> (1 until r.length).map(r.getString)).toMap
+    val key = "spark.sql.codegen.factoryMode"
+    val prev = spark.conf.getOption(key)
+    try {
+      for (mode <- Seq("NO_CODEGEN", "CODEGEN_ONLY"); w <- Seq(1, 3); k <- Seq(1, 4, 10, 12)) {
+        spark.conf.set(key, mode)
+        val native = graft.operators.Dedup.minhashSignature(df, "id", "text", w, k)
+        val got = sigs(native)
+        val want = sigs(explodeSignature(df, w, k))
+        assert(got == want, s"$mode w=$w k=$k")
+        assert(got.values.forall(_.forall(_.matches("[0-9a-f]{8}"))))
+        // null, empty and too-short texts have no signature: dropped
+        assert(!got.contains(0L) && !got.contains(1L) && !got.contains(2L))
+        assert(got.contains(3L) == (w == 1) && got.contains(4L) == (w == 1))
+        assert(got.contains(100L) && got.contains(101L))
+        // the path under test: NO_CODEGEN runs `eval` (no whole-stage
+        // stage at all), CODEGEN_ONLY compiles `doGenCode` with no
+        // interpreted fallback
+        val plan = native.queryExecution.executedPlan.toString
+        // first match: AQE prints the final plan before the initial one
+        val sigLine = plan.split("\n").find(_.contains("graft_minhash_signature"))
+        assert(sigLine.isDefined, plan)
+        assert(sigLine.get.contains("*(") == (mode == "CODEGEN_ONLY"), s"$mode:\n$plan")
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("no declared ranker plan strands a Filter above a graft_barrier projection") {
     GraftFunctions.register(spark)
     // the EvalBarrier determinism flag blocks predicate pushdown through

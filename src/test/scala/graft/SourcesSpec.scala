@@ -87,6 +87,48 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  test("GraftFunctions.register is idempotent: a repeat call replaces nothing") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val s = spark
+    val reg = s.sessionState.functionRegistry
+    graft.functions.GraftFunctions.register(s)
+    val ids = graft.functions.GraftFunctions.table.map(t =>
+      org.apache.spark.sql.catalyst.FunctionIdentifier(t._1))
+    // count the registry's "replaced a previously registered function"
+    // warnings
+    val replaced = new java.util.concurrent.atomic.AtomicInteger()
+    val probe = new AbstractAppender("graft-register-probe", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("replaced a previously registered"))
+          replaced.incrementAndGet()
+    }
+    probe.start()
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getConfiguration.getRootLogger
+    root.addAppender(probe, Level.WARN, null)
+    try {
+      // the probe sees a real replacement...
+      val (name, _, build) = graft.functions.GraftFunctions.table.head
+      reg.createOrReplaceTempFunction(name, build, "built-in")
+      assert(replaced.get == 1, "probe did not see a forced replacement")
+      replaced.set(0)
+      val before = ids.map(reg.lookupFunction)
+      assert(before.forall(_.isDefined))
+      // ...and a second register call on the same session makes none
+      graft.functions.GraftFunctions.register(s)
+      graft.functions.GraftFunctions.register(s)
+      assert(replaced.get == 0, s"register replaced ${replaced.get} functions")
+      assert(ids.map(reg.lookupFunction).zip(before).forall { case (a, b) => a.get eq b.get })
+    } finally {
+      root.removeAppender(probe.getName)
+      probe.stop()
+    }
+  }
+
   test("ord probes push their range to the parquet scan (row-group pruning)") {
     import graft.core.{Elem, IndexState, SemanticStream}
     // ord-sorted parquet, range-partitioned so each file covers an ord

@@ -1221,6 +1221,29 @@ class StreamingParitySpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("plan invariance: q32/q96 digests equal under default conf and factoryMode=NO_CODEGEN") {
+    // the MinHash queries through both paths of every native expression
+    // they use: whole-stage `doGenCode` (default) and interpreted `eval`
+    def digest(name: String): String = {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val cols = df.columns.sorted.toSeq
+      val lines = df.select(cols.map(col): _*).collect().map(_.toString).sorted
+      assert(lines.nonEmpty, s"$name returned no rows")
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(lines.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+    }
+    val names = Seq("q32_minhash_pairs", "q96_cross_dedup")
+    val default = names.map(digest)
+    val key = "spark.sql.codegen.factoryMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "NO_CODEGEN")
+    val interpreted = try names.map(digest) finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    assert(interpreted == default)
+  }
+
   test("parity: streamingCrossDedupCandidates ≡ batch cross-side band keys, stateless") {
     implicit val sq = spark.sqlContext
     import graft.operators.Dedup
