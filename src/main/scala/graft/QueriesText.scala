@@ -358,9 +358,10 @@ object QueriesText {
       // merges-only trainer: the encode path re-segments through
       // bpeEncode anyway, so the trained vocab frame was never read —
       // bpeTrainMerges skips its materialization job and runs one job
-      // per merge round instead of two
+      // per merge round instead of two. The ≤ 6-row merge list is sorted
+      // on the driver: an orderBy on it plans a range exchange (3 jobs)
       val merges = TA.bpeTrainMerges(docs, "text", 6)
-        .orderBy(col("rank")).collect()
+        .collect().sortBy(_.getLong(0))
         .map(r => (r.getString(1), r.getString(2))).toSeq
       TA.bpeEncode(docs, "doc_id", "text", merges).orderBy(col("doc_id"))
     }),
@@ -429,9 +430,9 @@ object QueriesText {
     // #langs-row rollup
     "q92_tokenizer_fertility" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents")
-      // merges-only trainer (see q88): one job per merge round
+      // merges-only trainer, sorted on the driver (see q88)
       val merges = TA.bpeTrainMerges(docs, "text", 6)
-        .orderBy(col("rank")).collect()
+        .collect().sortBy(_.getLong(0))
         .map(r => (r.getString(1), r.getString(2))).toSeq
       TA.bpeEncode(docs, "doc_id", "text", merges)
         .join(docs.select(col("doc_id"), col("lang"), col("n_chars")), "doc_id")

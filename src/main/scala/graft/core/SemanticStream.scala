@@ -577,23 +577,33 @@ object SemanticStream {
 
   /** Uniform random doubles in [min,max) (useRandom, semantic.h:1873-1973).
     * The reference seeds from random_device; we take an explicit seed
-    * (documented divergence, for reproducibility). */
+    * (documented divergence, for reproducibility). Element i's value is
+    * a hash of (i, seed) — the same variate as `StreamOps.randomStream` —
+    * so it does not depend on the partition count (`rand(seed)` seeds
+    * each partition separately). */
   def randomDoubles(spark: SparkSession, min: Double, max: Double, n: Long, seed: Long): SemanticStream[Double] = {
     import spark.implicits._
     val df = spark.range(n).select(
       col("id").as("ord"), col("id").as("idx"),
-      (rand(seed) * (max - min) + min).as("value"))
+      (lit(min) + hashUniform(col("id"), seed) * (max - min)).as("value"))
     new SemanticStream(df.as[Elem[Double]], Contiguous, math.max(n, 0L))
   }
 
-  /** Uniform random longs in [min,max] (useRandom int overloads). */
+  /** Uniform random longs in [min,max] (useRandom int overloads); same
+    * partition-invariant variate as [[randomDoubles]]. */
   def randomLongs(spark: SparkSession, min: Long, max: Long, n: Long, seed: Long): SemanticStream[Long] = {
     import spark.implicits._
     val df = spark.range(n).select(
       col("id").as("ord"), col("id").as("idx"),
-      floor(rand(seed) * (max - min + 1) + min).cast("long").as("value"))
+      floor(hashUniform(col("id"), seed) * (max - min + 1) + min).cast("long").as("value"))
     new SemanticStream(df.as[Elem[Long]], Contiguous, math.max(n, 0L))
   }
+
+  /** A double in [0, 1) from the low 52 bits of xxhash64(idx, seed); also
+    * the variate of `StreamOps.randomStream`. */
+  private[graft] def hashUniform(idx: Column, seed: Long): Column =
+    pmod(xxhash64(idx, lit(seed)), lit(1L << 52)).cast("double") /
+      lit((1L << 52).toDouble)
 
   /** Bounded iterate: seed, f(seed), … n elements (useIterate,
     * semantic.h:1829-1871). Inherently sequential — generated on the

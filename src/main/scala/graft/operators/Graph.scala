@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Ckpt.CkptOps
 
@@ -20,16 +21,18 @@ object Graph {
     * list first (as the undirected-graph callers do) if every node must
     * keep out-degree ≥ 1. Deterministic: no RNG, fixed `iters`.
     *
-    * 100 TB shape: the edge list is deduplicated and joined with its
-    * out-degrees ONCE, then localCheckpoint-ed — it re-enters every
-    * round's join with bounded lineage and AQE re-plans each round on
-    * real propagated sizes (same discipline as
-    * [[Dedup.connectedComponentsWithStats]]). Each round is exactly one
-    * shuffle join (ranks meet edges on src) plus one partial-aggregated
-    * groupBy (contributions meet on dst) — never an all-pairs form, and
-    * per-round state is one (node, rank) row per node. The only driver
-    * scalar is N (node count — free, counted off the already-checkpointed
-    * node blocks). Hub nodes (a page every doc links to) produce a
+    * 100 TB shape: the edge list is shuffled ONCE by src, deduplicated
+    * and given its out-degrees inside that partitioning, and
+    * localCheckpoint-ed as the (src, dst, deg) spine — it re-enters
+    * every round's join with bounded lineage and AQE re-plans each round
+    * on real propagated sizes (same discipline as
+    * [[Dedup.connectedComponentsWithStats]]). Each round pays ONE
+    * exchange: the partial-aggregated contribution groupBy on dst. Its
+    * output is hash(id)-partitioned and is the next round's ranks side
+    * as is, so the round's join exchanges only the spine, whose write
+    * AQE shares across the rounds of one action (OPTIMIZATION_r20.md
+    * §1). Per-round state is one (node, rank) row per node, and the only
+    * driver scalar is N. Hub nodes (a page every doc links to) produce a
     * skewed dst groupBy — partial aggregation bounds it at one row per
     * (dst × task).
     *
@@ -40,7 +43,8 @@ object Graph {
     * execute as a single action with no per-round driver round-trips,
     * while deep runs keep lineage (and optimizer time) bounded.
     *
-    * Returns (id, rank) for every node appearing in any edge. ID TYPE
+    * Returns (id, rank) for every node appearing in any edge; an edge
+    * with a null endpoint is dropped and names no node. ID TYPE
     * CONTRACT: integer-typed endpoint columns take the relabel-free
     * fast path and return `id` as LONG (the caller's ids unchanged);
     * any other type is cast to string and `id` comes back as STRING. */
@@ -65,22 +69,34 @@ object Graph {
       }
       ok(srcCol) && ok(dstCol)
     }
-    if (integral) return pageRankLong(edges, srcCol, dstCol, iters,
-      damping, checkpointEvery)
-    // ONE eager materialization of the caller's upstream: dict and spine
-    // both read the deduplicated edge list, and without this checkpoint
-    // each build job recomputes the whole upstream subtree (for q84 that
-    // is an orders⋈lineitem join — measured 2-3 recomputes costing more
-    // than the 5 rank rounds themselves). ckptSpill = DISK_ONLY when
-    // local: a corpus-sized string block in the memory pool squeezed
-    // execution memory to zero at ×100 on the 8 GB rig
-    // (UNABLE_TO_ACQUIRE_MEMORY in the build aggregation) — on disk it
-    // is read twice and competes with nothing. Freed with the other
-    // working blocks below; the per-ROUND state stays on the compact
-    // dense-long spine regardless (SCALE.md §3.5).
+    if (integral) {
+      val (ranks, working) = rankRounds(edges.select(
+        col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")),
+        iters, damping, checkpointEvery)
+      // ONE eager checkpoint of the (node, rank)-sized result, then free
+      // every working block. Without it the returned lazy chain re-runs
+      // all `iters` joins on EVERY caller action, and the working blocks
+      // stay pinned for the session (the long-lived-session leak class:
+      // a hundred queries of leaked spines eventually evict each other
+      // into disk thrash).
+      val out = ranks.ckpt()
+      working.foreach(org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint)
+      return out
+    }
+    // ONE eager materialization of the caller's upstream: dict and the
+    // relabel both read the edge list, and without this checkpoint each
+    // build job recomputes the whole upstream subtree (measured 2-3
+    // recomputes costing more than the 5 rank rounds themselves). No
+    // distinct here: the spine set-up in [[rankRounds]] deduplicates
+    // inside its one src exchange. ckptSpill = DISK_ONLY when local: a
+    // corpus-sized string block in the memory pool squeezed execution
+    // memory to zero at ×100 on the 8 GB rig (UNABLE_TO_ACQUIRE_MEMORY
+    // in the build aggregation) — on disk it is read twice and competes
+    // with nothing. Freed with the other working blocks below; the
+    // per-ROUND state stays on the compact dense-long spine regardless
+    // (SCALE.md §3.5).
     val eStr = edges.select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"))
-      .distinct()
       .ckptSpill()
     // RELABEL to dense longs before iterating — the standard engine move
     // (GraphX, GraphFrames, every native graph engine run on integer
@@ -99,13 +115,12 @@ object Graph {
       .distinct()
       .select(col("name"), monotonically_increasing_id().as("nid"))
       .ckpt(false)
-    val n = dict.count() // materializes dict; one driver scalar, not data
+    dict.count() // materializes (freezes) dict before either join reads it
     val e = eStr
       .join(dict.select(col("name").as("src"), col("nid").as("srcId")), "src")
       .join(dict.select(col("name").as("dst"), col("nid").as("dstId")), "dst")
       .select(col("srcId").as("src"), col("dstId").as("dst"))
-    val (ranks, working) = rankRounds(e, dict.select(col("nid")), n,
-      iters, damping, checkpointEvery)
+    val (ranks, working) = rankRounds(e, iters, damping, checkpointEvery)
     // ONE eager checkpoint of the (node, rank)-sized result, mapped back
     // to the CALLER's node ids, then every working block is freed
     val out = ranks.join(dict, ranks("id") === dict("nid"))
@@ -116,113 +131,68 @@ object Graph {
     out
   }
 
-  /** [[pageRank]] for integer-typed endpoint ids — the caller's ids are
-    * the spine keys, no relabel. */
-  private def pageRankLong(edges: DataFrame, srcCol: String, dstCol: String,
-                           iters: Int, damping: Double,
-                           checkpointEvery: Int): DataFrame = {
-    // LAZY checkpoints: the eager form ran one more driver job per
-    // checkpoint. Lazy defers only the RESULT stage to the two actions
-    // that already exist (nodes.count here, the output checkpoint
-    // below): under AQE, `localCheckpoint(eager = false)` still runs
-    // every shuffle map stage of its plan at call time (it builds the
-    // final plan to get the RDD), so the shuffles below are paid here.
-    // Blocks still bound lineage exactly as before; the unpersists at
-    // the end run strictly after materialization.
-    // Repartition on src FIRST: hash(src) satisfies the distinct's
-    // (src, dst) clustering (same src ⇒ same partition), so the edge
-    // list is shuffled ONCE in the materialization job — the r19 shape
-    // paid the distinct's own (src, dst) exchange and then re-shuffled
-    // the whole edge list through a separate repartition(src) when
-    // building the spine (plan diff in plans/r20/). REPARTITION_BY_NUM
-    // so AQE cannot coalesce the width. NOTE the layout does NOT
-    // survive the checkpoint (see [[rankRounds]]) — this is purely a
-    // setup-job saving.
+  /** The set-up and rank rounds of [[pageRank]] over a long edge list
+    * `edges` (src, dst; duplicates allowed). Returns the LAZY (id, rank)
+    * frame and the working checkpoints the caller frees once it has
+    * materialized its output. */
+  private def rankRounds(edges: DataFrame, iters: Int, damping: Double,
+                         checkpointEvery: Int): (DataFrame, Seq[DataFrame]) = {
+    // SET-UP FROM ONE EXCHANGE. repartition(src) hash-partitions the
+    // edges; hash(src) satisfies both the distinct's (src, dst)
+    // clustering and the out-degree window's src clustering, so neither
+    // adds an Exchange. REPARTITION_BY_NUM so AQE cannot coalesce the
+    // width. NOTE the layout does NOT survive the checkpoint: a
+    // checkpoint scan carries no partitioning under AQE, so every
+    // round's join re-exchanges the spine (one write per action, shared
+    // by AQE's ReusedExchange). LAZY checkpoints: the eager form ran one
+    // more driver job per checkpoint. Under AQE,
+    // `localCheckpoint(eager = false)` still runs every shuffle map stage
+    // of its plan at call time (it builds the final plan to get the
+    // RDD); the result stage runs in the next job that reads the blocks.
+    // Edges with a null endpoint name no node and are dropped; the filter
+    // also makes the spine's src and dst non-nullable, so no round's scan
+    // gets an inferred null filter and every round reads the SAME spine
+    // exchange (the last round's plan differed by one and wrote its own).
     val parts = math.max(1,
       edges.sparkSession.sessionState.conf.numShufflePartitions)
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
+    val spine = edges.where(col("src").isNotNull && col("dst").isNotNull)
       .repartition(parts, col("src"))
       .distinct()
-      .ckptSpill(false)
-    val nodes = e.select(col("src").as("nid"))
-      .union(e.select(col("dst").as("nid")))
-      .distinct()
+      .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src"))))
+      .ckptSpill(false) // edge-sized: DISK_ONLY (see Ckpt.spill)
+    // every node with its has-in-edge flag, from one aggregate over the
+    // spine: n, the initial ranks and the no-in-edge set all read it
+    val flags = spine.select(explode(array(
+        struct(col("src").as("nid"), lit(false).as("in")),
+        struct(col("dst").as("nid"), lit(true).as("in")))).as("f"))
+      .groupBy(col("f.nid").as("nid")).agg(max(col("f.in")).as("in"))
       .ckpt(false)
-    val n = nodes.count() // materializes e + nodes; one driver scalar
-    val (ranks, working) = rankRounds(e, nodes, n, iters, damping,
-      checkpointEvery)
-    // ONE eager checkpoint of the (node, rank)-sized result, then free
-    // every working block. Without it the returned lazy chain re-runs
-    // all `iters` joins on EVERY caller action, and the working blocks
-    // stay pinned for the session (the long-lived-session leak class: a
-    // hundred queries of leaked spines eventually evict each other into
-    // disk thrash).
-    val out = ranks.ckpt()
-    (Seq(e, nodes) ++ working).foreach(
-      org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint)
-    out
-  }
-
-  /** The rank rounds of [[pageRank]] over a deduplicated long edge list
-    * `e` (src, dst), its node frame `nodes` (one column, `nid`) and
-    * node count `n`. Returns the LAZY (id, rank) frame and
-    * the working checkpoints the caller frees once it has materialized
-    * its output.
-    *
-    * Round shape (r20, from the executed-plan audit in plans/r20/): a
-    * checkpoint scan carries NO recognizable partitioning under AQE
-    * (eager and lazy alike get an Exchange on a same-key join), so the
-    * per-round spine exchange cannot be elided — AQE's ReusedExchange
-    * collapses the identical per-round spine exchanges to one write
-    * re-read per round, which is the best this structure admits. What
-    * each round pays beyond that read: one node-sized ranks exchange,
-    * one hash join (SHUFFLE_HASH — no edge-sized sorts), and the
-    * partial-aggregated contribution groupBy on dst. */
-  private def rankRounds(e: DataFrame, nodes: DataFrame, n: Long,
-                         iters: Int, damping: Double,
-                         checkpointEvery: Int): (DataFrame, Seq[DataFrame]) = {
-    // SHUFFLE_HASH: the build side is the ≤nodes-sized outDeg; SMJ would
-    // only add two sorts
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // (src, dst, deg) long-keyed spine — reused by every round's join
-    val spine = e.join(outDeg.hint("SHUFFLE_HASH"), "src")
-      .ckpt(false) // result stage runs in the output job's first round;
-                   // its shuffle map stages run here (AQE, see pageRankLong)
-    // Nodes with NO in-edges take zero contribution in EVERY round (every
-    // spine src has rank > 0 and deg ≥ 1, so every node with an in-edge
-    // appears in every round's contribution aggregate), so their rank is
-    // the constant (1−d)/N after any round — computed ONCE here
-    // (node-sized anti join) and unioned into each round's result instead
-    // of the per-round nodes ⋈ contribs left join that re-scanned and
-    // re-shuffled the node frame every round (guide §2.4; the r20 in-loop
-    // plan dump shows the join and its exchanges gone —
-    // plans/r20/q84_pagerank_round_{before,after}.txt). The double is
-    // unchanged: the old path computed (1−d)/N + d·0.0 and x + d·0.0 ≡ x
-    // for x > 0.
-    val noInRanks = nodes
-      .join(e.select(col("dst").as("nid")).distinct(), Seq("nid"), "left_anti")
-      .select(col("nid").as("id"), lit((1.0 - damping) / n).as("rank"))
-      .ckpt(false) // node-sized; shuffle stages run here, the rest in the output job
-    var ranks = nodes.select(col("nid").as("id"), lit(1.0 / n).as("rank"))
+    val n = flags.count() // materializes spine + flags; one driver scalar
+    // Nodes with NO in-edge get a zero contribution row in every round,
+    // INSIDE the aggregate: the round's output then covers every node
+    // and stays hash(id)-partitioned, so the next round's join needs no
+    // ranks-side exchange (a union after the aggregate forced one). The
+    // double is unchanged: (1−d)/N + d·0.0 ≡ (1−d)/N, and nodes with an
+    // in-edge get the same summands as before.
+    val zeros = flags.filter(!col("in"))
+      .select(col("nid").as("id"), lit(0.0).as("c"))
+    var ranks = flags.select(col("nid").as("id"), lit(1.0 / n).as("rank"))
     val intermediates = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (round <- 0 until iters) {
       // SHUFFLE_HASH on the node-sized ranks side: SMJ would SORT the
       // edge-sized spine every round after its exchange; the hash join
       // streams the spine unsorted and builds per-partition tables
       // bounded by nodes/parts rows of 16 bytes — spillable,
-      // partition-count-scaled (guide §3.1). Same-JVM interleaved A/B,
-      // 5 rounds each: leftjoin 3.19 s / union 2.79 / union+SHJ 2.00
-      // (OPTIMIZATION_r20.md §1; plans under plans/r20/).
+      // partition-count-scaled (guide §3.1; OPTIMIZATION_r20.md §1).
       ranks = spine
         .join(ranks.select(col("id").as("src"), col("rank"))
           .hint("SHUFFLE_HASH"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("rank") / col("deg")).as("cin"))
+        .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
+        .unionByName(zeros)
+        .groupBy(col("id"))
+        .agg(sum(col("c")).as("cin"))
         .select(col("id"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * col("cin")).as("rank"))
-        .unionByName(noInRanks)
+          (lit((1.0 - damping) / n) + lit(damping) * col("cin")).as("rank"))
       // periodic eager checkpoint: deep iteration counts keep lineage
       // and planning time bounded; shallow runs stay one lazy chain
       // into the caller's output checkpoint
@@ -231,6 +201,6 @@ object Graph {
         intermediates += ranks
       }
     }
-    (ranks, Seq(spine, noInRanks) ++ intermediates)
+    (ranks, Seq(spine, flags) ++ intermediates)
   }
 }

@@ -40,8 +40,8 @@ object StreamOps {
       .option("rowsPerSecond", rowsPerSecond.toString)
       .load()
       .select(col("timestamp"), col("value").as("idx"),
-        (lit(min) + pmod(xxhash64(col("value"), lit(seed)), lit(1L << 52))
-          .cast("double") / lit((1L << 52).toDouble) * (max - min)).as("value"))
+        (lit(min) + graft.core.SemanticStream.hashUniform(col("value"), seed) *
+          (max - min)).as("value"))
 
   /** Tumbling event-time window aggregation with watermarking —
     * the streaming face of Windows.tumbleId. */

@@ -404,4 +404,33 @@ class CoreStreamSpec extends AnyFunSuite {
       .toStatistics.frequency
     assert(m(5.0) == (Seq(0L, 2L, 4L), 3L) && m(7.0) == (Seq(1L, 3L), 2L))
   }
+
+  test("randomDoubles/randomLongs: partition-invariant values within their bounds") {
+    // spark.range takes spark.sql.leafNodeDefaultParallelism partitions:
+    // each value must depend on (seed, index) only, not on the split
+    val key = "spark.sql.leafNodeDefaultParallelism"
+    val saved = spark.conf.getOption(key)
+    def draw(parts: Int): (Vector[Double], Vector[Long]) =
+      try {
+        spark.conf.set(key, parts.toString)
+        val d = SemanticStream.randomDoubles(spark, -2.5, 4.0, 500, seed = 7)
+        val l = SemanticStream.randomLongs(spark, -3, 4, 500, seed = 7)
+        assert(d.ds.rdd.getNumPartitions == parts)
+        assert(l.ds.rdd.getNumPartitions == parts)
+        (d.terminals.toVector, l.terminals.toVector)
+      } finally saved match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    val (d1, l1) = draw(1)
+    val (d7, l7) = draw(7)
+    assert(d1 == d7 && l1 == l7)
+    assert(d1.size == 500 && d1.forall(x => x >= -2.5 && x < 4.0))
+    assert(l1.size == 500 && l1.forall(x => x >= -3 && x <= 4))
+    // uniform enough that both ends of the long range are drawn
+    assert(l1.toSet == (-3L to 4L).toSet)
+    // another seed, other values
+    assert(SemanticStream.randomDoubles(spark, -2.5, 4.0, 500, seed = 8)
+      .terminals.toVector != d1)
+  }
 }
