@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Readers
 
 /** Query registry backing [[SparkEntry]]: every implemented operator from
   * SURVEY.md §2 plus the LLM-pipeline operators, each over the driver
@@ -14,9 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Queries {
 
-  private[graft] def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
   /** events with `ts` normalized to epoch NANOSECONDS (long), whichever
     * physical type the generator wrote: TIMESTAMP(NANOS) arrives as long
     * under `nanosAsLong` (pass-through); TIMESTAMP_MICROS arrives as a
@@ -26,7 +24,7 @@ object Queries {
     * precision to lose, no overflow until 2262) so downstream gap/as-of/
     * range arithmetic stays exact-integer either way. */
   private[graft] def eventsTsNanos(spark: SparkSession, dir: String): DataFrame = {
-    val ev = tbl(spark, dir, "events")
+    val ev = Readers.table(spark, dir, "events")
     ev.schema("ts").dataType match {
       case org.apache.spark.sql.types.TimestampType | org.apache.spark.sql.types.TimestampNTZType =>
         ev.withColumn("ts",
@@ -39,7 +37,7 @@ object Queries {
     * the reference's group/summate/average collectors (collector.h:488-544,
     * 1065-1130) as one partial-aggregated Spark plan. */
   def q1Agg(spark: SparkSession, dir: String): DataFrame =
-    tbl(spark, dir, "lineitem")
+    Readers.table(spark, dir, "lineitem")
       .filter(col("l_shipdate") <= lit("1998-09-01").cast("timestamp"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(

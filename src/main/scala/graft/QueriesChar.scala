@@ -4,19 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.CharSeq
 import graft.operators.Dedup
+import graft.sources.Readers
 
 /** Charsequence-parity + embedding near-dup queries. */
 object QueriesChar {
-
-  private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // indexOf / lastIndexOf (plain + fromPosition) / replaceFirst /
     // splitKeepEmpty / codePoints (native CodePointsExpr)
     "q39_charseq" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
-      tbl(s, dir, "documents").select(
+      Readers.table(s, dir, "documents").select(
         col("doc_id"),
         CharSeq.indexOf(col("text"), "data").as("idx_data"),
         CharSeq.lastIndexOf(col("text"), "data").as("last_data"),
@@ -40,7 +38,7 @@ object QueriesChar {
     // results are bit-identical to the uncapped run
     "q40_embedding_neardup" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s) // native graft_dot
-      Dedup.embeddingNearDups(tbl(s, dir, "embeddings"), "vec_id", "embedding",
+      Dedup.embeddingNearDups(Readers.table(s, dir, "embeddings"), "vec_id", "embedding",
         planes = 4, threshold = 0.4, maxBucketSize = Some(4096))
         .select(col("a"), col("b"), round(col("cosine"), 4).as("cosine"))
         .orderBy(col("a"), col("b"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{IndexOps, SemanticStream}
 import graft.operators.Windows
+import graft.sources.Readers
 
 /** Index-op / window / grouping queries (SURVEY.md §2.1-2.4) over the
   * driver tables, with DuckDB oracles. The indexed view of `events` is
@@ -12,15 +13,12 @@ import graft.operators.Windows
   */
 object QueriesCore {
 
-  private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   /** event_id is a DENSE 0-based PK (verified at every SF), so the rank
     * of event_id IS event_id: ord/idx are the scan column itself — no
     * rank stages, and ord-window probes (q21's findFirst, q08) push to
     * the parquet scan as PushedFilters. */
   private def indexedEvents(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "events")
+    Readers.table(s, dir, "events")
       .withColumn("ord", col("event_id")).withColumn("idx", col("event_id"))
 
   /** Indexed events as a typed SemanticStream[Long] over event_id — the
@@ -30,7 +28,7 @@ object QueriesCore {
   private def eventStream(s: SparkSession, dir: String): SemanticStream[Long] = {
     import s.implicits._
     SemanticStream.fromDenseKey[Long](
-      tbl(s, dir, "events").select(col("event_id")),
+      Readers.table(s, dir, "events").select(col("event_id")),
       col("event_id"), col("event_id"))
   }
 
@@ -39,7 +37,7 @@ object QueriesCore {
     // BEFORE the rank pushes the predicate into the parquet scan and ranks
     // only survivors — renumbering the full stream first would be wasted
     "q02_filter_renumber" -> ((s, dir) => {
-      val filtered = tbl(s, dir, "events").filter(col("value") > 50.0)
+      val filtered = Readers.table(s, dir, "events").filter(col("value") > 50.0)
       IndexOps.renumberByUniqueKey(filtered, col("event_id"))
         .select(col("idx"), col("event_id"))
         .orderBy(col("idx"))
@@ -77,7 +75,7 @@ object QueriesCore {
     // numeric lead (value) keeps the rank on the Catalyst bucket path
     "q07_sort_renumber" -> ((s, dir) => {
       val sorted = IndexOps.rankNumericPrefix(
-        tbl(s, dir, "events"), col("value"),
+        Readers.table(s, dir, "events"), col("value"),
         Seq(col("value").asc, col("event_id").asc), renumberIdx = true)
       sorted.select(col("idx"), col("event_id"), col("value")).orderBy(col("idx"))
     }),
@@ -94,7 +92,7 @@ object QueriesCore {
       // rank re-computation happens (fromUniqueKey's computed ord cannot
       // push below the rank)
       val st = SemanticStream.fromDenseKey[(Long, Double)](
-        tbl(s, dir, "events").select(col("event_id"), col("value")),
+        Readers.table(s, dir, "events").select(col("event_id"), col("value")),
         struct(col("event_id").as("_1"), col("value").as("_2")),
         col("event_id"))
       st.takeWhileProbed(v => v.getField("_2") < 99.0).toDF
@@ -119,7 +117,7 @@ object QueriesCore {
     "q10_concat" -> ((s, dir) => {
       import s.implicits._
       def part(lo: Long, hi: Long): SemanticStream[Long] = {
-        val src = tbl(s, dir, "orders")
+        val src = Readers.table(s, dir, "orders")
           .filter(col("o_orderkey") >= lo && col("o_orderkey") < hi)
         // unique-key bridge → known ordBound → concatenate linearizes
         // (src, ord) into one key and ranks Catalyst-only; the key filter
@@ -144,7 +142,7 @@ object QueriesCore {
 
     // group → per-key ordered element list (collector.h:1065-1093)
     "q12_group_lines" -> ((s, dir) =>
-      tbl(s, dir, "lineitem")
+      Readers.table(s, dir, "lineitem")
         .groupBy(col("l_orderkey"))
         .agg(count(lit(1)).as("n_lines"),
           array_join(transform(sort_array(collect_list(col("l_linenumber"))),
@@ -158,7 +156,7 @@ object QueriesCore {
       // linenumber is collision-free and order-preserving. A/B vs the
       // grouped-minor rank (BENCH_NOTES.md Round 7): consistently ~1.2×
       // faster here; both shapes are scale-safe
-      val li = IndexOps.renumberByUniqueKey(tbl(s, dir, "lineitem"),
+      val li = IndexOps.renumberByUniqueKey(Readers.table(s, dir, "lineitem"),
         col("l_orderkey") * lit(8L) + col("l_linenumber"))
       li.groupBy(Windows.chunkId(col("idx"), 1000).as("chunk"))
         .agg(count(lit(1)).as("n"),
@@ -168,7 +166,7 @@ object QueriesCore {
 
     // partitionBy(keyF): buckets in ascending key order (collector.h:2138)
     "q14_partition_by" -> ((s, dir) =>
-      tbl(s, dir, "events")
+      Readers.table(s, dir, "events")
         .groupBy((col("user_id") % 16).as("bucket"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"),
           min(col("event_id")).as("first_event"))

@@ -4,15 +4,13 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.DftAggregator
 import graft.operators.Similarity
+import graft.sources.Readers
 
 /** Similarity-search + spectral + sessionization queries with DuckDB
   * oracles. Cosine math runs in double on both engines and is rounded
   * before ranking so summation order can never flip a rank.
   */
 object QueriesSim {
-
-  private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // SemDeDup-style semantic dedup: IVF-cell coarse clustering, exact
@@ -29,7 +27,7 @@ object QueriesSim {
     // stay the audited r12 shape
     "q86_semantic_dedup" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s) // native graft_dot
-      Similarity.semanticDedup(tbl(s, dir, "embeddings"), "vec_id", "embedding",
+      Similarity.semanticDedup(Readers.table(s, dir, "embeddings"), "vec_id", "embedding",
         nlist = 4, threshold = 0.4, maxCellSize = Some(4096),
         refineTarget = None)
         .select(col("id").as("vec_id"), col("cell"), col("canonical_id"),
@@ -42,7 +40,7 @@ object QueriesSim {
     // per vector inline on its scan), bounded top-k ranking
     "q104_ivf_nprobe" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s) // native graft_dot
-      val emb = tbl(s, dir, "embeddings")
+      val emb = Readers.table(s, dir, "embeddings")
       Similarity.ivfTopKProbed(emb, emb.filter(col("vec_id") < 10),
         "vec_id", "embedding", k = 5, nlist = 4, nprobe = 2)
         .orderBy(col("qid"), col("rank"))
@@ -52,7 +50,7 @@ object QueriesSim {
     // map-side codes + reconstruction error; code sums are
     // integer-exact, error metrics rounded with both FP guards
     "q68_quantize_int8" -> ((s, dir) =>
-      Similarity.scalarQuantizeInt8(tbl(s, dir, "embeddings"), "vec_id", "embedding")
+      Similarity.scalarQuantizeInt8(Readers.table(s, dir, "embeddings"), "vec_id", "embedding")
         .select(col("id").as("vec_id"), col("q_sum"),
           (round(col("max_abs_err") + lit(1e-9), 4) + lit(0.0)).as("max_abs_err"),
           (round(col("mean_abs_err") + lit(1e-9), 4) + lit(0.0)).as("mean_abs_err"))
@@ -62,7 +60,7 @@ object QueriesSim {
     // reconstruction, exact float rerank to top-5
     "q69_quantized_rerank" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s) // native graft_dot
-      val emb = tbl(s, dir, "embeddings")
+      val emb = Readers.table(s, dir, "embeddings")
       Similarity.quantizedRerankTopK(emb, emb.filter(col("vec_id") < 10),
         "vec_id", "embedding", k = 5, rerank = 20)
         .orderBy(col("qid"), col("rank"))
@@ -72,7 +70,7 @@ object QueriesSim {
     // map-side argmin assignment, one (cluster, dim) mean shuffle
     "q67_kmeans_step" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s) // native graft_dot
-      Similarity.kmeansStep(tbl(s, dir, "embeddings"), "vec_id", "embedding", 8)
+      Similarity.kmeansStep(Readers.table(s, dir, "embeddings"), "vec_id", "embedding", 8)
         .select(col("cluster"), col("dim").cast("long").as("dim"),
           col("n_members"),
           (round(col("mean") + lit(1e-9), 4) + lit(0.0)).as("mean"))
@@ -90,7 +88,7 @@ object QueriesSim {
     // are floating fixpoints, not engine-portable integers.
     "q80_pq_adc" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
-      val emb = tbl(s, dir, "embeddings")
+      val emb = Readers.table(s, dir, "embeddings")
       Similarity.pqTopK(emb, emb.filter(col("vec_id") < 10),
         "vec_id", "embedding", k = 5, m = 4, ksub = 8)
         .orderBy(col("qid"), col("rank"))
@@ -102,7 +100,7 @@ object QueriesSim {
     // arguments unchanged
     "q81_ivfpq" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
-      val emb = tbl(s, dir, "embeddings")
+      val emb = Readers.table(s, dir, "embeddings")
       Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 10),
         "vec_id", "embedding", k = 5, nlist = 4, m = 4, ksub = 8)
         .orderBy(col("qid"), col("rank"))
@@ -110,7 +108,7 @@ object QueriesSim {
 
     "q35_cosine_topk" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s) // native graft_dot
-      val emb = tbl(s, dir, "embeddings")
+      val emb = Readers.table(s, dir, "embeddings")
       Similarity.cosineTopK(emb, emb.filter(col("vec_id") < 10),
         "vec_id", "embedding", k = 5)
         .orderBy(col("qid"), col("rank"))
@@ -119,7 +117,7 @@ object QueriesSim {
     // md5-seeded random-hyperplane LSH buckets (the ANN scale path)
     "q36_lsh_buckets" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
-      Similarity.hyperplaneBuckets(tbl(s, dir, "embeddings"),
+      Similarity.hyperplaneBuckets(Readers.table(s, dir, "embeddings"),
         "vec_id", "embedding", planes = 6)
         .select(col("id").as("vec_id"), col("bucket"))
         .orderBy(col("vec_id"))
@@ -128,7 +126,7 @@ object QueriesSim {
     // LSH-bucketed ANN top-k — the no-broadcast scale path under oracle
     "q49_ann_bucketed" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
-      val emb = tbl(s, dir, "embeddings")
+      val emb = Readers.table(s, dir, "embeddings")
       Similarity.annTopKBucketed(emb, emb.filter(col("vec_id") < 10),
         "vec_id", "embedding", k = 5, planes = 4)
         .orderBy(col("qid"), col("rank"))
@@ -139,7 +137,7 @@ object QueriesSim {
     // embeddings: 0.12 single-table → 0.66 at 8 tables, OperatorSpec)
     "q61_ann_multitable" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
-      val emb = tbl(s, dir, "embeddings")
+      val emb = Readers.table(s, dir, "embeddings")
       Similarity.annTopKMultiTable(emb, emb.filter(col("vec_id") < 10),
         "vec_id", "embedding", k = 5, planes = 4, tables = 4)
         .orderBy(col("qid"), col("rank"))
@@ -148,7 +146,7 @@ object QueriesSim {
     // IVF coarse cells: argmax projection onto md5-derived centroids
     "q48_ivf_cells" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
-      Similarity.ivfAssign(tbl(s, dir, "embeddings"), "vec_id", "embedding",
+      Similarity.ivfAssign(Readers.table(s, dir, "embeddings"), "vec_id", "embedding",
         nlist = 4)
         .select(col("id").as("vec_id"), col("cell"))
         .orderBy(col("vec_id"))
@@ -166,7 +164,7 @@ object QueriesSim {
       val dftUdaf = udaf(new DftAggregator(),
         Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble))
       val firstK = udaf(new graft.functions.FirstKByOrder(8))
-      val series = tbl(s, dir, "events")
+      val series = Readers.table(s, dir, "events")
         .groupBy(col("user_id"))
         .agg(firstK(col("event_id").cast("long"), col("value")).as("fk"))
         .filter(size(col("fk.items")) === 8)
@@ -189,7 +187,7 @@ object QueriesSim {
         Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble))
       // same window-free first-k shape as q37 (see the note there)
       val firstK = udaf(new graft.functions.FirstKByOrder(12))
-      val series = tbl(s, dir, "events")
+      val series = Readers.table(s, dir, "events")
         .groupBy(col("user_id"))
         .agg(firstK(col("event_id").cast("long"), col("value")).as("fk"))
         .filter(size(col("fk.items")) === 12)
@@ -208,7 +206,7 @@ object QueriesSim {
     "q43_asof_join" -> ((s, dir) => {
       val ev = Queries.eventsTsNanos(s, dir)
         .select(col("event_id"), col("user_id"), col("ts"))
-      val ord = tbl(s, dir, "orders")
+      val ord = Readers.table(s, dir, "orders")
         .select(col("o_custkey"), col("o_orderdate"), col("o_orderkey"), col("o_totalprice"))
       graft.operators.Joins.asof(
         left = ev, right = ord,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.IndexOps
 import graft.functions.StatFunctions
+import graft.sources.Readers
 
 /** Statistics / find / match / join queries (SURVEY.md §2.3, §2.5) with
   * DuckDB oracles. Skewness/kurtosis use the reference's exact formulas
@@ -14,9 +15,6 @@ import graft.functions.StatFunctions
   */
 object QueriesStats {
 
-  private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // PageRank over the symmetrized customer↔supplier relation graph
     // (orders ⋈ lineitem), 5 fixed iterations, damping 0.85 — the
@@ -24,7 +22,7 @@ object QueriesStats {
     // relations. One shuffle join + one partial agg per round; the
     // edge spine is checkpointed once.
     "q84_pagerank" -> ((s, dir) => {
-      val o = tbl(s, dir, "orders"); val l = tbl(s, dir, "lineitem")
+      val o = Readers.table(s, dir, "orders"); val l = Readers.table(s, dir, "lineitem")
       // node ids packed as longs (customer 2k, supplier 2k+1) instead of
       // "c<k>"/"s<k>" strings: the graph is isomorphic, pageRank takes
       // its integral-id fast path (no relabel dictionary, long-keyed
@@ -48,7 +46,7 @@ object QueriesStats {
 
     // variance family: population convention (collector.h:688-836)
     "q17_stats_group" -> ((s, dir) =>
-      tbl(s, dir, "lineitem")
+      Readers.table(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(
           round(var_pop(col("l_quantity")), 4).as("var_pop_qty"),
@@ -60,7 +58,7 @@ object QueriesStats {
 
     // percentile family: linear interpolation at p·(n−1) (collector.h:2298)
     "q18_percentiles" -> ((s, dir) =>
-      tbl(s, dir, "lineitem")
+      Readers.table(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(
           round(percentile(col("l_extendedprice"), lit(0.5)), 4).as("median_price"),
@@ -72,7 +70,7 @@ object QueriesStats {
 
     // mode: frequency count, smallest-value tie-break (collector.h:2251)
     "q19_mode" -> ((s, dir) => {
-      val counts = tbl(s, dir, "lineitem")
+      val counts = Readers.table(s, dir, "lineitem")
         .groupBy(col("l_linestatus"), col("l_quantity"))
         .agg(count(lit(1)).as("cnt"))
       val w = Window.partitionBy(col("l_linestatus"))
@@ -84,7 +82,7 @@ object QueriesStats {
 
     // reference-formula skewness/kurtosis via single-pass Aggregator
     "q20_skew_kurt" -> ((s, dir) =>
-      tbl(s, dir, "lineitem")
+      Readers.table(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(
           // + 0.0 kills IEEE -0.0 after rounding (a skew of exactly zero
@@ -96,7 +94,7 @@ object QueriesStats {
 
     // find first/last/at/negative-at (collector.h:838-1063)
     "q21_find" -> ((s, dir) => {
-      val ev = IndexOps.renumberByUniqueKey(tbl(s, dir, "events"), col("event_id"))
+      val ev = IndexOps.renumberByUniqueKey(Readers.table(s, dir, "events"), col("event_id"))
       val n = ev.count()
       val negTarget = (n - (5 % n)) % n // findAt(-5)
       ev.agg(
@@ -108,7 +106,7 @@ object QueriesStats {
 
     // all/any/none match (collector.h:399-448)
     "q22_match" -> ((s, dir) =>
-      tbl(s, dir, "events").agg(
+      Readers.table(s, dir, "events").agg(
         bool_and(col("value") >= 0.0).as("all_nonneg"),
         bool_or(col("value") > 1000.0).as("any_big"),
         (!bool_or(col("value") < 0.0)).as("none_neg"))),
@@ -117,7 +115,7 @@ object QueriesStats {
     "q23_frequency_profile" -> ((s, dir) => {
       // event_id is a DENSE 0-based PK (asserted in SourcesSpec): the
       // arrival index IS the key — no rank stage at all
-      val ev = IndexOps.renumberByDenseKey(tbl(s, dir, "events"), col("event_id"))
+      val ev = IndexOps.renumberByDenseKey(Readers.table(s, dir, "events"), col("event_id"))
       ev.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), min(col("idx")).as("min_idx"),
           max(col("idx")).as("max_idx"), sum(col("idx")).as("sum_idx"))
@@ -126,8 +124,8 @@ object QueriesStats {
 
     // broadcast equi-join (parity-plus relational surface)
     "q24_join_brand" -> ((s, dir) => {
-      val li = tbl(s, dir, "lineitem")
-      val p = tbl(s, dir, "part")
+      val li = Readers.table(s, dir, "lineitem")
+      val p = Readers.table(s, dir, "part")
       li.join(broadcast(p), li("l_partkey") === p("p_partkey"))
         .groupBy(col("p_brand"))
         .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
@@ -137,9 +135,9 @@ object QueriesStats {
 
     // 3-way join, TPC-H Q3 shape
     "q25_join_q3" -> ((s, dir) => {
-      val c = tbl(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val o = tbl(s, dir, "orders")
-      val li = tbl(s, dir, "lineitem")
+      val c = Readers.table(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
+      val o = Readers.table(s, dir, "orders")
+      val li = Readers.table(s, dir, "lineitem")
       li.join(o, li("l_orderkey") === o("o_orderkey"))
         .join(broadcast(c), o("o_custkey") === c("c_custkey"))
         .groupBy(col("o_orderpriority"))
@@ -151,7 +149,7 @@ object QueriesStats {
     // two-stage salted aggregation — result must equal the direct groupBy
     "q44_salted_agg" -> ((s, dir) =>
       graft.operators.Joins.saltedAgg(
-        tbl(s, dir, "lineitem"), col("l_returnflag"), saltBuckets = 8,
+        Readers.table(s, dir, "lineitem"), col("l_returnflag"), saltBuckets = 8,
         partials = Seq(sum(col("l_quantity")).as("psum"), count(lit(1)).as("pcnt")),
         finals = Seq(round(sum(col("psum")), 2).as("sum_qty"),
           sum(col("pcnt")).as("n")))
@@ -170,7 +168,7 @@ object QueriesStats {
       // the 32-wide local rig absorbs but a contended cluster pays for;
       // the packed key ranks in #shuffle-partition-wide windows instead
       // (numbers in OPTIMIZATION_r19.md)
-      val li = IndexOps.renumberByUniqueKey(tbl(s, dir, "lineitem"),
+      val li = IndexOps.renumberByUniqueKey(Readers.table(s, dir, "lineitem"),
         col("l_orderkey") * lit(8L) + col("l_linenumber"))
       val stream = new graft.core.SemanticStream(
         li.select(col("ord"), col("idx"),
@@ -193,7 +191,7 @@ object QueriesStats {
       // packed-key bucket rank (linenumber 1..7 → stride 8): ~1.6×
       // faster than the grouped-minor rank here, every session
       // (BENCH_NOTES.md Round 7 A/B)
-      val li = IndexOps.renumberByUniqueKey(tbl(s, dir, "lineitem"),
+      val li = IndexOps.renumberByUniqueKey(Readers.table(s, dir, "lineitem"),
         col("l_orderkey") * lit(8L) + col("l_linenumber"))
       val stream = new graft.core.SemanticStream(
         li.select(col("ord"), col("idx"),
@@ -212,11 +210,11 @@ object QueriesStats {
     // 5-way join (TPC-H Q5 shape): revenue by nation for one region —
     // broadcast chain for the dimensions, one shuffle for the fact join
     "q47_q5ish" -> ((s, dir) => {
-      val li = tbl(s, dir, "lineitem")
-      val o = tbl(s, dir, "orders")
-      val c = tbl(s, dir, "customer")
-      val n = tbl(s, dir, "nation")
-      val r = tbl(s, dir, "region").filter(col("r_name") === "ASIA")
+      val li = Readers.table(s, dir, "lineitem")
+      val o = Readers.table(s, dir, "orders")
+      val c = Readers.table(s, dir, "customer")
+      val n = Readers.table(s, dir, "nation")
+      val r = Readers.table(s, dir, "region").filter(col("r_name") === "ASIA")
       li.join(o, li("l_orderkey") === o("o_orderkey"))
         .join(broadcast(c), o("o_custkey") === c("c_custkey"))
         .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
@@ -229,9 +227,9 @@ object QueriesStats {
 
     // anti join: customers with no high-value order, per nation
     "q26_anti_join" -> ((s, dir) => {
-      val c = tbl(s, dir, "customer")
-      val o = tbl(s, dir, "orders").filter(col("o_totalprice") > 450000.0)
-      val n = tbl(s, dir, "nation")
+      val c = Readers.table(s, dir, "customer")
+      val o = Readers.table(s, dir, "orders").filter(col("o_totalprice") > 450000.0)
+      val n = Readers.table(s, dir, "nation")
       c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
         .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"))
@@ -246,7 +244,7 @@ object QueriesStats {
     // op-for-op by a DuckDB recursive CTE, so pre-round doubles are
     // bit-identical — the round(6) is belt and braces
     "q60_gradient" -> ((s, dir) => {
-      val nation = tbl(s, dir, "nation")
+      val nation = Readers.table(s, dir, "nation")
       // dense-key bridge: n_nationkey is a DENSE 0-based PK by TPC-H
       // construction (exactly 25 rows, keys 0..24, at every SF), so the
       // rank IS the key — zero rank stages, where the generic

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Multimodal, Windows, TextAnalysis => TA}
 import graft.core.Ckpt.CkptOps
+import graft.sources.Readers
 
 /** Text-analysis / dedup / multimodal queries over `documents`, with
   * DuckDB oracles that mirror the exact same deterministic (md5-seeded)
@@ -11,9 +12,6 @@ import graft.core.Ckpt.CkptOps
   * every hash-derived value.
   */
 object QueriesText {
-
-  private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** Session-scoped memo of MATERIALIZED (localCheckpoint-ed) frames,
     * keyed by (dir, key): the verified near-dup pair spine shared by
@@ -189,7 +187,7 @@ object QueriesText {
 
   private def verifiedPairs(s: SparkSession, dir: String): DataFrame =
     cachedFrame(s, dir, "pairs") {
-      Dedup.minhashNearDups(tbl(s, dir, "documents"), "doc_id", "text",
+      Dedup.minhashNearDups(Readers.table(s, dir, "documents"), "doc_id", "text",
         shingleWidth = 3, numHashes = 12, bands = 4, threshold = 0.2,
         maxBucketSize = Some(64), materialize = true)
     }
@@ -206,7 +204,7 @@ object QueriesText {
   private def fixture(s: SparkSession, dir: String, kind: String,
                       build: DataFrame => DataFrame): DataFrame =
     cachedFrame(s, dir, s"fixture:$kind") {
-      build(tbl(s, dir, "documents")).ckpt()
+      build(Readers.table(s, dir, "documents")).ckpt()
     }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -215,7 +213,7 @@ object QueriesText {
     // docs corpus-wide, reassemble the survivors — map-side segment
     // slicing, digest-keyed frequency count, anti-join blocklist
     "q83_segment_dedup" -> ((s, dir) =>
-      Dedup.segmentDedup(tbl(s, dir, "documents"), "doc_id", "text",
+      Dedup.segmentDedup(Readers.table(s, dir, "documents"), "doc_id", "text",
         segTokens = 3, maxDocs = 2)
         .select(col("id").as("doc_id"), col("n_segments"), col("n_kept"),
           col("n_kept_tokens"),
@@ -226,7 +224,7 @@ object QueriesText {
     // data selection): map-side tf/dl folds + one 1-row corpus-stats
     // broadcast — the corpus itself never shuffles
     "q85_bm25" -> ((s, dir) =>
-      TA.bm25(tbl(s, dir, "documents"), "doc_id", "text",
+      TA.bm25(Readers.table(s, dir, "documents"), "doc_id", "text",
         Seq("spark", "join", "window"))
         .select(col("id").as("doc_id"), col("n_query_hits"),
           round(col("score") + lit(1e-9), 4).as("bm25"))
@@ -236,7 +234,7 @@ object QueriesText {
     // alpha-word fraction, stopword hits → pass bit): one codegen'd
     // map-side projection per doc, no explode, no shuffle
     "q97_gopher_rules" -> ((s, dir) =>
-      TA.gopherQuality(tbl(s, dir, "documents"), "doc_id", "text")
+      TA.gopherQuality(Readers.table(s, dir, "documents"), "doc_id", "text")
         .select(col("id").as("doc_id"), col("n_words"), col("mean_word_len"),
           col("frac_alpha_words"), col("n_stopword_hits"), col("pass"))
         .orderBy(col("doc_id"))),
@@ -245,7 +243,7 @@ object QueriesText {
     // folds + one 1-row (N, df) broadcast — the q85 shape with the
     // linear scorer
     "q98_tfidf" -> ((s, dir) =>
-      TA.tfidf(tbl(s, dir, "documents"), "doc_id", "text",
+      TA.tfidf(Readers.table(s, dir, "documents"), "doc_id", "text",
         Seq("spark", "join", "window"))
         .select(col("id").as("doc_id"), col("n_query_hits"),
           round(col("score") + lit(1e-9), 4).as("tfidf"))
@@ -256,7 +254,7 @@ object QueriesText {
     // id — survivor election is a partial-aggregated min_by per cluster,
     // never a window
     "q99_canonical_survivors" -> ((s, dir) =>
-      Dedup.canonicalByScore(tbl(s, dir, "documents"), "doc_id",
+      Dedup.canonicalByScore(Readers.table(s, dir, "documents"), "doc_id",
         col("n_chars").cast("long"), verifiedPairs(s, dir))
         .select(col("id").as("doc_id"), col("cluster"),
           col("score").as("n_chars"), col("keep"))
@@ -266,7 +264,7 @@ object QueriesText {
     // Levenshtein over the (tiny) verified pair spine joined back to the
     // docs — the character-level second opinion on the shingle Jaccard
     "q100_edit_verify" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Readers.table(s, dir, "documents")
       val pairs = verifiedPairs(s, dir)
       val ta = docs.select(col("doc_id").as("a"), col("text").as("__ta"),
         col("n_chars").cast("long").as("__la"))
@@ -285,7 +283,7 @@ object QueriesText {
     // top-k via TakeOrderedAndProject (no full sort, no giant tie
     // window), regression as one 1-row reduce
     "q106_zipf_head" -> ((s, dir) =>
-      TA.zipfHeadFit(tbl(s, dir, "documents"), "doc_id", "text", k = 100)),
+      TA.zipfHeadFit(Readers.table(s, dir, "documents"), "doc_id", "text", k = 100)),
 
     // SimHash near-dup pairs: pigeonhole banding on the 16-bit
     // fingerprint (hamming <= 2 must agree on one of 3 segments), exact
@@ -299,7 +297,7 @@ object QueriesText {
     // md5-vote fingerprint); the operator DEFAULT is the measured scale
     // path, bits = 64 — see the output-density contract on simhashNearDups
     "q105_simhash_pairs" -> ((s, dir) =>
-      Dedup.simhashNearDups(tbl(s, dir, "documents"), "doc_id", "text",
+      Dedup.simhashNearDups(Readers.table(s, dir, "documents"), "doc_id", "text",
         maxHamming = 2, maxBucketSize = Some(4096), bits = 16)
         .orderBy(col("a"), col("b"))),
 
@@ -307,7 +305,7 @@ object QueriesText {
     // duplicate-n-gram character fractions, all in-row (one map-side
     // projection, no explode/shuffle/window)
     "q103_repetition_battery" -> ((s, dir) =>
-      TA.repetitionSignals(tbl(s, dir, "documents"), "doc_id", "text")
+      TA.repetitionSignals(Readers.table(s, dir, "documents"), "doc_id", "text")
         .select(col("id").as("doc_id"), col("top2_cnt"), col("top3_cnt"),
           col("dup2_char_frac"), col("dup3_char_frac"), col("dup4_char_frac"))
         .orderBy(col("doc_id"))),
@@ -316,7 +314,7 @@ object QueriesText {
     // token boundaries (insertion-shift robust, unlike q83's fixed
     // stride); per-doc fraction of chunks appearing in other docs
     "q102_cdc_dedup" -> ((s, dir) =>
-      Dedup.cdcChunkDedup(tbl(s, dir, "documents"), "doc_id", "text",
+      Dedup.cdcChunkDedup(Readers.table(s, dir, "documents"), "doc_id", "text",
         boundaryHexFirst = 1)
         .select(col("id").as("doc_id"), col("n_chunks"), col("n_dup_chunks"),
           col("dup_ratio"))
@@ -326,7 +324,7 @@ object QueriesText {
     // aggregate → 1-row broadcast → codegen'd map-side tier assignment
     "q101_quality_tiers" -> ((s, dir) =>
       graft.operators.Sampling.quantileTiers(
-        tbl(s, dir, "documents")
+        Readers.table(s, dir, "documents")
           .select(col("doc_id"), col("n_chars").cast("long").as("n_chars")),
         col("n_chars"), 10)
         .select(col("doc_id"), col("n_chars"), col("tier"))
@@ -336,7 +334,7 @@ object QueriesText {
     // source) aggregation level in ONE pass — Spark's rollup is the
     // partial-aggregated GROUPING SETS plan, no per-level rescans
     "q87_dataset_card" -> ((s, dir) =>
-      tbl(s, dir, "documents")
+      Readers.table(s, dir, "documents")
         .rollup(col("lang"), col("source"))
         .agg(count(lit(1)).as("n_docs"),
           sum(TA.tokenCount(col("text"))).as("n_tokens"),
@@ -354,7 +352,7 @@ object QueriesText {
     // the corpus is scanned once and joins the vocab-sized count dict
     // broadcast-side, so it never shuffles by word
     "q88_bpe_encode" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Readers.table(s, dir, "documents")
       // merges-only trainer: the encode path re-segments through
       // bpeEncode anyway, so the trained vocab frame was never read —
       // bpeTrainMerges skips its materialization job and runs one job
@@ -373,7 +371,7 @@ object QueriesText {
     // scans twice map-side and never shuffles by token
     "q89_dsir" -> ((s, dir) =>
       graft.operators.Sampling.dsirLogRatio(
-        tbl(s, dir, "documents"), "doc_id", "text", col("lang") === "en")
+        Readers.table(s, dir, "documents"), "doc_id", "text", col("lang") === "en")
         .select(col("doc_id"), col("n_toks"),
           // + 0.0 kills IEEE -0.0 (q20 convention): a near-zero negative
           // sum rounds to -0.0, whose sign bit differs between engines
@@ -385,7 +383,7 @@ object QueriesText {
     // partial-aggregated groupBy + a 1-row normalizer broadcast
     "q90_temperature_mix" -> ((s, dir) =>
       graft.operators.Sampling.temperatureMix(
-        tbl(s, dir, "documents"), "lang", TA.tokenCount(col("text")),
+        Readers.table(s, dir, "documents"), "lang", TA.tokenCount(col("text")),
         alpha = 0.5, budgetTokens = 1000000L)
         .select(col("lang"), col("n_tokens"),
           round(col("p") + lit(1e-9), 6).as("p"),
@@ -398,7 +396,7 @@ object QueriesText {
     // cluster-side; per round one colocated join + one ≤256-row
     // partial-aggregated gradient
     "q91_quality_classifier" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Readers.table(s, dir, "documents")
       val pred = col("lang") === "en"
       val C = graft.operators.Classifier
       // ONE feature-extraction pass for train AND score: the joint
@@ -429,7 +427,7 @@ object QueriesText {
     // Rides the q88 train+encode; one extra broadcast-dict join + a
     // #langs-row rollup
     "q92_tokenizer_fertility" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Readers.table(s, dir, "documents")
       // merges-only trainer, sorted on the driver (see q88)
       val merges = TA.bpeTrainMerges(docs, "text", 6)
         .collect().sortBy(_.getLong(0))
@@ -449,7 +447,7 @@ object QueriesText {
     // the union, only cross-side pairs kept (the incremental-crawl /
     // train-eval-overlap shape; never |A|x|B|)
     "q96_cross_dedup" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Readers.table(s, dir, "documents")
       Dedup.crossCorpusNearDups(
         docs.filter(col("doc_id") % 2 === 0),
         docs.filter(col("doc_id") % 2 === 1),
@@ -463,7 +461,7 @@ object QueriesText {
     // charsequence scalar surface: ASCII-only case map, occurrence count,
     // affix tests (charsequence.h:844-1158)
     "q27_text_case" -> ((s, dir) =>
-      tbl(s, dir, "documents").select(
+      Readers.table(s, dir, "documents").select(
         col("doc_id"),
         TA.asciiUpper(substring(col("text"), 1, 40)).as("upper40"),
         TA.countOccurrences(col("text"), "the").as("n_the"),
@@ -473,7 +471,7 @@ object QueriesText {
 
     // token counting: whitespace + BPE-ish regex
     "q28_tokens" -> ((s, dir) =>
-      tbl(s, dir, "documents").select(
+      Readers.table(s, dir, "documents").select(
         col("doc_id"),
         TA.tokenCount(col("text")).as("n_tokens"),
         TA.tokenCountBpeish(col("text")).as("n_bpeish"),
@@ -482,7 +480,7 @@ object QueriesText {
 
     // language-ID heuristic + quality score (deterministic, SQL-mirrored)
     "q29_langid_quality" -> ((s, dir) =>
-      tbl(s, dir, "documents").select(
+      Readers.table(s, dir, "documents").select(
         col("doc_id"), col("lang"),
         TA.langId(col("text")).as("pred_lang"),
         TA.qualityScore(col("text")).as("quality"))
@@ -490,7 +488,7 @@ object QueriesText {
 
     // document fingerprinting: content + prefix-shingle hash
     "q30_fingerprints" -> ((s, dir) =>
-      tbl(s, dir, "documents").select(
+      Readers.table(s, dir, "documents").select(
         col("doc_id"),
         TA.fingerprint(col("text")).as("fp"),
         TA.prefixShingleFingerprint(col("text"), 8).as("prefix_fp"))
@@ -498,7 +496,7 @@ object QueriesText {
 
     // exact dedup: canonical min-id per identical text
     "q31_dedup_exact" -> ((s, dir) =>
-      Dedup.exact(tbl(s, dir, "documents"), "doc_id", "text")
+      Dedup.exact(Readers.table(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("id"))),
 
     // MinHash + LSH near-dup pairs, exact-Jaccard verified. The bucket
@@ -510,7 +508,7 @@ object QueriesText {
     // q32 deliberately does NOT ride the cached spine: it IS the minhash
     // benchmark, so its timed runs must pay the full pipeline
     "q32_minhash_pairs" -> ((s, dir) =>
-      Dedup.minhashNearDups(tbl(s, dir, "documents"), "doc_id", "text",
+      Dedup.minhashNearDups(Readers.table(s, dir, "documents"), "doc_id", "text",
         shingleWidth = 3, numHashes = 12, bands = 4, threshold = 0.2,
         maxBucketSize = Some(64))
         .select(col("a"), col("b"), round(col("jaccard"), 4).as("jaccard"))
@@ -534,7 +532,7 @@ object QueriesText {
     // training-data prep, via the distributed GROUPED prefix sum (no
     // per-language single-task window)
     "q66_token_budget_mix" -> ((s, dir) => {
-      val withTok = tbl(s, dir, "documents").select(
+      val withTok = Readers.table(s, dir, "documents").select(
         col("doc_id"), col("lang"),
         TA.tokenCount(col("text")).as("n_tokens"),
         md5(col("doc_id").cast("string")).as("k"))
@@ -548,13 +546,13 @@ object QueriesText {
 
     // 16-bit SimHash fingerprint per doc
     "q33_simhash" -> ((s, dir) =>
-      Dedup.simhash16(tbl(s, dir, "documents"), "doc_id", "text")
+      Dedup.simhash16(Readers.table(s, dir, "documents"), "doc_id", "text")
         .select(col("id"), col("simhash"))
         .orderBy(col("id"))),
 
     // vocabulary + document frequency + idf (tokenizer-training funnel)
     "q46_vocab" -> ((s, dir) =>
-      TA.vocabulary(tbl(s, dir, "documents"), "doc_id", "text")
+      TA.vocabulary(Readers.table(s, dir, "documents"), "doc_id", "text")
         .select(col("token"), col("occurrences"), col("doc_freq"),
           round(col("idf"), 4).as("idf"))
         .orderBy(col("occurrences").desc, col("token").asc)
@@ -566,7 +564,7 @@ object QueriesText {
     // (one scan), and exactCanonical's map-side min_by makes the dedup a
     // single digest-keyed shuffle — no join back to the scored scan.
     "q45_pipeline" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Readers.table(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("text"),
           TA.qualityScore(col("text")).as("quality"),
           TA.tokenCount(col("text")).as("n_tokens"))
@@ -584,7 +582,7 @@ object QueriesText {
     // deterministic epoch shuffle: reproducible corpus permutation
     "q57_epoch_shuffle" -> ((s, dir) =>
       graft.operators.Sampling.deterministicShuffle(
-        tbl(s, dir, "documents").select(col("doc_id")), "doc_id", seed = 3L)
+        Readers.table(s, dir, "documents").select(col("doc_id")), "doc_id", seed = 3L)
         .select(col("pos"), col("doc_id"))
         .orderBy(col("pos"))),
 
@@ -592,7 +590,7 @@ object QueriesText {
     // exclusive running total (bucketed prefix sums, no global window)
     "q56_packing" -> ((s, dir) =>
       TA.packChunks(
-        TA.chunkByTokens(tbl(s, dir, "documents"), "doc_id", "text", size = 64)
+        TA.chunkByTokens(Readers.table(s, dir, "documents"), "doc_id", "text", size = 64)
           .select(col("id"), col("chunk"), col("n_chunk_tokens")),
         "id", "chunk", "n_chunk_tokens", budget = 256)
         .select(col("id"), col("chunk"), col("cum_tokens"), col("bin"))
@@ -607,7 +605,7 @@ object QueriesText {
     // bloom-passing shingles (true hits + the fpp tail) reach the exact
     // semi join, so the result is bit-identical to the plain join
     "q77_bloom_decontaminate" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Readers.table(s, dir, "documents")
       val block = docs.filter(col("doc_id") % 25 === 0)
         .select(explode(Dedup.shingleArray(col("text"), 3)).as("shingle"))
         .distinct()
@@ -623,7 +621,7 @@ object QueriesText {
     }),
 
     "q55_contamination" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Readers.table(s, dir, "documents")
       val eval = docs.filter(col("doc_id") % 25 === 0)
         .select(col("doc_id"),
           array_join(slice(TA.tokens(col("text")), 1, 12), " ").as("text"))
@@ -636,7 +634,7 @@ object QueriesText {
     // document chunking: ≤64-token shards per doc (pre-tokenization
     // sharding before sequence packing) — map-side explode, no shuffle
     "q54_chunking" -> ((s, dir) =>
-      TA.chunkByTokens(tbl(s, dir, "documents"), "doc_id", "text", size = 64)
+      TA.chunkByTokens(Readers.table(s, dir, "documents"), "doc_id", "text", size = 64)
         .select(col("id"), col("chunk"), col("n_chunk_tokens"),
           substring(col("chunk_text"), 1, 40).as("head40"))
         .orderBy(col("id"), col("chunk"))),
@@ -644,7 +642,7 @@ object QueriesText {
     // deterministic stratified sample (training-mix reweighting): keep
     // 50% en, 25% de, 10% everything else — md5-keyed, map-side only
     "q53_stratified_sample" -> ((s, dir) =>
-      graft.operators.Sampling.stratified(tbl(s, dir, "documents"),
+      graft.operators.Sampling.stratified(Readers.table(s, dir, "documents"),
         "doc_id", "lang", Map("en" -> 0.5, "de" -> 0.25),
         defaultFraction = 0.1, seed = 7L)
         .select(col("doc_id"), col("lang"))
@@ -656,7 +654,7 @@ object QueriesText {
     // ln/mean. Model derived model-side, one 1:1 doc↔model join, no
     // windows; the Zipf-skewed join key is AQE skew-join territory.
     "q79_lm_quality" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
+      val docs = Readers.table(s, dir, "documents")
       TA.lmCrossEntropy(docs, docs, "doc_id", "text")
         .select(col("id").as("doc_id"), col("n_bigrams"),
           round(col("cross_entropy") + lit(1e-9), 4).as("cross_entropy"))
@@ -668,7 +666,7 @@ object QueriesText {
     // never a vocabulary-wide shuffle-and-sort. hh_guaranteed reports
     // the n/(k+1) exactness check from the data itself.
     "q82_heavy_hitters" -> ((s, dir) => {
-      val toks = tbl(s, dir, "documents")
+      val toks = Readers.table(s, dir, "documents")
         .select(explode(TA.tokens(col("text"))).as("tok"))
       TA.heavyHitters(toks, col("tok"), h = 10, k = 500)
         .orderBy(col("rank"))
@@ -676,14 +674,14 @@ object QueriesText {
 
     // corpus bigram counts (the BPE-trainer merge statistic): top pairs
     "q52_bigrams" -> ((s, dir) =>
-      TA.bigramCounts(tbl(s, dir, "documents"), "text")
+      TA.bigramCounts(Readers.table(s, dir, "documents"), "text")
         .orderBy(col("n").desc, col("bigram").asc)
         .limit(50)),
 
     // repetition-ratio quality signal: duplicated-trigram fraction per doc
     // (map-side only — one projection, no shuffle before the sort)
     "q50_repetition" -> ((s, dir) =>
-      tbl(s, dir, "documents").select(
+      Readers.table(s, dir, "documents").select(
         col("doc_id"),
         size(Dedup.shingleArray(col("text"), 3)).cast("long").as("n_grams"),
         round(TA.repetitionRatio(col("text"), 3) + lit(1e-9), 4).as("rep_ratio"))
@@ -692,7 +690,8 @@ object QueriesText {
     // multimodal plumbing: binary payload → stub-decoded metadata
     "q34_multimodal_meta" -> ((s, dir) =>
       Multimodal.extractMeta(
-        tbl(s, dir, "documents").select(col("doc_id"), col("text").cast("binary").as("payload")),
+        Readers.table(s, dir, "documents")
+          .select(col("doc_id"), col("text").cast("binary").as("payload")),
         "doc_id", "payload")
         .toDF().orderBy(col("id"))),
 
@@ -754,7 +753,7 @@ object QueriesText {
     // order by construction).
     "q75_cap_per_group" -> ((s, dir) =>
       graft.operators.Sampling.capPerGroup(
-        tbl(s, dir, "documents"), "source", "doc_id", n = 5, seed = 7L)
+        Readers.table(s, dir, "documents"), "source", "doc_id", n = 5, seed = 7L)
         .orderBy(col("source"), col("pick"))),
 
     // top-FRACTION per group (keep the best 20% per language): the
@@ -764,7 +763,7 @@ object QueriesText {
     // Window.partitionBy(lang). Oracle = the classic windowed rank.
     "q78_top_fraction" -> ((s, dir) =>
       graft.operators.Sampling.topFractionPerGroup(
-        tbl(s, dir, "documents").select(col("doc_id"), col("lang"), col("n_chars")),
+        Readers.table(s, dir, "documents").select(col("doc_id"), col("lang"), col("n_chars")),
         "lang", "n_chars", "doc_id", frac = 0.2)
         .orderBy(col("doc_id"))),
 
@@ -774,7 +773,7 @@ object QueriesText {
     // oracle is the classic row_number window — proving the window-free
     // plan is bit-identical to the form it replaces at scale.
     "q74_topk_per_group" -> ((s, dir) => {
-      val scored = tbl(s, dir, "documents").select(col("lang"), col("doc_id"),
+      val scored = Readers.table(s, dir, "documents").select(col("lang"), col("doc_id"),
         TA.qualityScore(col("text")).as("quality"))
       graft.operators.Similarity.topKPerGroup(scored, "lang", "quality", "doc_id", 3)
         .orderBy(col("lang"), col("rank"))
@@ -793,7 +792,7 @@ object QueriesText {
       // U+00C5 — NFC demonstrably changes bytes in every row
       val aug = concat(col("text"), lit(" cafe\u0301 \u212B"))
       val norm = TA.normalizeUnicode(aug, "NFC")
-      tbl(s, dir, "documents").select(
+      Readers.table(s, dir, "documents").select(
         col("doc_id"),
         md5(norm).as("norm_md5"),
         octet_length(aug).cast("long").as("pre_bytes"),
@@ -899,7 +898,7 @@ object QueriesText {
         card15, last.cast("string"), lit(" ref 4111-1111-1111-1111 end"))
       val cands = regexp_extract_all(aug, lit(TA.cardPattern), lit(0))
       val red = TA.redactPiiDeep(aug)
-      tbl(s, dir, "documents").select(
+      Readers.table(s, dir, "documents").select(
         col("doc_id"),
         size(regexp_extract_all(aug, lit(TA.ssnPattern), lit(0))).cast("long").as("n_ssn"),
         size(cands).cast("long").as("n_cards"),
@@ -921,7 +920,7 @@ object QueriesText {
         (col("doc_id") % 100).cast("string"),
         lit(" tel 555-867-5309"))
       val red = TA.redactPii(aug)
-      tbl(s, dir, "documents").select(
+      Readers.table(s, dir, "documents").select(
         col("doc_id"),
         TA.piiCounts(aug).as("pii"),
         md5(red).as("redacted_md5"),

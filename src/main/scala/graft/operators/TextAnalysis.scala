@@ -17,7 +17,6 @@ object TextAnalysis {
   /** ASCII-only case mapping (charsequence.h:1120-1158: a-z/A-Z ±32 only,
     * non-ASCII untouched — full-Unicode upper()/lower() would diverge). */
   def asciiUpper(c: Column): Column = translate(c, lower, upper)
-  def asciiLower(c: Column): Column = translate(c, upper, lower)
 
   /** Unicode normalization (NFC/NFD/NFKC/NFKD) via the native codegen'd
     * [[graft.functions.UnicodeNormalize]] expression — the text
@@ -77,10 +76,6 @@ object TextAnalysis {
   // (same-JVM interleaved A/B, OPTIMIZATION_r19.md §8)
   def alphaRatio(c: Column): Column =
     length(regexp_replace(c, "[^a-zA-Z]", "")).cast("double") /
-      greatest(length(c), lit(1)).cast("double")
-
-  def spaceRatio(c: Column): Column =
-    (length(c) - length(regexp_replace(c, s"[$asciiWs]", ""))).cast("double") /
       greatest(length(c), lit(1)).cast("double")
 
   def stopwordRatio(c: Column): Column = {

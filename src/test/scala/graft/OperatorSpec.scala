@@ -1,11 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.core.Terminals._
 import graft.functions.CharSeq
-import graft.operators.{Multimodal, Similarity}
+import graft.operators.{Dedup, Multimodal, Similarity}
 
 /** Specs for grouping/window stream methods, distribution, gradient,
   * encode/decode, multimodal plumbing, and bucketed ANN. */
@@ -2091,6 +2092,151 @@ class OperatorSpec extends AnyFunSuite {
     assert(pairs.length == 28) // C(8,2)
     assert(pairs.forall(r => r.getAs[Long]("a") < 8 && r.getAs[Long]("b") < 8))
     assert(pairs.forall(_.getAs[Double]("jaccard") == 1.0))
+  }
+
+  // --- near-dup verify vs the exploded-shingle reference ----------------
+
+  /** The earlier verify, kept as the value reference: one (id, shingle)
+    * row per distinct shingle, the intersection counted from two shingle
+    * joins and an (a, b) aggregate, and the set sizes from a per-id
+    * aggregate. Pairs that share no shingle drop out of the inner join;
+    * rows that share an id merge into one shingle set. */
+  private def explodedJaccard(candidates: DataFrame, shingles: DataFrame): DataFrame = {
+    val sizes = shingles.groupBy(col("id")).agg(count(lit(1)).as("sz"))
+    val sa = shingles.select(col("id").as("a"), col("shingle"))
+    val sb = shingles.select(col("id").as("b"), col("shingle"))
+    val inter = candidates.join(sa, "a").join(sb, Seq("b", "shingle"))
+      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("inter"))
+    inter
+      .join(sizes.withColumnRenamed("id", "a").withColumnRenamed("sz", "sza"), "a")
+      .join(sizes.withColumnRenamed("id", "b").withColumnRenamed("sz", "szb"), "b")
+      .select(col("a"), col("b"),
+        (col("inter").cast("double") /
+          (col("sza") + col("szb") - col("inter")).cast("double")).as("jaccard"))
+  }
+
+  private def explodedShingles(df: DataFrame, idCol: String, textCol: String,
+                               w: Int): DataFrame =
+    df.select(col(idCol).as("id"),
+      explode(Dedup.shingleArray(col(textCol), w)).as("shingle")).distinct()
+
+  /** The earlier minhashNearDups verify: candidate ids (union + distinct),
+    * the docs left-semi-joined to them, their exploded shingles, then
+    * [[explodedJaccard]]. */
+  private def explodedNearDups(df: DataFrame, idCol: String, textCol: String,
+                               w: Int, threshold: Double,
+                               cap: Option[Int]): DataFrame = {
+    val sig = Dedup.minhashSignature(df, idCol, textCol, w, 12)
+    val cand = Dedup.lshCandidates(Dedup.lshBands(sig, 4, 3), cap)
+    val candIds = cand.select(col("a").as("id"))
+      .union(cand.select(col("b").as("id"))).distinct()
+    val candDocs = df.join(candIds.withColumnRenamed("id", idCol),
+      Seq(idCol), "left_semi")
+    explodedJaccard(cand, explodedShingles(candDocs, idCol, textCol, w))
+      .filter(col("jaccard") >= threshold)
+  }
+
+  /** (a, b, raw bits of jaccard), sorted: equality is bit-level. */
+  private def pairBits(df: DataFrame): Seq[(Long, Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).sorted.toSeq
+
+  /** Empty, null, single-token, mixed-whitespace and repeated-shingle
+    * texts, with near-duplicates among them. */
+  private lazy val edgeDocs = Seq[(Long, String)](
+    (1L, ""), (2L, null), (3L, "solo"), (4L, "solo"),
+    (5L, "a b\tc\nd\u000Be\ff\r g"), (6L, "a b c d e f g"),
+    (7L, "x y x y x y x y"), (8L, "x y x y x y"), (9L, "  a  b c d e f g  "),
+    (10L, "p q r s t u v w"), (11L, "p q r s t u v x"), (12L, "\t\t"),
+    (13L, "x y x y x y x y x y")).toDF("doc_id", "text")
+
+  /** The oracle fixture's 500 documents. */
+  private lazy val sf001Docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+
+  test("minhashNearDups == the exploded-shingle reference: bit-equal pairs over w, threshold and cap") {
+    for ((name, df) <- Seq("sf0.01" -> sf001Docs, "edge" -> edgeDocs);
+         w <- Seq(1, 3); cap <- Seq(None, Some(64))) {
+      // the reference at threshold 0 once; each threshold is its filter
+      val ref = pairBits(explodedNearDups(df, "doc_id", "text", w, 0.0, cap))
+      assert(ref.nonEmpty, s"$name w=$w cap=$cap: no pairs to compare")
+      for (t <- Seq(0.0, 0.2, 0.7)) {
+        val got = pairBits(Dedup.minhashNearDups(df, "doc_id", "text",
+          shingleWidth = w, numHashes = 12, bands = 4, threshold = t,
+          maxBucketSize = cap))
+        val want = ref.filter(p => java.lang.Double.longBitsToDouble(p._3) >= t)
+        assert(got == want, s"$name w=$w threshold=$t cap=$cap: " +
+          s"${got.size} pairs vs ${want.size}; first diff " +
+          (got.diff(want) ++ want.diff(got)).take(3))
+      }
+    }
+  }
+
+  test("jaccard == the exploded-shingle reference on all edge-frame pairs") {
+    // every pair of the edge frame, disjoint and null/empty texts
+    // included: pairs sharing no shingle are dropped on both sides
+    val ids = edgeDocs.select(col("doc_id"))
+    val cands = ids.as("l").join(ids.as("r"), col("l.doc_id") < col("r.doc_id"))
+      .select(col("l.doc_id").as("a"), col("r.doc_id").as("b"))
+    for (w <- Seq(1, 3)) {
+      val got = pairBits(Dedup.jaccard(cands, edgeDocs, "doc_id", "text", w))
+      val want = pairBits(explodedJaccard(cands,
+        explodedShingles(edgeDocs, "doc_id", "text", w)))
+      assert(got == want, s"w=$w")
+      assert(got.nonEmpty && got.size < 78, s"w=$w: ${got.size} of 78 pairs")
+    }
+  }
+
+  test("crossCorpusNearDups == the exploded-shingle reference on packed ids") {
+    val a = sf001Docs.filter(col("doc_id") % 2 === 0)
+    val b = sf001Docs.filter(col("doc_id") % 2 === 1)
+    def packed(df: DataFrame, side: Int) =
+      df.select((col("doc_id") * 2 + side).as("__xid"), col("text").as("__xtext"))
+    for (w <- Seq(1, 3); cap <- Seq(None, Some(64))) {
+      val side = pmod(col("a"), lit(2))
+      val want = pairBits(explodedNearDups(packed(a, 0).unionByName(packed(b, 1)),
+          "__xid", "__xtext", w, 0.2, cap)
+        .filter(side =!= pmod(col("b"), lit(2)))
+        .select(
+          shiftright(when(side === 0, col("a")).otherwise(col("b")), 1),
+          shiftright(when(side === 0, col("b")).otherwise(col("a")), 1),
+          col("jaccard")))
+      val got = pairBits(Dedup.crossCorpusNearDups(a, b, "doc_id", "text",
+        shingleWidth = w, threshold = 0.2, maxBucketSize = cap))
+      assert(want.nonEmpty, s"w=$w cap=$cap: no pairs to compare")
+      assert(got == want, s"w=$w cap=$cap")
+    }
+  }
+
+  test("jaccard: idCol is a key; rows sharing an id are verified one by one") {
+    // id 1 has two rows; each is verified against doc 2 with its own
+    // text. The exploded form merged them into one shingle set instead.
+    val x = "one two three four five six"
+    val y = "one two three four seven eight"
+    val docs = Seq((1L, x), (1L, y), (2L, x)).toDF("doc_id", "text")
+    val cands = Seq((1L, 2L)).toDF("a", "b")
+    val got = Dedup.jaccard(cands, docs, "doc_id", "text", 3).collect()
+      .map(_.getDouble(2)).sorted.toSeq
+    // x vs x: 4/4; y vs x: {one two three, two three four} of 4 + 4 - 2
+    assert(got == Seq(2.0 / 6.0, 1.0))
+    val merged = explodedJaccard(cands, explodedShingles(docs, "doc_id", "text", 3))
+      .collect().map(_.getDouble(2)).toSeq
+    assert(merged == Seq(4.0 / 6.0)) // |x ∪ y| = 6 shingles, 4 shared with x
+  }
+
+  test("minhashNearDups: one lazy plan, 6 Spark jobs per collect") {
+    // AQE runs each exchange as its own job. On this fixture the
+    // exploded verify, with its two lazy checkpoints, ran 13 jobs
+    val t = "the quick brown fox jumps over the lazy dog again and again"
+    val docs = Seq((1L, t), (2L, t), (3L, "completely different words here now ok"),
+      (4L, t + " plus a tail"), (5L, "unrelated corpus text that matches nothing"))
+      .toDF("doc_id", "text")
+    var rows = 0
+    val jobs = org.apache.spark.sql.GraftTestShim.jobsDuring(spark.sparkContext) {
+      rows = Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.2,
+        maxBucketSize = Some(64)).collect().length
+    }
+    assert(rows == 3)
+    assert(jobs <= 6, s"$jobs jobs")
   }
 
   test("ivfTopKProbed: nprobe=1 ≡ ivfTopK; nprobe=nlist ≡ brute force") {

@@ -109,23 +109,8 @@ class PipelineOpsSpec extends AnyFunSuite {
     r.foreach(x => assert(math.abs(x.getDouble(1) - 1.0 / 3) < 1e-12))
   }
 
-  /** Spark jobs started while `f` runs, AQE stage jobs included. */
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    org.apache.spark.sql.GraftTestShim.drainListeners(sc)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try f finally {
-      org.apache.spark.sql.GraftTestShim.drainListeners(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
+  private def jobsDuring(f: => Unit): Int =
+    org.apache.spark.sql.GraftTestShim.jobsDuring(spark.sparkContext)(f)
 
   /** The earlier round formulation, kept as the value reference: the
     * contribution aggregate on dst, then the no-in-edge constant

@@ -93,13 +93,12 @@ class StressSpec extends AnyFunSuite {
 
   test("jaccard verify: one hub doc in 5k candidate pairs stays bounded and exact", SlowStress) {
     failAfter(Span(900, Seconds)) {
-      // even with capped banding, the candidate→shingle join can skew on
-      // a hot doc id: here doc 0 sits in EVERY candidate pair, so the
-      // a-side join fans its 198-shingle set out 5000× (~1M rows under
-      // one join key). The plan must stay a hash/sort-merge join + one
-      // (a,b) aggregation — a quadratic or single-partition-collapse
-      // plan blows the bound — and every pair's Jaccard must come out
-      // exact, hot key or not.
+      // even with capped banding, a hot doc id can skew the verify: here
+      // doc 0 sits in EVERY candidate pair, so the a-side id join fans
+      // its 200-token text out 5000× and each pair shingles it again.
+      // The per-pair verify must stay linear in the pairs — a quadratic
+      // or single-partition-collapse plan blows the bound — and every
+      // pair's Jaccard must come out exact, hot key or not.
       import graft.operators.Dedup
       val nSpokes = 5000
       val hubTokens = (0 until 200).map(i => s"w$i")
@@ -108,10 +107,8 @@ class StressSpec extends AnyFunSuite {
           (hubTokens.take(100) ++ (100 until 200).map(j => s"u${i}_$j")).mkString(" "))
       }
       val df = docs.toDF("id", "text").repartition(32)
-      val shingles = df.select(col("id"),
-        explode(Dedup.shingleArray(col("text"), 3)).as("shingle")).distinct()
       val cands = (1 to nSpokes).map(i => (0L, i.toLong)).toDF("a", "b")
-      val out = Dedup.jaccard(cands, shingles).collect()
+      val out = Dedup.jaccard(cands, df, "id", "text", 3).collect()
       assert(out.length == nSpokes)
       // 200 tokens → 198 shingles per doc; shared 100-token prefix →
       // windows 0..97 shared → |∩| = 98, so J = 98 / (198+198-98)

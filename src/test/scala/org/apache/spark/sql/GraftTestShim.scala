@@ -16,7 +16,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   *     a spec can exercise the reliable-checkpoint mode and restore the
   *     shared session for the suites that follow.
   *   - [[drainListeners]] blocks until every posted scheduler event has
-  *     reached the listeners, so a spec can count a call's jobs. */
+  *     reached the listeners; [[jobsDuring]] uses it to count a call's
+  *     jobs. */
 object GraftTestShim {
 
   /** Simulate executor loss for a localCheckpoint()ed Dataset: drop its
@@ -41,4 +42,21 @@ object GraftTestShim {
   /** Wait until the listener bus has delivered every posted event. */
   def drainListeners(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** Spark jobs started while `f` runs, AQE stage jobs included. */
+  def jobsDuring(sc: SparkContext)(f: => Unit): Int = {
+    drainListeners(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try f finally {
+      drainListeners(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
 }
