@@ -409,17 +409,15 @@ object QueriesText {
       // repartition alternative measured 25× worse task time). The
       // scored result is materialized eagerly so the feature blocks can
       // be freed instead of pinned for the session.
-      val full = C.fullFeatures(docs, "doc_id", "text", pred)
-        .ckpt()
+      val own = new graft.core.Ckpt.Owner
+      val full = own(C.fullFeatures(docs, "doc_id", "text", pred)
+        .ckpt())
       val n = docs.count().toDouble
       val (w, b) = C.logisticTrainOnFeatures(full, "doc_id", n, iters = 5, lr = 0.5)
-      val out = C.logisticScore(docs, "doc_id", pred, full, w, b)
+      own.output(C.logisticScore(docs, "doc_id", pred, full, w, b)
         .select(col("doc_id"), col("y"),
           round(col("p") + lit(1e-9), 4).as("p"))
-        .orderBy(col("doc_id"))
-        .ckpt()
-      org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint(full)
-      out
+        .orderBy(col("doc_id")))
     }),
 
     // tokenizer fertility: chars per BPE token by language — the

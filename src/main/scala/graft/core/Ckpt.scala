@@ -22,7 +22,9 @@ import org.apache.spark.sql.DataFrame
   *
   * [[org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint]] stays
   * the matching release call for both modes (reliable-checkpoint scans
-  * hold no storage blocks, so it degrades to a no-op). */
+  * hold no storage blocks, so it degrades to a no-op); an operator
+  * calls it through its [[Owner]]. [[rounds]] is the operators' one
+  * round loop. */
 object Ckpt {
   def apply(df: DataFrame, eager: Boolean = true): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
@@ -44,6 +46,50 @@ object Ckpt {
       df.checkpoint(eager)
     else df.localCheckpoint(eager,
       org.apache.spark.storage.StorageLevel.DISK_ONLY)
+
+  /** The round loop of every iterative operator: from `init`, run
+    * `step(state, round)` (rounds count from 0) until it reports
+    * convergence (the second half of its result) or `max` rounds have
+    * run. Returns (state, rounds run, converged). Control flow only:
+    * every action and checkpoint is the step's own. */
+  def rounds[S](init: S, max: Int)(step: (S, Int) => (S, Boolean)): (S, Int, Boolean) = {
+    var (s, r, converged) = (init, 0, false)
+    while (!converged && r < max) {
+      val (next, c) = step(s, r)
+      s = next; converged = c; r += 1
+    }
+    (s, r, converged)
+  }
+
+  /** The checkpoints one operator call makes, and when each is freed.
+    * A LAZY checkpoint's blocks are the only copy of its rows (lineage
+    * is truncated), so a frame may be freed only once nothing
+    * unmaterialized still reads it:
+    *   - [[apply]] takes a frame the call checkpointed;
+    *   - [[retire]] marks one as superseded, and the next [[after]]
+    *     frees it once its action has materialized the successor;
+    *   - on exit, [[output]] eagerly checkpoints the returned frame and
+    *     then frees every other frame, and [[close]] frees every frame
+    *     but the ones the returned value still reads.
+    * The owner itself runs no Spark action beyond [[output]]'s eager
+    * checkpoint. */
+  final class Owner {
+    private var held, retired = Vector.empty[DataFrame]
+    def apply(df: DataFrame): DataFrame = { held :+= df; df }
+    def retire(df: DataFrame): Unit = { held = held.filterNot(_ eq df); retired :+= df }
+    def after[T](action: => T): T = {
+      val t = action
+      free(retired); retired = Vector.empty
+      t
+    }
+    def output(out: DataFrame): DataFrame = { val o = Ckpt(out); close(); o }
+    def close(keep: DataFrame*): Unit = {
+      free((retired ++ held).filterNot(f => keep.exists(_ eq f)))
+      held = Vector.empty; retired = Vector.empty
+    }
+    private def free(frames: Seq[DataFrame]): Unit =
+      frames.foreach(org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint)
+  }
 
   /** Call-site syntax: `df.ckpt()` / `df.ckpt(eager = false)` /
     * `df.ckptSpill()`. */

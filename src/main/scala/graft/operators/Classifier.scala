@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Ckpt
 import graft.core.Ckpt.CkptOps
 
 /** Fasttext-style quality-classifier training and scoring — the
@@ -99,14 +100,15 @@ object Classifier {
     // one joint (w, bias) vector means each round is ONE colocated
     // join + ONE ≤257-row partial-aggregated gradient — no separate
     // bias pass, no second evaluation of the probability frame.
-    val full = fullFeatures(docs, idCol, textCol, labelPred)
-      .ckpt()
+    val own = new Ckpt.Owner
+    val full = own(fullFeatures(docs, idCol, textCol, labelPred)
+      .ckpt())
     val n = docs.count().toDouble
-    val (w, b) = logisticTrainOnFeatures(full, idCol, n, iters, lr)
+    val model = logisticTrainOnFeatures(full, idCol, n, iters, lr)
     // the model is the return value — the feature checkpoint has no
     // downstream consumers and must not stay pinned for the session
-    org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint(full)
-    (w, b)
+    own.close()
+    model
   }
 
   /** The GD loop of [[logisticTrain]] over a caller-provided (and
@@ -118,9 +120,7 @@ object Classifier {
     require(iters >= 0, "iters must be non-negative")
     val spark = full.sparkSession
     import spark.implicits._
-    val w = Array.fill(257)(0.0)
-    var it = 0
-    while (it < iters && n > 0) {
+    val (w, _, _) = Ckpt.rounds(Array.fill(257)(0.0), if (n > 0) iters else 0) { (w, _) =>
       val wDf = w.zipWithIndex.map { case (v, i) => (i, v) }.toSeq
         .toDF("__wbk", "__wv")
       // NOTE (r20, claim DROPPED with evidence): the r19 hope that the
@@ -146,9 +146,7 @@ object Classifier {
         .groupBy(col("bk"))
         .agg((sum((col("__pp") - col("__py")) * col("x")) / n).as("g"))
         .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-      var i = 0
-      while (i < 257) { w(i) -= lr * grad.getOrElse(i, 0.0); i += 1 }
-      it += 1
+      (Array.tabulate(257)(i => w(i) - lr * grad.getOrElse(i, 0.0)), false)
     }
     (w.take(256), w(256))
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Ckpt
 import graft.core.Ckpt.CkptOps
 
 /** Deduplication for training-data pipelines. Each flavor is a standalone
@@ -389,7 +390,10 @@ object Dedup {
     * Each round is localCheckpoint-ed: lineage stays bounded — the plan
     * never grows with iteration count — and each round's join is
     * re-planned by AQE on the REAL propagated sizes. Only nodes that
-    * appear in some edge are returned. */
+    * appear in some edge are returned; an edge with a null endpoint is
+    * dropped and names no node (the [[Graph.pageRank]] contract). The
+    * returned labels read the final round's checkpoint, which the call
+    * has materialized; every other block it made is freed. */
   def connectedComponents(edges: DataFrame, aCol: String = "a",
                           bCol: String = "b", maxRounds: Int = 25): DataFrame =
     connectedComponentsWithStats(edges, aCol, bCol, maxRounds)._1
@@ -403,9 +407,21 @@ object Dedup {
   def connectedComponentsWithStats(edges: DataFrame, aCol: String = "a",
                                    bCol: String = "b",
                                    maxRounds: Int = 25): (DataFrame, Int, Boolean) = {
-    // maxRounds == 0 would skip the loop, unpersist the never-
-    // materialized lazy checkpoints below, and return a labels frame
-    // whose lineage-truncated blocks are already freed (r19 ADVICE)
+    val own = new Ckpt.Owner
+    val (last, rounds, converged) = components(own, edges, aCol, bCol, maxRounds)
+    own.close(last)
+    (last.select(col("id"), col("label")), rounds, converged)
+  }
+
+  /** The rounds of [[connectedComponentsWithStats]], with `own` holding
+    * its checkpoints. Returns the final round's checkpoint itself (id,
+    * label, prev), materialized by the round's convergence count: a
+    * caller frees it through `own` once its output no longer reads it. */
+  private[operators] def components(own: Ckpt.Owner, edges: DataFrame,
+                                    aCol: String, bCol: String,
+                                    maxRounds: Int): (DataFrame, Int, Boolean) = {
+    // maxRounds == 0 would skip the loop and return labels whose lazy
+    // checkpoint no action ever materialized (r19 ADVICE)
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     // materialize the symmetrized edge list ONCE: it re-enters every
     // round's join, and without the checkpoint each round would re-run
@@ -420,23 +436,20 @@ object Dedup {
     // convergence-count job together with the initial labels — the
     // eager form paid two extra driver jobs per call before any round
     // ran. Under AQE a lazy checkpoint still runs its shuffle map stages
-    // (labelsCkpt's groupBy exchange) at call time: only the result
-    // stage is deferred. The blocks bound lineage exactly as before
-    // once materialized, and every unpersist below runs strictly after
-    // the materializing count.
-    val sym = edges.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .union(edges.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
-      .ckpt(false)
-    // labelsCkpt is ALWAYS the checkpointed frame itself (plan root =
-    // LogicalRDD) — unpersistCheckpoint deliberately frees only root
-    // checkpoints, so a derived projection must never be what we free
-    var labelsCkpt = sym.groupBy(col("src")).agg(min(col("dst")).as("nmin"))
+    // (the initial labels' groupBy exchange) at call time: only the
+    // result stage is deferred. Edges with a null endpoint are dropped
+    // before it.
+    val e = edges.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull)
+    val sym = own(e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+      .ckpt(false))
+    // each round's state is the checkpointed frame itself (plan root =
+    // LogicalRDD) — unpersistCheckpoint frees only root checkpoints
+    val init = own(sym.groupBy(col("src")).agg(min(col("dst")).as("nmin"))
       .select(col("src").as("id"), least(col("src"), col("nmin")).as("label"))
-      .ckpt(false)
-    var labels = labelsCkpt
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
+      .ckpt(false))
+    Ckpt.rounds(init, maxRounds) { (labelsCkpt, _) =>
+      val labels = labelsCkpt.select(col("id"), col("label"))
       val prop = sym.join(labels.select(col("id").as("dst"), col("label")), "dst")
         .groupBy(col("src")).agg(min(col("label")).as("nlabel"))
       val neigh = labels.join(prop.select(col("src").as("id"), col("nlabel")), Seq("id"), "left")
@@ -447,26 +460,18 @@ object Dedup {
       // below is what materializes the checkpoint blocks, so each round
       // costs a single job (an eager checkpoint followed by a separate
       // isEmpty scan was two)
-      val next = neigh.join(
+      val next = own(neigh.join(
           labels.select(col("id").as("jid"), col("label").as("jlabel")),
           neigh("nl") === col("jid"), "left")
         .select(neigh("id"),
           least(col("nl"), coalesce(col("jlabel"), col("nl"))).as("label"),
           col("prev"))
-        .ckpt(false)
-      converged = next.filter(col("label") < col("prev")).count() == 0
-      // the count materialized `next` — the previous round's label
-      // blocks are superseded; free them instead of pinning every
-      // round's copy for the session (long-lived-session leak class)
-      org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint(labelsCkpt)
-      labelsCkpt = next
-      labels = next.select(col("id"), col("label"))
-      round += 1
+        .ckpt(false))
+      // the count materializes `next`: the previous round's label blocks
+      // are superseded and freed instead of pinned for the session
+      own.retire(labelsCkpt)
+      (next, own.after(next.filter(col("label") < col("prev")).count() == 0))
     }
-    // sym is dead once the loop exits — the returned labels reference
-    // only the final round's checkpoint
-    org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint(sym)
-    (labels, round, converged)
   }
 
   /** Content-defined chunking (CDC) dedup report: split each doc into

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Ckpt
 import graft.core.Ckpt.CkptOps
 
 /** Link-graph analytics for corpus curation. Web-scale training-data
@@ -69,20 +70,17 @@ object Graph {
       }
       ok(srcCol) && ok(dstCol)
     }
-    if (integral) {
-      val (ranks, working) = rankRounds(edges.select(
+    // Both paths end in ONE eager checkpoint of the (node, rank)-sized
+    // result, then free every working block. Without it the returned
+    // lazy chain re-runs all `iters` joins on EVERY caller action, and
+    // the working blocks stay pinned for the session (the long-lived-
+    // session leak class: a hundred queries of leaked spines eventually
+    // evict each other into disk thrash).
+    val own = new Ckpt.Owner
+    if (integral)
+      return own.output(rankRounds(own, edges.select(
         col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")),
-        iters, damping, checkpointEvery)
-      // ONE eager checkpoint of the (node, rank)-sized result, then free
-      // every working block. Without it the returned lazy chain re-runs
-      // all `iters` joins on EVERY caller action, and the working blocks
-      // stay pinned for the session (the long-lived-session leak class:
-      // a hundred queries of leaked spines eventually evict each other
-      // into disk thrash).
-      val out = ranks.ckpt()
-      working.foreach(org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint)
-      return out
-    }
+        iters, damping, checkpointEvery))
     // ONE eager materialization of the caller's upstream: dict and the
     // relabel both read the edge list, and without this checkpoint each
     // build job recomputes the whole upstream subtree (measured 2-3
@@ -92,12 +90,12 @@ object Graph {
     // corpus-sized string block in the memory pool squeezed execution
     // memory to zero at ×100 on the 8 GB rig (UNABLE_TO_ACQUIRE_MEMORY
     // in the build aggregation) — on disk it is read twice and competes
-    // with nothing. Freed with the other working blocks below; the
-    // per-ROUND state stays on the compact dense-long spine regardless
-    // (SCALE.md §3.5).
-    val eStr = edges.select(col(srcCol).cast("string").as("src"),
+    // with nothing. Freed with the other working blocks; the per-ROUND
+    // state stays on the compact dense-long spine regardless (SCALE.md
+    // §3.5).
+    val eStr = own(edges.select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"))
-      .ckptSpill()
+      .ckptSpill())
     // RELABEL to dense longs before iterating — the standard engine move
     // (GraphX, GraphFrames, every native graph engine run on integer
     // vertex ids). The spine re-enters every round's join and lives in
@@ -110,33 +108,27 @@ object Graph {
     // via-count localCheckpoint before anything reads it — downstream
     // determinism comes from the materialized blocks, and the public
     // output maps back to the caller's ids regardless.
-    val dict = eStr.select(col("src").as("name"))
+    val dict = own(eStr.select(col("src").as("name"))
       .union(eStr.select(col("dst").as("name")))
       .distinct()
       .select(col("name"), monotonically_increasing_id().as("nid"))
-      .ckpt(false)
+      .ckpt(false))
     dict.count() // materializes (freezes) dict before either join reads it
     val e = eStr
       .join(dict.select(col("name").as("src"), col("nid").as("srcId")), "src")
       .join(dict.select(col("name").as("dst"), col("nid").as("dstId")), "dst")
       .select(col("srcId").as("src"), col("dstId").as("dst"))
-    val (ranks, working) = rankRounds(e, iters, damping, checkpointEvery)
-    // ONE eager checkpoint of the (node, rank)-sized result, mapped back
-    // to the CALLER's node ids, then every working block is freed
-    val out = ranks.join(dict, ranks("id") === dict("nid"))
-      .select(col("name").as("id"), col("rank"))
-      .ckpt()
-    (Seq(eStr, dict) ++ working).foreach(
-      org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint)
-    out
+    val ranks = rankRounds(own, e, iters, damping, checkpointEvery)
+    // the output maps back to the CALLER's node ids
+    own.output(ranks.join(dict, ranks("id") === dict("nid"))
+      .select(col("name").as("id"), col("rank")))
   }
 
   /** The set-up and rank rounds of [[pageRank]] over a long edge list
     * `edges` (src, dst; duplicates allowed). Returns the LAZY (id, rank)
-    * frame and the working checkpoints the caller frees once it has
-    * materialized its output. */
-  private def rankRounds(edges: DataFrame, iters: Int, damping: Double,
-                         checkpointEvery: Int): (DataFrame, Seq[DataFrame]) = {
+    * frame; its working checkpoints go to `own`. */
+  private def rankRounds(own: Ckpt.Owner, edges: DataFrame, iters: Int,
+                         damping: Double, checkpointEvery: Int): DataFrame = {
     // SET-UP FROM ONE EXCHANGE. repartition(src) hash-partitions the
     // edges; hash(src) satisfies both the distinct's (src, dst)
     // clustering and the out-degree window's src clustering, so neither
@@ -155,18 +147,18 @@ object Graph {
     // exchange (the last round's plan differed by one and wrote its own).
     val parts = math.max(1,
       edges.sparkSession.sessionState.conf.numShufflePartitions)
-    val spine = edges.where(col("src").isNotNull && col("dst").isNotNull)
+    val spine = own(edges.where(col("src").isNotNull && col("dst").isNotNull)
       .repartition(parts, col("src"))
       .distinct()
       .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src"))))
-      .ckptSpill(false) // edge-sized: DISK_ONLY (see Ckpt.spill)
+      .ckptSpill(false)) // edge-sized: DISK_ONLY (see Ckpt.spill)
     // every node with its has-in-edge flag, from one aggregate over the
     // spine: n, the initial ranks and the no-in-edge set all read it
-    val flags = spine.select(explode(array(
+    val flags = own(spine.select(explode(array(
         struct(col("src").as("nid"), lit(false).as("in")),
         struct(col("dst").as("nid"), lit(true).as("in")))).as("f"))
       .groupBy(col("f.nid").as("nid")).agg(max(col("f.in")).as("in"))
-      .ckpt(false)
+      .ckpt(false))
     val n = flags.count() // materializes spine + flags; one driver scalar
     // Nodes with NO in-edge get a zero contribution row in every round,
     // INSIDE the aggregate: the round's output then covers every node
@@ -176,15 +168,14 @@ object Graph {
     // in-edge get the same summands as before.
     val zeros = flags.filter(!col("in"))
       .select(col("nid").as("id"), lit(0.0).as("c"))
-    var ranks = flags.select(col("nid").as("id"), lit(1.0 / n).as("rank"))
-    val intermediates = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (round <- 0 until iters) {
+    val prior = flags.select(col("nid").as("id"), lit(1.0 / n).as("rank"))
+    Ckpt.rounds(prior, iters) { (ranks, round) =>
       // SHUFFLE_HASH on the node-sized ranks side: SMJ would SORT the
       // edge-sized spine every round after its exchange; the hash join
       // streams the spine unsorted and builds per-partition tables
       // bounded by nodes/parts rows of 16 bytes — spillable,
       // partition-count-scaled (guide §3.1; OPTIMIZATION_r20.md §1).
-      ranks = spine
+      val next = spine
         .join(ranks.select(col("id").as("src"), col("rank"))
           .hint("SHUFFLE_HASH"), "src")
         .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
@@ -196,11 +187,8 @@ object Graph {
       // periodic eager checkpoint: deep iteration counts keep lineage
       // and planning time bounded; shallow runs stay one lazy chain
       // into the caller's output checkpoint
-      if ((round + 1) % checkpointEvery == 0 && round + 1 < iters) {
-        ranks = ranks.ckpt()
-        intermediates += ranks
-      }
-    }
-    (ranks, Seq(spine, flags) ++ intermediates)
+      val deep = (round + 1) % checkpointEvery == 0 && round + 1 < iters
+      (if (deep) own(next.ckpt()) else next, false)
+    }._1
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TopKByScore
+import graft.core.Ckpt
 import graft.core.Ckpt.CkptOps
 
 /** Similarity search over embedding columns (`array<float>`).
@@ -292,11 +293,10 @@ object Similarity {
   def kmeansIterate(emb: DataFrame, idCol: String, vecCol: String, k: Int,
                     maxIter: Int = 10): DataFrame = {
     require(maxIter > 0)
-    var cents = seedCentroids(emb, idCol, vecCol, k)
-    var out = stepFrom(emb, vecCol, cents)
-    var it = 1
-    var converged = false
-    while (!converged && it < maxIter) {
+    val seed = seedCentroids(emb, idCol, vecCol, k)
+    // the seed step is round 1 of maxIter
+    Ckpt.rounds((seed, stepFrom(emb, vecCol, seed)), maxIter - 1) { (st, _) =>
+      val (cents, out) = st
       val byCluster = out.collect()
         .groupBy(_.getLong(0))
         .map { case (cid, rows) =>
@@ -307,16 +307,12 @@ object Similarity {
       val nextCents = cents.map { case (cid, old) =>
         (cid, byCluster.getOrElse(cid, old))
       }
-      converged = nextCents.zip(cents).forall {
+      val converged = nextCents.zip(cents).forall {
         case ((_, a), (_, b)) => a.sameElements(b)
       }
-      if (!converged) {
-        cents = nextCents
-        out = stepFrom(emb, vecCol, cents)
-      }
-      it += 1
-    }
-    out
+      if (converged) (st, true)
+      else ((nextCents, stepFrom(emb, vecCol, nextCents)), false)
+    }._1._2
   }
 
   // ---------- Product quantization (PQ) ----------
@@ -379,10 +375,9 @@ object Similarity {
   def pqTrainBooks(emb: DataFrame, idCol: String, vecCol: String,
                    m: Int, ksub: Int, maxIter: Int = 10): Array[Array[Array[Double]]] = {
     require(maxIter > 0)
-    var books = pqSeedBooks(emb, idCol, vecCol, m, ksub)
-    val dsub = books(0)(0).length
-    var it = 0; var converged = false
-    while (!converged && it < maxIter) {
+    val seed = pqSeedBooks(emb, idCol, vecCol, m, ksub)
+    val dsub = seed(0)(0).length
+    Ckpt.rounds(seed, maxIter) { (books, _) =>
       val rows = emb
         .select(pqCodesExpr(col(vecCol), books).as("__codes"),
           posexplode(col(vecCol)).as(Seq("dim", "v")))
@@ -397,15 +392,12 @@ object Similarity {
       rows.foreach { r =>
         next(r.getInt(0))(r.getLong(1).toInt)(r.getInt(2)) = r.getDouble(3)
       }
-      converged = next.zip(books).forall { case (nj, bj) =>
+      (next, next.zip(books).forall { case (nj, bj) =>
         nj.zip(bj).forall { case (nc, bc) =>
           nc.map(_.toFloat).sameElements(bc.map(_.toFloat))
         }
-      }
-      books = next
-      it += 1
-    }
-    books
+      })
+    }._1
   }
 
   /** PQ asymmetric-distance (ADC) top-k: every corpus vector is scored
@@ -835,8 +827,9 @@ object Similarity {
     val base = emb.select(col(idCol).as("id"), col(vecCol).as("vec"))
       .withColumn("norm", norm(col("vec")))
       .withColumn("cell", cellExpr(col("vec"), nlist, dims))
-    val (withCell, starEdges, edgeCkpts) = refineTarget match {
-      case None => (base, None, List.empty[DataFrame])
+    val own = new Ckpt.Owner
+    val (withCell, starEdges) = refineTarget match {
+      case None => (base, None)
       case Some(t) =>
         require(t >= 2, s"refineTarget=$t: need at least 2 rows to pair")
         require(refineFanout >= 2 && refineMaxRounds >= 1,
@@ -845,21 +838,18 @@ object Similarity {
         // eager checkpoint: the loop re-reads the frame every round
         // (counts + splits); without it each round re-runs the scan +
         // cell assignment
-        var cur = base.ckpt()
-        var edges: Option[DataFrame] = None
-        var ckpts = List.empty[DataFrame]
+        val start = own(base.ckpt())
         // child-cell ids live in [idLo, idLo + idLo*fanout) each round —
         // disjoint from every id already in play (all < idLo). Without
         // the offset, cell 3's round-2 grandchild (3·f+3)·f+2 collides
         // with original cell (3·f+3)'s members and silently merges
         // unrelated components (caught by the ground-truth spec).
-        var idLo = cellDomain(nlist)
-        var round = 0
-        var done = false
-        while (!done && round < refineMaxRounds) {
+        val ((cur, edges, _), _, _) = Ckpt.rounds(
+            (start, Option.empty[DataFrame], cellDomain(nlist)), refineMaxRounds) { (st, _) =>
+          val (cur, edges, idLo) = st
           val over = cur.groupBy(col("cell")).count()
             .filter(col("count") > t).select(col("cell").as("__oc"))
-          if (over.isEmpty) done = true
+          if (over.isEmpty) (st, true)
           else {
             val members = cur.join(over, col("cell") === col("__oc"), "left_semi")
             val rest = cur.join(over, col("cell") === col("__oc"), "left_anti")
@@ -898,25 +888,23 @@ object Similarity {
               (lit(idLo) + col("cell") * (refineFanout + 1) + subIdx)
                 .as("cell"))
             // star edges (eager checkpoint: they must survive the
-            // superseded round's unpersist below)
-            val roundEdges = joined.select(col("id"),
+            // superseded round's free below)
+            val roundEdges = own(joined.select(col("id"),
                 explode(filter(col("__piv"), p =>
                   p.getField("pid") =!= col("id") && cos(p) >= lit(threshold)))
                   .as("__p"))
               .select(col("id").as("a"), col("__p.pid").as("b"))
-              .ckpt()
-            edges = Some(edges.map(_.unionByName(roundEdges)).getOrElse(roundEdges))
-            ckpts = roundEdges :: ckpts
-            val next = rest.unionByName(assigned).ckpt()
-            org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint(cur)
-            cur = next
+              .ckpt())
+            // the eager checkpoint of `next` supersedes `cur`
+            own.retire(cur)
+            val next = own.after(own(rest.unionByName(assigned).ckpt()))
             // child ids occupied [idLo, idLo + idLo*(fanout+1)); next
             // round's range starts past them
-            idLo += idLo * (refineFanout + 1)
-            round += 1
+            ((next, Some(edges.map(_.unionByName(roundEdges)).getOrElse(roundEdges)),
+              idLo + idLo * (refineFanout + 1)), false)
           }
         }
-        (cur, edges, ckpts)
+        (cur, edges)
     }
     val capped = maxCellSize match {
       case Some(cap) =>
@@ -940,26 +928,22 @@ object Similarity {
       case Some(e) => pairs.select(col("a"), col("b")).unionByName(e)
       case None => pairs
     }
-    val labels = Dedup.connectedComponents(ccInput, "a", "b")
-    // connectedComponents eagerly checkpoints its symmetrized edge list
-    // on entry, so the per-round star-edge checkpoints are dead here
-    edgeCkpts.foreach(org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint)
+    // the components' checkpoints join this call's owner: its final
+    // labels are materialized before it returns, so from here on nothing
+    // reads the star edges or the symmetrized edge list
+    val (labels, _, _) = Dedup.components(own, ccInput, "a", "b", maxRounds = 25)
     val out = withCell.select(col("id"), col("cell"))
-      .join(labels, Seq("id"), "left")
+      .join(labels.select(col("id"), col("label")), Seq("id"), "left")
       .select(col("id"), col("cell"),
         coalesce(col("label"), col("id")).as("canonical_id"),
         (coalesce(col("label"), col("id")) === col("id")).as("keep"))
-    if (refineTarget.isEmpty) out
-    else {
-      // the refine loop left `withCell` (= the final round's corpus-sized
-      // (id, vec, norm, cell) checkpoint, embedding vectors included)
-      // pinned in block storage; the pageRank lifecycle applies — ONE
-      // eager checkpoint of the COMPACT output (4 narrow columns), then
-      // free the working blocks so nothing corpus-sized outlives the call
-      // (labels' final round stays on connectedComponents' own lifecycle)
-      val outCkpt = out.ckpt()
-      org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint(withCell)
-      outCkpt
-    }
+    // unrefined, the lazy output reads only the final labels. Refined,
+    // the pageRank lifecycle applies: `withCell` is the final round's
+    // corpus-sized (id, vec, norm, cell) checkpoint, embedding vectors
+    // included, so ONE eager checkpoint of the COMPACT output (4 narrow
+    // columns), then every working block is freed and nothing
+    // corpus-sized outlives the call
+    if (refineTarget.isEmpty) { own.close(labels); out }
+    else own.output(out)
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.core.Ckpt
 import graft.core.Ckpt.CkptOps
 
 /** Text analysis for large-scale training-data pipelines, plus the
@@ -643,22 +644,24 @@ object TextAnalysis {
     *      ([[mergeAdjacent]]), then localCheckpoint-ed so round r+1
     *      plans one pass, not r.
     *
-    * Per-round driver traffic is ONE pair; per-round jobs are one
-    * vocab-sized aggregation + one vocab-sized materialization — at
-    * 100 TB the corpus cost is the single word count (and real
-    * trainers subsample even that). Stops early when no pair repeats.
+    * Per-round driver traffic is ONE pair; per round AQE runs two
+    * Spark jobs, the pair aggregation's exchange (which also
+    * materializes the round's vocab checkpoint) and the top-1 result,
+    * after one job for the word count: six merges are 13 jobs (pinned
+    * in RoundLoopsSpec). At 100 TB the corpus cost is the single word
+    * count (and real trainers subsample even that). Stops early when no
+    * pair repeats.
     *
     * Returns (merges, vocabSyms): merges = (rank, left, right, pair,
     * count) in merge order; vocabSyms = (word, freq, syms) after all
     * merges — the trained segmentation of every word. */
   def bpeTrain(docs: org.apache.spark.sql.DataFrame, textCol: String,
                nMerges: Int): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val (merges, vocab, toFree) = bpeTrainLoop(docs, textCol, nMerges)
+    val own = new Ckpt.Owner
+    val (merges, vocab) = bpeTrainLoop(own, docs, textCol, nMerges)
     // materialize the trained segmentation eagerly, then free the last
-    // intermediate round's blocks it was computed from
-    val out = vocab.ckpt()
-    toFree.foreach(org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint)
-    (merges, out)
+    // rounds' blocks it was computed from
+    (merges, own.output(vocab))
   }
 
   /** [[bpeTrain]] when the caller wants the MERGE LIST only (the encode
@@ -668,12 +671,14 @@ object TextAnalysis {
     * intermediate round's blocks before returning. */
   def bpeTrainMerges(docs: org.apache.spark.sql.DataFrame, textCol: String,
                      nMerges: Int): org.apache.spark.sql.DataFrame = {
-    val (merges, _, toFree) = bpeTrainLoop(docs, textCol, nMerges)
-    toFree.foreach(org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint)
+    val own = new Ckpt.Owner
+    val (merges, _) = bpeTrainLoop(own, docs, textCol, nMerges)
+    own.close()
     merges
   }
 
-  /** The shared merge loop: per round ONE Spark job, not two — the
+  /** The shared merge loop: per round ONE best-pair query (two AQE
+    * jobs, see [[bpeTrain]]) and no materialization of its own — the
     * merged vocab is a LAZY localCheckpoint whose blocks materialize
     * inside the NEXT round's best-pair aggregation (the eager-checkpoint
     * form paid a separate vocab materialization job per round; at small
@@ -681,14 +686,12 @@ object TextAnalysis {
     * in OPTIMIZATION_r19.md). A superseded round's blocks can only be
     * freed AFTER the round that reads them has materialized its own
     * checkpoint (lazy-checkpoint lineage is truncated — recompute after
-    * unpersist is impossible), hence the one-round-delayed free and the
-    * returned to-free tail the public wrappers release. Returns
-    * (merges DF, final vocab [LAZY — last two rounds' blocks still
-    * live], their checkpoint frames to free once done). */
-  private def bpeTrainLoop(docs: org.apache.spark.sql.DataFrame, textCol: String,
-                           nMerges: Int): (org.apache.spark.sql.DataFrame,
-                                           org.apache.spark.sql.DataFrame,
-                                           Seq[org.apache.spark.sql.DataFrame]) = {
+    * unpersist is impossible), so `own` frees each one after the next
+    * round's aggregation. Returns (merges DF, final vocab [LAZY — its
+    * blocks and the previous round's still live in `own`]). */
+  private def bpeTrainLoop(own: Ckpt.Owner, docs: org.apache.spark.sql.DataFrame,
+                           textCol: String, nMerges: Int): (org.apache.spark.sql.DataFrame,
+                                                            org.apache.spark.sql.DataFrame) = {
     require(nMerges >= 0, "nMerges must be non-negative")
     val spark = docs.sparkSession
     import spark.implicits._
@@ -696,45 +699,37 @@ object TextAnalysis {
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
     // split("") keeps a trailing empty field under Spark's limit=-1
     // convention — drop empties so symbols are exactly the characters
-    var vocab = words.select(col("word"), col("freq"),
+    val init = own(words.select(col("word"), col("freq"),
         filter(split(col("word"), ""), x => x =!= "").as("syms"))
-      .ckpt(false)
-    // the previous round's checkpoint: materialized (this round's
-    // best-pair job read it), but still the lineage parent of the
-    // CURRENT lazy checkpoint — freeable only after the next job
-    var prev: Option[org.apache.spark.sql.DataFrame] = None
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
-    var round = 0
-    var exhausted = false
-    while (round < nMerges && !exhausted) {
+      .ckpt(false))
+    val ((vocab, merges), _, _) = Ckpt.rounds(
+        (init, Vector.empty[(Long, String, String, String, Long)]), nMerges) { (st, round) =>
+      val (vocab, merges) = st
       val n1 = greatest(size(col("syms")) - 1, lit(0))
-      val best = vocab.select(col("freq"),
+      // this query materializes `vocab`: the round BEFORE it is freed
+      // once it has run (nothing unmaterialized depends on its blocks)
+      val best = own.after(vocab.select(col("freq"),
           explode(zip_with(slice(col("syms"), lit(1), n1),
             slice(col("syms"), lit(2), n1),
             (x, y) => concat_ws(" ", x, y))).as("pair"))
         .groupBy(col("pair")).agg(sum(col("freq")).as("n"))
         .orderBy(col("n").desc, col("pair").asc)
-        .limit(1).collect()
-      // this job materialized `vocab` — the round BEFORE it is now
-      // safe to free (nothing unmaterialized depends on its blocks)
-      prev.foreach(org.apache.spark.sql.GraftColumnShim.unpersistCheckpoint)
-      prev = Some(vocab)
-      if (best.isEmpty || best(0).getLong(1) < 2) exhausted = true
+        .limit(1).collect())
+      if (best.isEmpty || best(0).getLong(1) < 2) (st, true)
       else {
         val parts = best(0).getString(0).split(' ')
         val a: String = parts(0); val b: String = parts(1)
-        merges += ((round + 1L, a, b, a + b, best(0).getLong(1)))
+        own.retire(vocab)
         // native single-merge pass (same carry semantics as the
         // interpreted mergeAdjacent fold — see bpeSegment)
-        vocab = vocab.select(col("word"), col("freq"),
+        val merged = own(vocab.select(col("word"), col("freq"),
             org.apache.spark.sql.GraftColumnShim.bpeMergesColumn(
               col("syms"), Array((a, b))).as("syms"))
-          .ckpt(false)
-        round += 1
+          .ckpt(false))
+        ((merged, merges :+ ((round + 1L, a, b, a + b, best(0).getLong(1)))), false)
       }
     }
-    val toFree = (prev.toSeq :+ vocab).distinct
-    (merges.toSeq.toDF("rank", "left", "right", "pair", "count"), vocab, toFree)
+    (merges.toDF("rank", "left", "right", "pair", "count"), vocab)
   }
 
   /** Apply a trained BPE merge list (rank order) to segment each word of

@@ -20,6 +20,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamOps {
 
+  /** The batch tokenizer's pattern ([[graft.operators.TextAnalysis.tokenPattern]]),
+    * compiled once for the row-at-a-time twins below. */
+  private val tokenRegex = graft.operators.TextAnalysis.tokenPattern.r
+
   /** `useInfinite`-style unbounded generator: one row per tick with a
     * monotone `idx` and `value = f(idx)` expressed as a Column transform. */
   def infinite(spark: SparkSession, rowsPerSecond: Long, f: Column => Column): DataFrame =
@@ -304,8 +308,7 @@ object StreamOps {
       FreeRunGuard.arm(docs.sparkSession, "streamingCdcChunkCandidates(ttl)")
     val boundarySet = "0123456789abcdef".take(boundaryHexFirst).toSet
     val chunked: Dataset[(String, Long)] = docs.flatMap { case (id, text) =>
-      // lockstep with the batch tokenizer (explicit ASCII ws class)
-      val toks = "[^ \t\n\u000B\f\r]+".r.findAllIn(text).toSeq
+      val toks = tokenRegex.findAllIn(text).toSeq
       if (toks.isEmpty) Seq.empty[(String, Long)]
       else {
         val chunks = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
@@ -390,14 +393,14 @@ object StreamOps {
     val evalIndex: Map[String, Seq[Long]] = eval.select(
         col(idCol).cast("long").as("id"), col(textCol).as("t"))
       .collect().flatMap { r =>
-        val toks = "[^ \t\n\u000B\f\r]+".r.findAllIn(r.getString(1)).toSeq
+        val toks = tokenRegex.findAllIn(r.getString(1)).toSeq
         toks.sliding(w).filter(_.length == w).map(_.mkString(" "))
           .toSeq.distinct.map(sh => sh -> r.getLong(0))
       }.groupBy(_._1).map { case (sh, hits) => sh -> hits.map(_._2).toSeq }
     val bc = docs.sparkSession.sparkContext.broadcast(evalIndex)
     docs.flatMap { case (_, text) =>
       val idx = bc.value
-      val toks = "[^ \t\n\u000B\f\r]+".r.findAllIn(text).toSeq
+      val toks = tokenRegex.findAllIn(text).toSeq
       toks.sliding(w).filter(_.length == w).map(_.mkString(" "))
         .toSeq.distinct
         .flatMap(sh => idx.getOrElse(sh, Nil).map(id => (id, sh)))
@@ -702,7 +705,7 @@ object StreamOps {
     docs.map { case (id, text) =>
       val (m2, m1, vv) = bc.value
       // same tokenization as Dedup.shingleArray(_, 2): ASCII-ws runs
-      val toks = "[^ \t\n\u000B\f\r]+".r.findAllIn(text).toArray
+      val toks = tokenRegex.findAllIn(text).toArray
       var n = 0L; var sum = 0.0
       var i = 0
       while (i < toks.length - 1) {
@@ -752,7 +755,7 @@ object StreamOps {
     docs.map { case (id, text) =>
       val (ts, dfArr) = bc.value
       // same tokenization as TextAnalysis.tokens: ASCII-ws runs
-      val tk = "[^ \t\n\u000B\f\r]+".r.findAllIn(text).toArray
+      val tk = tokenRegex.findAllIn(text).toArray
       val dl = tk.length.toDouble
       var score = 0.0; var hits = 0L
       var i = 0
@@ -795,7 +798,7 @@ object StreamOps {
     val bc = docs.sparkSession.sparkContext.broadcast((terms.toArray, dfs))
     docs.map { case (id, text) =>
       val (ts, dfArr) = bc.value
-      val tk = "[^ \t\n\u000B\f\r]+".r.findAllIn(text).toArray
+      val tk = tokenRegex.findAllIn(text).toArray
       var score = 0.0; var hits = 0L
       var i = 0
       while (i < ts.length) {
@@ -833,7 +836,7 @@ object StreamOps {
       if (r == 0.0) 0.0 else r // normalize -0.0 like the batch `+ 0.0`
     }
     docs.map { case (id, text) =>
-      val tk = "[^ \t\n\u000B\f\r]+".r.findAllIn(text).toArray
+      val tk = tokenRegex.findAllIn(text).toArray
       val n = tk.length.toLong
       val meanLen = if (n == 0) 0.0 else tk.map(_.length.toLong).sum.toDouble / n
       val alphaFrac = if (n == 0) 0.0
@@ -917,7 +920,7 @@ object StreamOps {
       val md = java.security.MessageDigest.getInstance("MD5")
       it.map { case (id, text) =>
         // same tokenization as TextAnalysis.tokens: ASCII-ws runs
-        val tk = "[^ \t\n\u000B\f\r]+".r.findAllIn(text).toArray
+        val tk = tokenRegex.findAllIn(text).toArray
         var sum = 0.0
         var i = 0
         while (i < tk.length) {
@@ -971,7 +974,7 @@ object StreamOps {
       })
       it.map { case (id, text) =>
         // same tokenization as TextAnalysis.tokens: ASCII-ws runs
-        val tk = "[^ \t\n\u000B\f\r]+".r.findAllIn(text).toArray
+        val tk = tokenRegex.findAllIn(text).toArray
         var nb = 0L
         var i = 0
         while (i < tk.length) { nb += symCount(tk(i)); i += 1 }
@@ -1002,7 +1005,7 @@ object StreamOps {
       val md = java.security.MessageDigest.getInstance("MD5")
       it.map { case (id, text) =>
       // same tokenization as TextAnalysis.tokens: ASCII-ws runs
-      val tk = "[^ \t\n\u000B\f\r]+".r.findAllIn(text).toArray
+      val tk = tokenRegex.findAllIn(text).toArray
       var dot = 0.0
       var i = 0
       while (i < tk.length) {

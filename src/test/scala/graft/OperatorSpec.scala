@@ -1217,6 +1217,13 @@ class OperatorSpec extends AnyFunSuite {
     val m = Dedup.connectedComponents(messy).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(m == Map(5L -> 5L, 6L -> 5L, 7L -> 7L))
+    // an edge with a null endpoint is dropped and names no node: no null
+    // id, and 5 (only ever next to a null) is not a singleton
+    val holes = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, null),
+      (null, 5L), (7L, 8L)).toDF("a", "b")
+    val h = Dedup.connectedComponents(holes).collect()
+      .map(r => r.get(0) -> r.get(1)).toMap
+    assert(h == Map(1L -> 1L, 2L -> 1L, 7L -> 7L, 8L -> 7L))
   }
 
   test("PII redaction: emails, phones, IPv4; order, boundaries, clean text untouched") {

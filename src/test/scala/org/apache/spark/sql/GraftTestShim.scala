@@ -17,7 +17,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   *     shared session for the suites that follow.
   *   - [[drainListeners]] blocks until every posted scheduler event has
   *     reached the listeners; [[jobsDuring]] uses it to count a call's
-  *     jobs. */
+  *     jobs.
+  *   - [[rddIds]] names the RDDs a frame's plan scans, so a spec can
+  *     tell the blocks an output reads from blocks a call leaked. */
 object GraftTestShim {
 
   /** Simulate executor loss for a localCheckpoint()ed Dataset: drop its
@@ -59,4 +61,8 @@ object GraftTestShim {
     }
     jobs.get
   }
+
+  /** Ids of the RDDs `df`'s plan scans (its checkpoint leaves). */
+  def rddIds(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }.toSet
 }
