@@ -932,7 +932,7 @@ object QueriesText {
 
   // shared SQL fragments (DuckDB dialect)
 
-  /** The oracle-side twin of [[graft.operators.TextAnalysis.tokenPattern]]:
+  /** The oracle-side twin of [[graft.operators.TextAnalysis.tokens]]:
     * tokens are maximal NON-whitespace runs over an explicit ASCII class.
     * Java's `\s` and RE2's disagree on `\x0b`, and Java `split` drops
     * trailing empty fields while `regexp_split_to_array` keeps them —

@@ -3,8 +3,9 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the charsequence surface that Spark's
@@ -270,6 +271,17 @@ case class PqCodesExpr(child: Expression, books: Array[Array[Array[Double]]])
     copy(child = newChild)
 }
 
+/** A unary expression over one string argument, type-checked at
+  * analysis rather than discovered inside generated code. */
+trait StringInput extends UnaryExpression {
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (child.dataType == StringType)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
+}
+
 /** JVM-static helpers shared by interpreted eval and generated code.
   * Loop-heavy expression bodies live HERE and `doGenCode` emits a
   * one-line call: the generated projection method stays tiny (JIT-
@@ -339,17 +351,146 @@ object ExprHelpers {
     new GenericArrayData(cur)
   }
 
+  /** True for the six ASCII whitespace bytes `[ \t\n\r\x0B\f]`
+    * ([[graft.operators.TextAnalysis.asciiWs]]; `\t`..`\r` are 9..13).
+    * None of them occurs inside a multi-byte UTF-8 sequence, so U+00A0
+    * and U+3000 are token characters. */
+  private def isAsciiWs(b: Byte): Boolean = b == ' ' || (b >= '\t' && b <= '\r')
+
+  /** First byte offset at or after `i` whose whitespace-ness differs
+    * from `ws`, or the text length. */
+  private def skip(s: UTF8String, i: Int, ws: Boolean): Int = {
+    val len = s.numBytes()
+    var j = i
+    while (j < len && isAsciiWs(s.getByte(j)) == ws) j += 1
+    j
+  }
+
+  /** The library's one ASCII-whitespace tokenizer: the tokens of `s` are
+    * its maximal runs of non-[[isAsciiWs]] bytes, and this returns their
+    * (start, end) byte offsets packed as `spans(2t)`, `spans(2t + 1)`,
+    * in text order. Blank text has none. Every tokenizing graft function
+    * reads these spans (or [[tokenCount]], the same walk without them):
+    * tokens, shingles, MinHash signatures and the streaming twins. */
+  def tokenSpans(s: UTF8String): Array[Int] = {
+    val len = s.numBytes()
+    var spans = new Array[Int](32)
+    var m = 0
+    var i = skip(s, 0, ws = true)
+    while (i < len) {
+      val e = skip(s, i, ws = false)
+      if (m == spans.length) spans = java.util.Arrays.copyOf(spans, 2 * m)
+      spans(m) = i; spans(m + 1) = e
+      m += 2
+      i = skip(s, e, ws = true)
+    }
+    java.util.Arrays.copyOf(spans, m)
+  }
+
+  /** Number of [[tokenSpans]] of `s`, without building them. */
+  def tokenCount(s: UTF8String): Int = {
+    val len = s.numBytes()
+    var n = 0
+    var i = skip(s, 0, ws = true)
+    while (i < len) {
+      n += 1
+      i = skip(s, skip(s, i, ws = false), ws = true)
+    }
+    n
+  }
+
+  /** Copy the window of `w` tokens from token `t` of `bytes`, joined with
+    * one space, to the start of `dst`; returns its length. */
+  private def joinWindow(bytes: Array[Byte], spans: Array[Int], t: Int, w: Int,
+                         dst: Array[Byte]): Int = {
+    var m = 0
+    var u = t
+    while (u < t + w) {
+      if (u > t) { dst(m) = ' '; m += 1 }
+      val l = spans(2 * u + 1) - spans(2 * u)
+      System.arraycopy(bytes, spans(2 * u), dst, m, l)
+      m += l
+      u += 1
+    }
+    m
+  }
+
+  /** Every window of `w` consecutive [[tokenSpans]] tokens of `s`, in text
+    * order, joined with one space and duplicates kept; empty below `w`
+    * tokens. `w = 1` gives the tokens themselves. Bytes are kept as
+    * stored, so on malformed UTF-8 a token carries the raw bytes, where a
+    * `String`-decoding tokenizer would carry U+FFFD. */
+  def shingles(s: UTF8String, w: Int): GenericArrayData = {
+    val spans = tokenSpans(s)
+    val n = spans.length / 2 - w + 1
+    if (n <= 0) return new GenericArrayData(new Array[AnyRef](0))
+    // copied unless `s` owns exactly this array: tokens never alias a row buffer
+    val bytes = s.getBytes
+    val out = new Array[AnyRef](n)
+    val window = if (w == 1) null else new Array[Byte](bytes.length)
+    var t = 0
+    while (t < n) {
+      out(t) =
+        if (w == 1) UTF8String.fromBytes(bytes, spans(2 * t), spans(2 * t + 1) - spans(2 * t))
+        else UTF8String.fromBytes(
+          java.util.Arrays.copyOf(window, joinWindow(bytes, spans, t, w, window)))
+      t += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** [[tokenSpans]] over a JVM string, for row-at-a-time code: each token
+    * decoded back to a `String`. */
+  def tokenStrings(text: String): Array[String] = {
+    val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val spans = tokenSpans(UTF8String.fromBytes(bytes))
+    Array.tabulate(spans.length / 2)(t => new String(bytes, spans(2 * t),
+      spans(2 * t + 1) - spans(2 * t), java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  /** Non-overlapping occurrences of the bytes of `target` in `s`, matched
+    * left to right with the search resuming after each match
+    * (charsequence.h:1078-1103). With `pad`, the text is read as
+    * `" " + s + " "` without building that copy. `target` is non-empty.
+    * On valid UTF-8 this is the count over code points, since a UTF-8
+    * match can only start at a character boundary. */
+  def countLiteral(s: UTF8String, target: Array[Byte], pad: Boolean): Int = {
+    val p = if (pad) 1 else 0
+    val len = s.numBytes() + 2 * p
+    val m = target.length
+    def at(v: Int): Byte = if (pad && (v == 0 || v == len - 1)) ' ' else s.getByte(v - p)
+    var n = 0
+    var i = 0
+    while (i + m <= len) {
+      var j = 0
+      while (j < m && at(i + j) == target(j)) j += 1
+      if (j == m) { n += 1; i += m } else i += 1
+    }
+    n
+  }
+
+  /** Number of ASCII letters `[a-zA-Z]` in `s`; they are whole characters
+    * in any UTF-8 text, valid or not. */
+  def asciiLetterCount(s: UTF8String): Int = {
+    val len = s.numBytes()
+    var n = 0
+    var i = 0
+    while (i < len) {
+      val b = s.getByte(i) | 0x20 // folds A-Z onto a-z, and nothing else onto it
+      if (b >= 'a' && b <= 'z') n += 1
+      i += 1
+    }
+    n
+  }
+
   private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](
     () => java.security.MessageDigest.getInstance("MD5"))
   private val hexDigits = "0123456789abcdef".getBytes("US-ASCII")
 
   /** MinHash signature of one text, in one pass and with no per-shingle
     * String, hex string or row ([[graft.operators.Dedup.minhashSignature]]).
-    * Tokens are the maximal runs of bytes outside the six ASCII
-    * whitespace bytes — [[graft.operators.Dedup.shingleArray]]'s
-    * tokenization; those bytes never occur inside a multi-byte UTF-8
-    * sequence, so U+00A0 and U+3000 are token characters. Every window of
-    * `w` tokens is joined with one space, and family 4j+q is the minimum,
+    * The shingles are [[shingles]]'s: every window of `w` [[tokenSpans]]
+    * tokens joined with one space. Family 4j+q is the minimum,
     * compared unsigned, of big-endian word q of md5("j#" + shingle).
     * Returns the `k` minima as 8-char lowercase hex (whose string order is
     * the unsigned order), or null when the text is null or has fewer than
@@ -357,45 +498,19 @@ object ExprHelpers {
     * differs from a String-decoding tokenizer, which would hash U+FFFD. */
   def minhashSignature(text: UTF8String, w: Int, k: Int): GenericArrayData = {
     if (text == null) return null
-    val bytes = text.getBytes
-    val len = bytes.length
-    def isWs(b: Byte): Boolean =
-      b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == 0x0B || b == '\f'
-    var starts = new Array[Int](32)
-    var ends = new Array[Int](32)
-    var n = 0
-    var i = 0
-    while (i < len) {
-      while (i < len && isWs(bytes(i))) i += 1
-      if (i < len) {
-        if (n == starts.length) {
-          starts = java.util.Arrays.copyOf(starts, 2 * n)
-          ends = java.util.Arrays.copyOf(ends, 2 * n)
-        }
-        starts(n) = i
-        while (i < len && !isWs(bytes(i))) i += 1
-        ends(n) = i
-        n += 1
-      }
-    }
+    val spans = tokenSpans(text)
+    val n = spans.length / 2
     if (n < w) return null
+    val bytes = text.getBytes
     val numDigests = (k + 3) / 4
     val prefixes = Array.tabulate(numDigests)(j => s"$j#".getBytes("US-ASCII"))
     val mins = Array.fill(k)(-1) // 0xffffffff: the unsigned maximum
     val md = md5.get()
     val dig = new Array[Byte](16)
-    val shingle = new Array[Byte](len) // a joined window is never longer than the text
+    val shingle = new Array[Byte](bytes.length) // a joined window is never longer than the text
     var t = 0
     while (t + w <= n) {
-      var m = 0
-      var u = t
-      while (u < t + w) {
-        if (u > t) { shingle(m) = ' '; m += 1 }
-        val l = ends(u) - starts(u)
-        System.arraycopy(bytes, starts(u), shingle, m, l)
-        m += l
-        u += 1
-      }
+      val m = joinWindow(bytes, spans, t, w, shingle)
       var j = 0
       while (j < numDigests) {
         md.update(prefixes(j))
@@ -475,17 +590,10 @@ object ExprHelpers {
   * `substring(h, i+1, 1).isin("8"…"f")` subtrees (16 UTF8String slices
   * + up to 128 string compares per row) with one byte loop (§4:
   * eliminate expensive expression forests in the hot path). */
-case class HexVotes16Expr(child: Expression) extends UnaryExpression {
+case class HexVotes16Expr(child: Expression) extends StringInput {
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_hex_votes16"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
 
   override def nullSafeEval(input: Any): Any =
     ExprHelpers.hexVotes16(input.asInstanceOf[UTF8String])
@@ -560,21 +668,18 @@ case class BpeMergesExpr(child: Expression, merges: Array[(String, String)])
   * shingle, and no md5 hex string or substring per shingle: ExpressionSpec
   * pins the values against that explode/md5/substring/min form. */
 case class MinHashSigExpr(child: Expression, shingleWidth: Int, numHashes: Int)
-  extends UnaryExpression {
+  extends StringInput {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_minhash_signature"
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType != StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
-    else if (shingleWidth < 1 || numHashes < 1)
+    if (shingleWidth < 1 || numHashes < 1)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires shingleWidth >= 1 and numHashes >= 1, " +
           s"got $shingleWidth and $numHashes")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else super.checkInputDataTypes()
 
   override def nullSafeEval(input: Any): Any =
     ExprHelpers.minhashSignature(input.asInstanceOf[UTF8String], shingleWidth, numHashes)
@@ -585,6 +690,118 @@ case class MinHashSigExpr(child: Expression, shingleWidth: Int, numHashes: Int)
          |${ev.isNull} = ${ev.value} == null;""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
+    copy(child = newChild)
+}
+
+/** The `shingleWidth`-token shingles of a text column as ONE native
+  * expression ([[ExprHelpers.shingles]]): `shingleWidth = 1` is
+  * [[graft.operators.TextAnalysis.tokens]], any width is
+  * [[graft.operators.Dedup.shingleArray]]. The data type is the
+  * `array<string>` that `regexp_extract_all` had. */
+case class ShingleArrayExpr(child: Expression, shingleWidth: Int)
+  extends StringInput {
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = true)
+  override def prettyName: String = "graft_shingles"
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (shingleWidth < 1)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires shingleWidth >= 1, got $shingleWidth")
+    else super.checkInputDataTypes()
+
+  override def nullSafeEval(input: Any): Any =
+    ExprHelpers.shingles(input.asInstanceOf[UTF8String], shingleWidth)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.ExprHelpers.shingles($c, $shingleWidth);")
+
+  override protected def withNewChildInternal(newChild: Expression): ShingleArrayExpr =
+    copy(child = newChild)
+}
+
+/** The token count of a text column ([[ExprHelpers.tokenCount]]) as a
+  * long, without building the token array. A null text gives what
+  * `size(null)` gives: -1 under `legacySizeOfNull`, else null, with the
+  * flag taken from the session conf when the column is built, like
+  * Spark's `Size`. */
+case class TokenCountExpr(child: Expression, legacySizeOfNull: Boolean)
+  extends StringInput {
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = child.nullable && !legacySizeOfNull
+  override def prettyName: String = "graft_token_count"
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val s = child.eval(input)
+    if (s != null) ExprHelpers.tokenCount(s.asInstanceOf[UTF8String]).toLong
+    else if (legacySizeOfNull) -1L
+    else null
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    val onNull =
+      if (legacySizeOfNull) s"${ev.value} = -1L;" else s"${ev.isNull} = true;"
+    ev.copy(code = code"""
+      |${c.code}
+      |boolean ${ev.isNull} = false;
+      |long ${ev.value} = 0L;
+      |if (${c.isNull}) {
+      |  $onNull
+      |} else {
+      |  ${ev.value} = graft.functions.ExprHelpers.tokenCount(${c.value});
+      |}""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): TokenCountExpr =
+    copy(child = newChild)
+}
+
+/** Non-overlapping occurrences of a literal `target` in a text column
+  * ([[ExprHelpers.countLiteral]]) as a long, null on a null text. With
+  * `pad` the text is read as `" " + text + " "`, so `" the "` also counts
+  * a leading or trailing word. The target bytes are constructor data, so
+  * every target shares one generated body. */
+case class CountLiteralExpr(child: Expression, target: String, pad: Boolean)
+  extends StringInput {
+  require(target.nonEmpty, "CountLiteralExpr: target must be non-empty")
+
+  override def dataType: DataType = LongType
+  override def prettyName: String = "graft_count_literal"
+
+  @transient private lazy val targetBytes =
+    target.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  override def nullSafeEval(input: Any): Any =
+    ExprHelpers.countLiteral(input.asInstanceOf[UTF8String], targetBytes, pad).toLong
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val t = ctx.addReferenceObj("target", targetBytes, "byte[]")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = (long) graft.functions.ExprHelpers.countLiteral($c, $t, $pad);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): CountLiteralExpr =
+    copy(child = newChild)
+}
+
+/** Number of ASCII letters in a text column
+  * ([[ExprHelpers.asciiLetterCount]]) as an int, null on a null text. */
+case class AsciiLetterCountExpr(child: Expression) extends StringInput {
+
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "graft_ascii_letters"
+
+  override def nullSafeEval(input: Any): Any =
+    ExprHelpers.asciiLetterCount(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.ExprHelpers.asciiLetterCount($c);")
+
+  override protected def withNewChildInternal(newChild: Expression): AsciiLetterCountExpr =
     copy(child = newChild)
 }
 
@@ -631,17 +848,10 @@ case class Utf32Decode(child: Expression, bigEndian: Boolean)
   * per-row boxing. `java.text.Normalizer` is pure-JVM ICU-equivalent
   * for the four standard forms. */
 case class UnicodeNormalize(child: Expression, form: java.text.Normalizer.Form)
-  extends UnaryExpression {
+  extends StringInput {
 
   override def dataType: DataType = StringType
   override def prettyName: String = s"graft_${form.name().toLowerCase}"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a string argument, got ${child.dataType.catalogString}")
 
   override def nullSafeEval(input: Any): Any =
     UTF8String.fromString(java.text.Normalizer.normalize(

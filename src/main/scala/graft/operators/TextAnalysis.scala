@@ -2,8 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.GraftColumnShim.nativeColumn
+import org.apache.spark.sql.internal.SQLConf
 import graft.core.Ckpt
 import graft.core.Ckpt.CkptOps
+import graft.functions.{AsciiLetterCountExpr, CountLiteralExpr, TokenCountExpr}
 
 /** Text analysis for large-scale training-data pipelines, plus the
   * reference's charsequence scalar surface (charsequence.h §2.6) expressed
@@ -31,57 +34,60 @@ object TextAnalysis {
     call_function(s"graft_${form.toLowerCase}", c)
   }
 
-  /** Non-overlapping occurrence count (charsequence.h:1078-1103).
-    * `regexp_count` walks the SAME left-to-right non-overlapping match
-    * sequence as the old regexp_replace-and-measure form (both are the
-    * Java-regex find loop), without allocating a replaced copy of the
-    * text per call — this runs per stopword per row in the quality /
-    * langid batteries, so the copies were the scan's allocation bill. */
+  /** Non-overlapping occurrence count (charsequence.h:1078-1103): the
+    * reference's count loop over the text's bytes, left to right and
+    * resuming after each match, in one native expression
+    * ([[graft.functions.CountLiteralExpr]]) with no regex and no decoded
+    * copy of the text. Null text → null. */
   def countOccurrences(c: Column, target: String): Column = {
-    // empty target would match at every position (length+1), where the
-    // old replace-and-measure form divided by zero — neither is a count
-    // anyone wants; reject early (r19 ADVICE)
+    // empty target would match at every position (length+1) — not a
+    // count anyone wants; reject early (r19 ADVICE)
     require(target.nonEmpty, "countOccurrences: target must be non-empty")
-    regexp_count(c, lit(java.util.regex.Pattern.quote(target))).cast("long")
+    nativeColumn(c)(CountLiteralExpr(_, target, pad = false))
   }
+
+  /** Occurrences of the word `w` delimited by single spaces, counting
+    * the text's ends as spaces: `countOccurrences(" " + c + " ", " w ")`
+    * without the concatenated copy. */
+  private def wordHits(c: Column, w: String): Column =
+    nativeColumn(c)(CountLiteralExpr(_, s" $w ", pad = true))
 
   /** The ASCII whitespace set, written out explicitly because the
     * engines' `\s` classes disagree: Java's includes `\x0B`, RE2's
     * (DuckDB, Go) does not — and Java's `split` DROPS trailing empty
     * fields while DuckDB's `regexp_split_to_array` KEEPS them, so any
     * text ending in `\t`/`\n` diverges by one token under a split-based
-    * count. Tokenizing as maximal NON-whitespace runs over this explicit
-    * class is symmetric by construction: no `\s`, no split, no trim
-    * dependency. Keep [[tokenPattern]] and the oracle-side
-    * `[^ \t\n\r\x0b\f]+` in lockstep. */
+    * count. Tokens are maximal NON-whitespace runs over this explicit
+    * set, which is symmetric by construction: no `\s`, no split, no trim
+    * dependency. The byte tokenizer behind [[tokens]]
+    * ([[graft.functions.ExprHelpers.tokenSpans]]) and the oracle-side
+    * `[^ \t\n\r\x0b\f]+` must name the same six bytes. */
   val asciiWs = " \\t\\n\\r\\x0B\\f"
 
-  /** Canonical token pattern: maximal runs of non-whitespace. */
-  val tokenPattern: String = s"[^$asciiWs]+"
+  /** Canonical token array: the maximal runs of non-whitespace
+    * ([[graft.functions.ExprHelpers.tokenSpans]]). Blank → empty array. */
+  def tokens(c: Column): Column = Dedup.shingleArray(c, 1)
 
-  /** Canonical token array (codegen'd, map-side). Blank → empty array. */
-  def tokens(c: Column): Column =
-    regexp_extract_all(c, lit(tokenPattern), lit(0))
-
-  /** Whitespace token count. Empty/blank → 0. */
-  def tokenCount(c: Column): Column = size(tokens(c)).cast("long")
+  /** Whitespace token count, without building the token array. Empty or
+    * blank → 0; null → what `size(null)` gives (null, or -1 under
+    * `spark.sql.legacy.sizeOfNull` with ANSI off). */
+  def tokenCount(c: Column): Column =
+    nativeColumn(c)(TokenCountExpr(_, SQLConf.get.legacySizeOfNull))
 
   /** BPE-ish token count: alpha runs, digit runs, single punctuation. */
   def tokenCountBpeish(c: Column): Column =
     size(regexp_extract_all(c,
       lit(s"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9$asciiWs]"), lit(0))).cast("long")
 
-  // deliberately the replace-and-measure form, NOT regexp_count: for
-  // single-CHARACTER classes the count form walks one regex match per
-  // character and measured ~9% slower than one replace pass
-  // (same-JVM interleaved A/B, OPTIMIZATION_r19.md §8)
+  /** Share of ASCII letters among the text's characters: one byte pass
+    * ([[graft.functions.AsciiLetterCountExpr]]) over `length`. */
   def alphaRatio(c: Column): Column =
-    length(regexp_replace(c, "[^a-zA-Z]", "")).cast("double") /
+    nativeColumn(c)(AsciiLetterCountExpr(_)).cast("double") /
       greatest(length(c), lit(1)).cast("double")
 
   def stopwordRatio(c: Column): Column = {
     val stops = Seq("the", "a", "and", "of", "to", "in", "is")
-    val hits = stops.map(s => countOccurrences(concat(lit(" "), c, lit(" ")), s" $s ")).reduce(_ + _)
+    val hits = stops.map(wordHits(c, _)).reduce(_ + _)
     hits.cast("double") / greatest(tokenCount(c), lit(1L)).cast("double")
   }
 
@@ -102,8 +108,7 @@ object TextAnalysis {
     * language, argmax with fixed precedence (en,de,fr,es), 'und' when all
     * zero. Deterministic and SQL-mirrorable. */
   def langId(c: Column): Column = {
-    def hits(markers: Seq[String]): Column =
-      markers.map(m => countOccurrences(concat(lit(" "), c, lit(" ")), s" $m ")).reduce(_ + _)
+    def hits(markers: Seq[String]): Column = markers.map(wordHits(c, _)).reduce(_ + _)
     val en = hits(Seq("the", "a", "and"))
     val de = hits(Seq("der", "und", "die"))
     val fr = hits(Seq("le", "la", "et"))

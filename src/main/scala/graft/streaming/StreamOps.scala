@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.ExprHelpers.tokenStrings
 
 /** Structured-Streaming reinterpretation of the reference's stream surface
   * (BASELINE.json north-star; SURVEY.md §7.2 step 8).
@@ -19,10 +20,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *     (Identity/Accumulate live in the state, Finish on emit).
   */
 object StreamOps {
-
-  /** The batch tokenizer's pattern ([[graft.operators.TextAnalysis.tokenPattern]]),
-    * compiled once for the row-at-a-time twins below. */
-  private val tokenRegex = graft.operators.TextAnalysis.tokenPattern.r
 
   /** `useInfinite`-style unbounded generator: one row per tick with a
     * monotone `idx` and `value = f(idx)` expressed as a Column transform. */
@@ -308,7 +305,7 @@ object StreamOps {
       FreeRunGuard.arm(docs.sparkSession, "streamingCdcChunkCandidates(ttl)")
     val boundarySet = "0123456789abcdef".take(boundaryHexFirst).toSet
     val chunked: Dataset[(String, Long)] = docs.flatMap { case (id, text) =>
-      val toks = tokenRegex.findAllIn(text).toSeq
+      val toks = tokenStrings(text).toSeq
       if (toks.isEmpty) Seq.empty[(String, Long)]
       else {
         val chunks = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
@@ -393,14 +390,14 @@ object StreamOps {
     val evalIndex: Map[String, Seq[Long]] = eval.select(
         col(idCol).cast("long").as("id"), col(textCol).as("t"))
       .collect().flatMap { r =>
-        val toks = tokenRegex.findAllIn(r.getString(1)).toSeq
+        val toks = tokenStrings(r.getString(1)).toSeq
         toks.sliding(w).filter(_.length == w).map(_.mkString(" "))
           .toSeq.distinct.map(sh => sh -> r.getLong(0))
       }.groupBy(_._1).map { case (sh, hits) => sh -> hits.map(_._2).toSeq }
     val bc = docs.sparkSession.sparkContext.broadcast(evalIndex)
     docs.flatMap { case (_, text) =>
       val idx = bc.value
-      val toks = tokenRegex.findAllIn(text).toSeq
+      val toks = tokenStrings(text).toSeq
       toks.sliding(w).filter(_.length == w).map(_.mkString(" "))
         .toSeq.distinct
         .flatMap(sh => idx.getOrElse(sh, Nil).map(id => (id, sh)))
@@ -704,8 +701,7 @@ object StreamOps {
     val bc = docs.sparkSession.sparkContext.broadcast((c2, c1, v))
     docs.map { case (id, text) =>
       val (m2, m1, vv) = bc.value
-      // same tokenization as Dedup.shingleArray(_, 2): ASCII-ws runs
-      val toks = tokenRegex.findAllIn(text).toArray
+      val toks = tokenStrings(text)
       var n = 0L; var sum = 0.0
       var i = 0
       while (i < toks.length - 1) {
@@ -754,8 +750,7 @@ object StreamOps {
     val bc = docs.sparkSession.sparkContext.broadcast((terms.toArray, dfs))
     docs.map { case (id, text) =>
       val (ts, dfArr) = bc.value
-      // same tokenization as TextAnalysis.tokens: ASCII-ws runs
-      val tk = tokenRegex.findAllIn(text).toArray
+      val tk = tokenStrings(text)
       val dl = tk.length.toDouble
       var score = 0.0; var hits = 0L
       var i = 0
@@ -798,7 +793,7 @@ object StreamOps {
     val bc = docs.sparkSession.sparkContext.broadcast((terms.toArray, dfs))
     docs.map { case (id, text) =>
       val (ts, dfArr) = bc.value
-      val tk = tokenRegex.findAllIn(text).toArray
+      val tk = tokenStrings(text)
       var score = 0.0; var hits = 0L
       var i = 0
       while (i < ts.length) {
@@ -836,7 +831,7 @@ object StreamOps {
       if (r == 0.0) 0.0 else r // normalize -0.0 like the batch `+ 0.0`
     }
     docs.map { case (id, text) =>
-      val tk = tokenRegex.findAllIn(text).toArray
+      val tk = tokenStrings(text)
       val n = tk.length.toLong
       val meanLen = if (n == 0) 0.0 else tk.map(_.length.toLong).sum.toDouble / n
       val alphaFrac = if (n == 0) 0.0
@@ -919,8 +914,7 @@ object StreamOps {
       // provider lookup; digest() resets the instance between calls
       val md = java.security.MessageDigest.getInstance("MD5")
       it.map { case (id, text) =>
-        // same tokenization as TextAnalysis.tokens: ASCII-ws runs
-        val tk = tokenRegex.findAllIn(text).toArray
+        val tk = tokenStrings(text)
         var sum = 0.0
         var i = 0
         while (i < tk.length) {
@@ -973,8 +967,7 @@ object StreamOps {
         syms.length.toLong
       })
       it.map { case (id, text) =>
-        // same tokenization as TextAnalysis.tokens: ASCII-ws runs
-        val tk = tokenRegex.findAllIn(text).toArray
+        val tk = tokenStrings(text)
         var nb = 0L
         var i = 0
         while (i < tk.length) { nb += symCount(tk(i)); i += 1 }
@@ -1004,8 +997,7 @@ object StreamOps {
       // ONE digest per partition, not per token (see streamingDsir)
       val md = java.security.MessageDigest.getInstance("MD5")
       it.map { case (id, text) =>
-      // same tokenization as TextAnalysis.tokens: ASCII-ws runs
-      val tk = tokenRegex.findAllIn(text).toArray
+      val tk = tokenStrings(text)
       var dot = 0.0
       var i = 0
       while (i < tk.length) {

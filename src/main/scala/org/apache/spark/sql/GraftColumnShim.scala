@@ -24,41 +24,33 @@ object GraftColumnShim {
     case _ => (c, true, true)
   }
 
-  /** Column over the native [[graft.functions.PqCodesExpr]] — codebooks
-    * are constructor data, not SQL arguments, so this can't go through
-    * the function registry like the other graft expressions; built here
-    * because Column↔Expression conversion is `private[sql]`. */
-  def pqCodesColumn(vec: Column,
-                    books: Array[Array[Array[Double]]]): Column =
+  /** Column over a native graft expression of one column, built by `f`
+    * from that column's expression. Native expressions are constructed
+    * here, not through the function registry: their constructor data
+    * (PQ codebooks, BPE merge lists, literal targets) has no SQL form,
+    * operator code then does not depend on session registration order,
+    * and Column↔Expression conversion is `private[sql]`. */
+  def nativeColumn(c: Column)(
+      f: org.apache.spark.sql.catalyst.expressions.Expression =>
+        org.apache.spark.sql.catalyst.expressions.Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(
-      graft.functions.PqCodesExpr(
-        org.apache.spark.sql.classic.ExpressionUtils.expression(vec), books))
+      f(org.apache.spark.sql.classic.ExpressionUtils.expression(c)))
 
-  /** Column over the native [[graft.functions.HexVotes16Expr]] —
-    * constructed directly (not via `call_function`) so operator code
-    * does not depend on session registration order. */
+  /** Column over the native [[graft.functions.PqCodesExpr]]. */
+  def pqCodesColumn(vec: Column, books: Array[Array[Array[Double]]]): Column =
+    nativeColumn(vec)(graft.functions.PqCodesExpr(_, books))
+
+  /** Column over the native [[graft.functions.HexVotes16Expr]]. */
   def hexVotes16Column(hex: Column): Column =
-    org.apache.spark.sql.classic.ExpressionUtils.column(
-      graft.functions.HexVotes16Expr(
-        org.apache.spark.sql.classic.ExpressionUtils.expression(hex)))
+    nativeColumn(hex)(graft.functions.HexVotes16Expr(_))
 
-  /** Column over the native [[graft.functions.MinHashSigExpr]] (same
-    * direct construction as [[hexVotes16Column]]). */
-  def minhashSignatureColumn(text: Column, shingleWidth: Int,
-                             numHashes: Int): Column =
-    org.apache.spark.sql.classic.ExpressionUtils.column(
-      graft.functions.MinHashSigExpr(
-        org.apache.spark.sql.classic.ExpressionUtils.expression(text),
-        shingleWidth, numHashes))
+  /** Column over the native [[graft.functions.MinHashSigExpr]]. */
+  def minhashSignatureColumn(text: Column, shingleWidth: Int, numHashes: Int): Column =
+    nativeColumn(text)(graft.functions.MinHashSigExpr(_, shingleWidth, numHashes))
 
-  /** Column over the native [[graft.functions.BpeMergesExpr]] — the
-    * merge list is constructor data (same registry bypass as
-    * [[pqCodesColumn]]). */
-  def bpeMergesColumn(syms: Column,
-                      merges: Array[(String, String)]): Column =
-    org.apache.spark.sql.classic.ExpressionUtils.column(
-      graft.functions.BpeMergesExpr(
-        org.apache.spark.sql.classic.ExpressionUtils.expression(syms), merges))
+  /** Column over the native [[graft.functions.BpeMergesExpr]]. */
+  def bpeMergesColumn(syms: Column, merges: Array[(String, String)]): Column =
+    nativeColumn(syms)(graft.functions.BpeMergesExpr(_, merges))
 
   /** Release the cached blocks behind a `localCheckpoint()`ed Dataset:
     * its analyzed plan is a `LogicalRDD` over the checkpointed

@@ -1,8 +1,62 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.GraftFunctions
+import graft.operators.{Dedup, TextAnalysis => TA}
+
+/** The regex forms that the native tokenizer kernels replaced, kept as
+  * the reference they are pinned against: Java regexes over the text
+  * decoded to a `String`. */
+object RegexText {
+  private val ws = TA.asciiWs
+
+  def tokens(c: Column): Column = regexp_extract_all(c, lit(s"[^$ws]+"), lit(0))
+
+  def tokenCount(c: Column): Column = size(tokens(c)).cast("long")
+
+  def shingleArray(c: Column, w: Int): Column = {
+    val norm = regexp_replace(trim(c), s"[$ws]+", " ")
+    val unit = Seq.fill(w)("\\S+").mkString(" ")
+    regexp_extract_all(norm, lit(s"(?:^| )(?=($unit))"), lit(1))
+  }
+
+  def countOccurrences(c: Column, target: String): Column =
+    regexp_count(c, lit(java.util.regex.Pattern.quote(target))).cast("long")
+
+  private def wordHits(c: Column, w: String): Column =
+    countOccurrences(concat(lit(" "), c, lit(" ")), s" $w ")
+
+  def alphaRatio(c: Column): Column =
+    length(regexp_replace(c, "[^a-zA-Z]", "")).cast("double") /
+      greatest(length(c), lit(1)).cast("double")
+
+  def stopwordRatio(c: Column): Column = {
+    val hits = Seq("the", "a", "and", "of", "to", "in", "is").map(wordHits(c, _)).reduce(_ + _)
+    hits.cast("double") / greatest(tokenCount(c), lit(1L)).cast("double")
+  }
+
+  def qualityScore(c: Column): Column = {
+    val lenScore = when(length(c) >= 200 && length(c) <= 5000, 1.0)
+      .when(length(c) >= 50, 0.5).otherwise(0.0)
+    val stop = least(stopwordRatio(c) * 5.0, lit(1.0))
+    round((lenScore + alphaRatio(c) + stop) / 3.0 + 1e-9, 4)
+  }
+
+  def langId(c: Column): Column = {
+    def hits(markers: Seq[String]): Column = markers.map(wordHits(c, _)).reduce(_ + _)
+    val en = hits(Seq("the", "a", "and"))
+    val de = hits(Seq("der", "und", "die"))
+    val fr = hits(Seq("le", "la", "et"))
+    val es = hits(Seq("el", "los", "y"))
+    when(en >= de && en >= fr && en >= es && en > 0, "en")
+      .when(de >= fr && de >= es && de > 0, "de")
+      .when(fr >= es && fr > 0, "fr")
+      .when(es > 0, "es")
+      .otherwise("und")
+  }
+}
 
 /** Native-expression specs: code_points under codegen, utf32 round trips,
   * and U+FFFD policies (SURVEY.md §5, unicodeCorpus fixture). */
@@ -345,7 +399,7 @@ class ExpressionSpec extends AnyFunSuite {
   private def explodeSignature(df: org.apache.spark.sql.DataFrame,
                                w: Int, k: Int): org.apache.spark.sql.DataFrame = {
     val sh = df.select(col("id"),
-      explode(array_distinct(graft.operators.Dedup.shingleArray(col("text"), w))).as("shingle"))
+      explode(array_distinct(RegexText.shingleArray(col("text"), w))).as("shingle"))
     val withDigests = sh.select(col("id") +: (0 until (k + 3) / 4).map(j =>
       md5(concat(lit(s"$j#"), col("shingle"))).as(s"d$j")): _*)
     val aggs = (0 until k).map(i =>
@@ -449,5 +503,201 @@ class ExpressionSpec extends AnyFunSuite {
     val e = graft.functions.EvalBarrier(
       org.apache.spark.sql.catalyst.expressions.Literal(1.0))
     assert(!e.deterministic)
+  }
+
+  /** The test-data layout's sf0.01 `documents` table. */
+  private val documentsSf001 = "/root/testdata/sf0.01/documents.parquet"
+
+  /** Texts at the edges of the tokenizer and count contracts. */
+  private val edgeTexts = Seq[String](
+    null, "", " ", "   ", "\t", " \t\n\r\u000B\f ", "one", "one two",
+    "  leading and trailing spaces  ", "\tlead tab", "trail tab\t",
+    "\u000Bvt lead", "vt trail\u000B", "\fform\ffeed\f", "crlf\r\nline two\r\n",
+    "nbsp\u00A0joins a\u00A0b", "ideographic\u3000space", "café é è the été",
+    "日本語 の テキスト です", "astral 🎉 𝔘𝔫𝔦 tokens 🎊", "the the the", "thethe the",
+    "the", " the ", "The THE the", "the, the. the", "a a a a", "und die der und",
+    "le la et el los y", "y y y", "a.b..c....", "(x) (x)(x)",
+    "the quick brown fox jumps over the lazy dog and a cat is in the hat " * 4,
+    "der Hund und die Katze und der Vogel")
+
+  /** The edge texts plus the sf0.01 `documents` texts, as an RDD-backed
+    * frame: over a local relation the optimizer would fold every
+    * projection through `eval`, whatever the factory mode. */
+  private def textCorpus(): DataFrame = {
+    val docs = spark.read.parquet(documentsSf001)
+      .select(col("text")).as[String].collect().toSeq
+    spark.sparkContext.parallelize((edgeTexts ++ docs).zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }, 3).toDF("id", "text")
+  }
+
+  /** Runs `f` with `spark.sql.codegen.factoryMode` set to each of
+    * NO_CODEGEN (every expression through `eval`) and CODEGEN_ONLY
+    * (through `doGenCode`, no interpreted fallback). */
+  private def inFactoryModes[T](f: String => T): Seq[T] = {
+    val key = "spark.sql.codegen.factoryMode"
+    val prev = spark.conf.getOption(key)
+    try Seq("NO_CODEGEN", "CODEGEN_ONLY").map { mode => spark.conf.set(key, mode); f(mode) }
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** Binary values compared by content, doubles by their bits. */
+  private def canonical(r: Row): Seq[Any] = r.toSeq.map {
+    case b: Array[Byte] => b.toSeq
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case x => x
+  }
+
+  test("native tokenizer kernels == their regex forms on sf0.01 documents and edge texts") {
+    val t = col("text")
+    val cols: Seq[(String, Column, Column)] = Seq(
+      ("tokens", TA.tokens(t), RegexText.tokens(t)),
+      ("tokenCount", TA.tokenCount(t), RegexText.tokenCount(t)),
+      ("alphaRatio", TA.alphaRatio(t), RegexText.alphaRatio(t)),
+      ("stopwordRatio", TA.stopwordRatio(t), RegexText.stopwordRatio(t)),
+      ("qualityScore", TA.qualityScore(t), RegexText.qualityScore(t)),
+      ("langId", TA.langId(t), RegexText.langId(t))) ++
+      Seq(1, 2, 3, 5).map(w =>
+        (s"shingleArray w=$w", Dedup.shingleArray(t, w), RegexText.shingleArray(t, w))) ++
+      Seq("the", " the ", "a", "und", "é", "日本", "🎉", ".", "..", "(x)", "\t", "\u00A0").map(x =>
+        (s"countOccurrences '$x'", TA.countOccurrences(t, x), RegexText.countOccurrences(t, x)))
+    val corpus = textCorpus()
+    inFactoryModes { mode =>
+      val df = corpus.select(col("id") +: col("text") +:
+        cols.flatMap { case (n, a, b) => Seq(a.as(s"n_$n"), b.as(s"r_$n")) }: _*)
+      cols.indices.foreach { k =>
+        assert(df.schema(2 + 2 * k).dataType == df.schema(3 + 2 * k).dataType, cols(k)._1)
+      }
+      val rows = df.collect()
+      assert(rows.length == edgeTexts.length + 500)
+      rows.foreach { r =>
+        cols.indices.foreach { k =>
+          val (got, want) = (r.get(2 + 2 * k), r.get(3 + 2 * k))
+          val same = (got, want) match {
+            case (x: Double, y: Double) =>
+              java.lang.Double.doubleToRawLongBits(x) == java.lang.Double.doubleToRawLongBits(y)
+            case _ => got == want
+          }
+          assert(same, s"$mode ${cols(k)._1} on ${r.get(1)}: native $got, regex $want")
+        }
+      }
+      val byText = rows.filter(!_.isNullAt(1)).map(r => r.getString(1) -> r).toMap
+      def at(text: String, name: String) = byText(text).get(2 + 2 * cols.indexWhere(_._1 == name))
+      // non-overlapping: " the " matches once in "the the the"
+      assert(at("the the the", "countOccurrences ' the '") == 1L)
+      assert(at("a.b..c....", "countOccurrences '..'") == 3L)
+      assert(at("nbsp\u00A0joins a\u00A0b", "tokens") == Seq("nbsp\u00A0joins", "a\u00A0b"))
+      assert(at(" \t\n\r\u000B\f ", "tokens") == Seq.empty)
+    }
+  }
+
+  test("tokenCount(null) is size(null): null under ANSI, -1 without") {
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.getOption(key)
+    try Seq("true" -> null, "false" -> -1L).foreach { case (ansi, want) =>
+      spark.conf.set(key, ansi)
+      val df = spark.sparkContext.parallelize(Seq[(Long, String)]((1L, null)), 1)
+        .toDF("id", "text")
+      inFactoryModes { mode =>
+        val r = df.select(TA.tokenCount(col("text")), RegexText.tokenCount(col("text"))).head()
+        assert(r.get(0) == want && r.get(1) == want, s"ansi=$ansi $mode: $r")
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("invalid UTF-8: tokens keep the raw bytes; counts equal the decoded text's") {
+    import graft.functions.ExprHelpers
+    import org.apache.spark.unsafe.types.UTF8String
+    // 'a', a stray continuation byte, a space, a truncated 3-byte lead, 'b'
+    val raw = UTF8String.fromBytes(Array[Byte](0x61, 0x80.toByte, 0x20, 0xE6.toByte, 0x62))
+    val toks = ExprHelpers.shingles(raw, 1).array.toSeq
+      .map(_.asInstanceOf[UTF8String].getBytes.toSeq)
+    assert(toks == Seq(Seq[Byte](0x61, 0x80.toByte), Seq[Byte](0xE6.toByte, 0x62)))
+    // the String path decodes each bad byte to U+FFFD, which is not
+    // whitespace and not a letter, so counts agree
+    assert(raw.toString == "a\uFFFD \uFFFDb")
+    assert(ExprHelpers.tokenCount(raw) == 2 && ExprHelpers.asciiLetterCount(raw) == 2)
+  }
+
+  test("padded literal count reads the text between two virtual spaces") {
+    import graft.functions.ExprHelpers.countLiteral
+    import org.apache.spark.unsafe.types.UTF8String.fromString
+    val the = " the ".getBytes("UTF-8")
+    // " the the the ": the match at 0 ends on the space the next one
+    // would start with, so 2, non-overlapping; unpadded only the middle
+    assert(countLiteral(fromString("the the the"), the, pad = true) == 2)
+    assert(countLiteral(fromString("the the the"), the, pad = false) == 1)
+    assert(countLiteral(fromString("the"), the, pad = true) == 1)
+    assert(countLiteral(fromString(""), "  ".getBytes("UTF-8"), pad = true) == 1)
+    assert(countLiteral(fromString(""), the, pad = true) == 0)
+  }
+
+  test("eval and codegen agree for every native kernel; the plan takes the mode's path") {
+    GraftFunctions.register(spark)
+    import org.apache.spark.sql.GraftColumnShim
+    val corpus = textCorpus()
+    def vec(seed: Int): Seq[Double] = (0 until 8).map(i => (((seed * 31 + i) % 17) - 8) / 8.0)
+    val books = Array.tabulate(2, 3, 4)((j, t, i) => (((j * 7 + t * 5 + i) % 9) - 4) / 4.0)
+    val vecs = spark.sparkContext.parallelize((0 until 40).map(i => (i.toLong, vec(i))), 2)
+      .toDF("id", "v")
+    val words = spark.sparkContext.parallelize(Seq("aaa", "aab", "caab", "", "xyxy", "ab")
+      .map(w => (w, w.map(_.toString))), 2).toDF("w", "syms")
+    val mergeList = Array(("a", "a"), ("aa", "b"), ("c", "aab"), ("x", "y"))
+    val cases: Seq[(String, () => DataFrame)] = Seq(
+      "graft_shingles" -> (() => corpus.select(col("id"), Dedup.shingleArray(col("text"), 2))),
+      "graft_token_count" -> (() => corpus.select(col("id"), TA.tokenCount(col("text")))),
+      "graft_count_literal" -> (() => corpus.select(col("id"), TA.langId(col("text")),
+        TA.countOccurrences(col("text"), "the"))),
+      "graft_ascii_letters" -> (() => corpus.select(col("id"), TA.alphaRatio(col("text")))),
+      "graft_minhash_signature" -> (() => corpus.select(col("id"),
+        GraftColumnShim.minhashSignatureColumn(col("text"), 2, 5))),
+      "graft_pq_codes" -> (() => vecs.select(col("id"),
+        GraftColumnShim.pqCodesColumn(col("v"), books))),
+      "graft_hex_votes16" -> (() => corpus.select(col("id"),
+        GraftColumnShim.hexVotes16Column(md5(col("text"))))),
+      "graft_bpe_merges" -> (() => words.select(col("w"),
+        GraftColumnShim.bpeMergesColumn(col("syms"), mergeList))),
+      "graft_utf32le_encode" -> (() => corpus.select(col("id"),
+        call_function("graft_utf32le_encode", col("text")))),
+      "graft_utf32be_decode" -> (() => corpus.select(col("id"),
+        call_function("graft_utf32be_decode",
+          call_function("graft_utf32be_encode", col("text"))))))
+    cases.foreach { case (name, build) =>
+      val Seq(interpreted, generated) = inFactoryModes { mode =>
+        val df = build()
+        val rows = df.collect().map(canonical).toSeq
+        val plan = df.queryExecution.executedPlan.toString
+        val line = plan.split("\n").find(_.contains(name))
+        assert(line.isDefined, s"$name not in the plan:\n$plan")
+        assert(line.get.contains("*(") == (mode == "CODEGEN_ONLY"), s"$name $mode:\n$plan")
+        rows
+      }
+      assert(interpreted.nonEmpty && interpreted == generated, name)
+    }
+  }
+
+  test("the gate, tokens and shingles plan no regex expression") {
+    import org.apache.spark.sql.catalyst.expressions.{RegExpCount, RegExpExtractAll, RegExpReplace}
+    val docs = spark.read.parquet(documentsSf001)
+    val t = col("text")
+    val gate = docs.select(col("doc_id"), TA.langId(t).as("lang"),
+      TA.qualityScore(t).as("quality"), TA.tokenCount(t).as("n_tokens"))
+    val plans = Seq(
+      "gate projection" -> gate,
+      "filtered gate" -> gate.filter(col("quality") >= 0.5),
+      "tokens" -> docs.select(TA.tokens(t)),
+      "shingleArray" -> docs.select(Dedup.shingleArray(t, 3)))
+    plans.foreach { case (name, df) =>
+      val plan = df.queryExecution.optimizedPlan
+      val regex = plan.collect { case p => p.expressions }.flatten.flatMap(_.collect {
+        case e @ (_: RegExpCount | _: RegExpExtractAll | _: RegExpReplace) => e
+      })
+      assert(regex.isEmpty, s"$name plans a regex:\n$plan")
+    }
   }
 }

@@ -13,7 +13,11 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLAdaptiveExecutionUpdate
   * eager or lazy checkpoints, driver collects) hide that work from the
   * top plan, so the AQE-final plan of every SQL execution the build
   * runs is printed first, in execution order, with the number of Spark
-  * jobs (AQE stage jobs included) the build and the first count ran. */
+  * jobs (AQE stage jobs included) the build and the first count ran.
+  *
+  * The name `gate` dumps the curation quality gate instead of a query:
+  * langId, qualityScore and tokenCount of `documents.text`, filtered on
+  * quality >= 0.5 (the perfbench `curation` gate's shape). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val name = args(0)
@@ -37,7 +41,15 @@ object PlanDump {
       jobs.get
     }
     sc.addSparkListener(listener)
-    val df = SparkEntry.queries(name)(spark, dir)
+    val df =
+      if (name == "gate") {
+        import org.apache.spark.sql.functions.col
+        import graft.operators.{TextAnalysis => TA}
+        spark.read.parquet(s"$dir/documents.parquet")
+          .select(col("doc_id"), col("text"), TA.langId(col("text")).as("lang"),
+            TA.qualityScore(col("text")).as("quality"), TA.tokenCount(col("text")).as("n_tokens"))
+          .filter(col("quality") >= 0.5)
+      } else SparkEntry.queries(name)(spark, dir)
     val buildJobs = drained()
     println(s"== AQE final plans of the ${finals.size} SQL executions run while building $name ==")
     finals.forEach { (id, plan) =>
