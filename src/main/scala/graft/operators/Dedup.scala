@@ -217,14 +217,20 @@ object Dedup {
     * `bands` copies of the (expensive) signature aggregation in the plan;
     * ReuseExchange dedups the shuffle but each copy still re-runs the
     * final aggregate. */
-  def lshBands(sig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
-    val keys = (0 until bands).map { b =>
-      val ks = (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}"))
-      concat_ws("|", ks: _*)
-    }
-    sig.select(col("id"), posexplode(array(keys: _*)).as(Seq("band", "key")))
+  def lshBands(sig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
+    sig.select(col("id"),
+        posexplode(bandKeys(i => col(s"h$i"), bands, rowsPerBand)).as(Seq("band", "key")))
       .select(col("band"), col("key"), col("id"))
-  }
+
+  /** The `bands` LSH band keys of one signature, as an array column:
+    * key b joins hashes `h(b·rowsPerBand)` … `h(b·rowsPerBand +
+    * rowsPerBand − 1)` with "|". `h(i)` is the i-th MinHash value —
+    * [[lshBands]] reads the aggregated `h$i` columns, the streaming
+    * twins read the per-row signature array. */
+  private[graft] def bandKeys(h: Int => Column, bands: Int, rowsPerBand: Int): Column =
+    array((0 until bands).map { b =>
+      concat_ws("|", (0 until rowsPerBand).map(r => h(b * rowsPerBand + r)): _*)
+    }: _*)
 
   /** Candidate pairs (a < b) sharing at least one LSH band bucket. The
     * self-join happens per (band, key) bucket — skew-safe as long as
@@ -584,8 +590,7 @@ object Dedup {
     * shorter than one shingle report 0/0 → contamination 0. */
   def contamination(train: DataFrame, eval: DataFrame, idCol: String,
                     textCol: String, w: Int): DataFrame = {
-    val evalSh = eval.select(col(idCol).as("id"),
-      explode(shingleArray(col(textCol), w)).as("shingle")).distinct()
+    val evalSh = shingleSet(eval, idCol, textCol, w)
     val totals = evalSh.groupBy(col("id")).agg(count(lit(1)).as("total"))
     val hits = train.select(explode(shingleArray(col(textCol), w)).as("shingle"))
       .join(broadcast(evalSh), "shingle")
@@ -600,6 +605,13 @@ object Dedup {
           .otherwise(coalesce(col("matched"), lit(0L)).cast("double") /
             col("total").cast("double")).as("contamination"))
   }
+
+  /** The distinct (id, shingle) pairs of a frame's w-shingles — the eval
+    * side of [[contamination]] and of its streaming twin. */
+  private[graft] def shingleSet(df: DataFrame, idCol: String, textCol: String,
+                                w: Int): DataFrame =
+    df.select(col(idCol).as("id"),
+      explode(shingleArray(col(textCol), w)).as("shingle")).distinct()
 
   /** 16-bit SimHash over whitespace tokens: bit i is set when the majority
     * of token digests have hex digit i in [8..f]. Same-fingerprint docs are

@@ -251,26 +251,35 @@ object Sampling {
     * Adds `tier` (int 1..nTiers). */
   def quantileTiers(df: DataFrame, metric: Column, nTiers: Int,
                     approx: Boolean = false, accuracy: Int = 10000): DataFrame = {
-    require(nTiers >= 2, s"nTiers must be at least 2, got $nTiers")
-    val thr =
-      if (approx) {
-        val ps = array((1 until nTiers).map(i => lit(i.toDouble / nTiers)): _*)
-        df.agg(approx_percentile(metric.cast("double"), ps, lit(accuracy)).as("__ta"))
-          .select((1 until nTiers).map(i =>
-            round(element_at(col("__ta"), i), 4).as(s"__t$i")): _*)
-      } else {
-        val thrAggs = (1 until nTiers).map(i =>
-          round(percentile(metric.cast("double"), lit(i.toDouble / nTiers)), 4)
-            .as(s"__t$i"))
-        df.agg(thrAggs.head, thrAggs.tail: _*)
-      }
-    val tier = (1 until nTiers).map(i =>
-      when(metric.cast("double") > col(s"__t$i"), 1).otherwise(0))
-      .reduce(_ + _) + lit(1)
-    df.crossJoin(broadcast(thr))
-      .withColumn("tier", tier.cast("int"))
+    df.crossJoin(broadcast(tierThresholds(df, metric, nTiers, approx, accuracy)))
+      .withColumn("tier", tierExpr(metric, nTiers, i => col(s"__t$i")).cast("int"))
       .drop((1 until nTiers).map(i => s"__t$i"): _*)
   }
+
+  /** The 1-row frame of [[quantileTiers]]' rounded thresholds
+    * `__t1` … `__t(nTiers−1)`. */
+  private[graft] def tierThresholds(df: DataFrame, metric: Column, nTiers: Int,
+                                    approx: Boolean, accuracy: Int): DataFrame = {
+    require(nTiers >= 2, s"nTiers must be at least 2, got $nTiers")
+    if (approx) {
+      val ps = array((1 until nTiers).map(i => lit(i.toDouble / nTiers)): _*)
+      df.agg(approx_percentile(metric.cast("double"), ps, lit(accuracy)).as("__ta"))
+        .select((1 until nTiers).map(i =>
+          round(element_at(col("__ta"), i), 4).as(s"__t$i")): _*)
+    } else {
+      val thrAggs = (1 until nTiers).map(i =>
+        round(percentile(metric.cast("double"), lit(i.toDouble / nTiers)), 4)
+          .as(s"__t$i"))
+      df.agg(thrAggs.head, thrAggs.tail: _*)
+    }
+  }
+
+  /** A row's tier: 1 + the number of thresholds `thr(1)` …
+    * `thr(nTiers−1)` strictly below its metric (ties attach downward). */
+  private[graft] def tierExpr(metric: Column, nTiers: Int, thr: Int => Column): Column =
+    (1 until nTiers).map(i =>
+      when(metric.cast("double") > thr(i), 1).otherwise(0))
+      .reduce(_ + _) + lit(1)
 
   /** Stratified sample: per-stratum fractions (the training-mix
     * reweighting step — e.g. upweight low-resource languages). The

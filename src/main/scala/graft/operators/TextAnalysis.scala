@@ -174,7 +174,7 @@ object TextAnalysis {
       aggregate(transform(toks, t => length(t).cast("long")), lit(0L),
         (acc, x) => acc + x).cast("double") / nWords.cast("double"))
     val alphaFrac = when(nWords === 0, lit(0.0)).otherwise(
-      size(filter(toks, t => t.rlike("[a-zA-Z]"))).cast("double") /
+      size(filter(toks, t => nativeColumn(t)(AsciiLetterCountExpr(_)) > 0)).cast("double") /
         nWords.cast("double"))
     val stopHits = size(filter(toks, t => t.isin(stops: _*))).cast("long")
     df.select(col(idCol).as("id"),
@@ -197,26 +197,62 @@ object TextAnalysis {
     * (id, n_query_hits, score); empty docs score 0. */
   def tfidf(docs: org.apache.spark.sql.DataFrame, idCol: String,
             textCol: String, terms: Seq[String]): org.apache.spark.sql.DataFrame = {
+    val base = termFreqs(docs, col(idCol), col(textCol), terms)
+    base.crossJoin(broadcast(termStats(base, terms.size)))
+      .select(col("id"), queryHits(terms.size).as("n_query_hits"),
+        tfidfScore(terms.size, col("nn"), i => col(s"df$i")).as("score"))
+  }
+
+  /** The map-side projection of the query-term scorers [[bm25]] and
+    * [[tfidf]]: `id`, the token count `dl` and one `tf$i` per query term,
+    * folded from the token array (the terms are literals: no explode, no
+    * per-token rows). `terms` must be non-empty and duplicate-free. */
+  private[graft] def termFreqs(docs: org.apache.spark.sql.DataFrame, id: Column,
+                               text: Column, terms: Seq[String]): org.apache.spark.sql.DataFrame = {
     require(terms.nonEmpty, "need at least one query term")
     require(terms.distinct.size == terms.size, "query terms must be unique")
-    val toks = tokens(col(textCol))
+    val toks = tokens(text)
     val tfCols = terms.zipWithIndex.map { case (t, i) =>
       size(filter(toks, x => x === lit(t))).cast("double").as(s"tf$i")
     }
-    val base = docs.select((col(idCol).as("id") +: tfCols): _*)
+    docs.select((id.as("id") +: size(toks).cast("double").as("dl") +: tfCols): _*)
+  }
+
+  /** The corpus statistics of a [[termFreqs]] frame, reduced to ONE row:
+    * `nn` (doc count), `avgdl` and `df$i` per term. */
+  private[graft] def termStats(base: org.apache.spark.sql.DataFrame,
+                               nTerms: Int): org.apache.spark.sql.DataFrame = {
     val statAggs = count(lit(1)).cast("double").as("nn") +:
-      terms.indices.map(i =>
+      avg(col("dl")).as("avgdl") +:
+      (0 until nTerms).map(i =>
         sum(when(col(s"tf$i") > 0, 1.0).otherwise(0.0)).as(s"df$i"))
-    val stats = base.agg(statAggs.head, statAggs.tail: _*)
-    val scored = base.crossJoin(broadcast(stats))
-    val termScore = terms.indices.map { i =>
-      val idf = log((col("nn") + lit(1.0)) / (col(s"df$i") + lit(1.0))) + lit(1.0)
+    base.agg(statAggs.head, statAggs.tail: _*)
+  }
+
+  /** Number of query terms a [[termFreqs]] row contains. */
+  private[graft] def queryHits(nTerms: Int): Column =
+    (0 until nTerms).map(i =>
+      when(col(s"tf$i") > 0, 1L).otherwise(0L).cast("long")).reduce(_ + _)
+
+  /** Smooth-idf TF-IDF of a [[termFreqs]] row against corpus statistics
+    * given as columns: the batch operator's broadcast stats row, or
+    * literals frozen by the streaming twin. */
+  private[graft] def tfidfScore(nTerms: Int, nn: Column, df: Int => Column): Column =
+    (0 until nTerms).map { i =>
+      val idf = log((nn + lit(1.0)) / (df(i) + lit(1.0))) + lit(1.0)
       col(s"tf$i") * idf
     }.reduce(_ + _)
-    val hits = terms.indices.map(i =>
-      when(col(s"tf$i") > 0, 1L).otherwise(0L).cast("long")).reduce(_ + _)
-    scored.select(col("id"), hits.as("n_query_hits"), termScore.as("score"))
-  }
+
+  /** BM25 of a [[termFreqs]] row against corpus statistics given as
+    * columns (see [[tfidfScore]]); docs with no tokens score 0. */
+  private[graft] def bm25Score(nTerms: Int, k1: Double, b: Double, nn: Column,
+                               avgdl: Column, df: Int => Column): Column =
+    (0 until nTerms).map { i =>
+      val idf = log(lit(1.0) + (nn - df(i) + lit(0.5)) / (df(i) + lit(0.5)))
+      val tf = col(s"tf$i")
+      val denom = tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / avgdl)
+      when(col("dl") > 0, idf * tf * lit(k1 + 1.0) / denom).otherwise(lit(0.0))
+    }.reduce(_ + _)
 
   /** Zipf HEAD fit: least-squares regression of ln(freq) on ln(rank)
     * over the top-`k` vocabulary — the corpus-health diagnostic (natural
@@ -579,33 +615,13 @@ object TextAnalysis {
   def bm25(docs: org.apache.spark.sql.DataFrame, idCol: String,
            textCol: String, terms: Seq[String], k1: Double = 1.2,
            b: Double = 0.75): org.apache.spark.sql.DataFrame = {
-    require(terms.nonEmpty, "need at least one query term")
-    require(terms.distinct.size == terms.size, "query terms must be unique")
-    val toks = tokens(col(textCol))
-    // one map-side projection: dl + a tf column per literal query term
-    val tfCols = terms.zipWithIndex.map { case (t, i) =>
-      size(filter(toks, x => x === lit(t))).cast("double").as(s"tf$i")
-    }
-    val base = docs.select(
-      (col(idCol).as("id") +: size(toks).cast("double").as("dl") +: tfCols): _*)
-    // corpus stats reduce to ONE row: N, avgdl, df per term
-    val statAggs = count(lit(1)).cast("double").as("nn") +:
-      avg(col("dl")).as("avgdl") +:
-      terms.indices.map(i =>
-        sum(when(col(s"tf$i") > 0, 1.0).otherwise(0.0)).as(s"df$i"))
-    val stats = base.agg(statAggs.head, statAggs.tail: _*)
-    val scored = base.crossJoin(broadcast(stats))
-    val termScore = terms.indices.map { i =>
-      val idf = log(lit(1.0) +
-        (col("nn") - col(s"df$i") + lit(0.5)) / (col(s"df$i") + lit(0.5)))
-      val tf = col(s"tf$i")
-      val denom = tf + lit(k1) * (lit(1.0 - b) +
-        lit(b) * col("dl") / col("avgdl"))
-      when(col("dl") > 0, idf * tf * lit(k1 + 1.0) / denom).otherwise(lit(0.0))
-    }.reduce(_ + _)
-    val hits = terms.indices.map(i =>
-      when(col(s"tf$i") > 0, 1L).otherwise(0L).cast("long")).reduce(_ + _)
-    scored.select(col("id"), hits.as("n_query_hits"), termScore.as("score"))
+    // one map-side projection (dl + a tf column per literal query term);
+    // the corpus stats reduce to ONE row: N, avgdl, df per term
+    val base = termFreqs(docs, col(idCol), col(textCol), terms)
+    base.crossJoin(broadcast(termStats(base, terms.size)))
+      .select(col("id"), queryHits(terms.size).as("n_query_hits"),
+        bm25Score(terms.size, k1, b, col("nn"), col("avgdl"), i => col(s"df$i"))
+          .as("score"))
   }
 
   /** Greedy left-to-right adjacent merge of (a, b) → ab inside a symbol
@@ -753,9 +769,13 @@ object TextAnalysis {
     * OPTIMIZATION_r20.md). Adds `syms` (array&lt;string&gt;). */
   def bpeSegment(words: org.apache.spark.sql.DataFrame, wordCol: String,
                  merges: Seq[(String, String)]): org.apache.spark.sql.DataFrame =
-    words.withColumn("syms",
-      org.apache.spark.sql.GraftColumnShim.bpeMergesColumn(
-        filter(split(col(wordCol), ""), x => x =!= ""), merges.toArray))
+    words.withColumn("syms", bpeSymbols(col(wordCol), merges.toArray))
+
+  /** One word's BPE symbols: its code points, then the whole merge list
+    * in rank order ([[graft.functions.BpeMergesExpr]]). */
+  private[graft] def bpeSymbols(word: Column, merges: Array[(String, String)]): Column =
+    org.apache.spark.sql.GraftColumnShim.bpeMergesColumn(
+      filter(split(word, ""), x => x =!= ""), merges)
 
   /** BPE-encode a corpus against a trained merge list and report per-doc
     * token counts — the tokenizer-application step of an LLM data

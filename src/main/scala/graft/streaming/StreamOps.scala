@@ -104,14 +104,52 @@ object StreamOps {
     events.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(keyCols)
 
-  /** One text's MinHash signature through the helper the batch
-    * [[graft.functions.MinHashSigExpr]] calls, so the streaming twins
-    * band exactly the batch values; None when the text is null or has
-    * fewer than `w` tokens (the batch signature drops those docs). */
-  private def minhashSig(text: String, w: Int, k: Int): Option[IndexedSeq[String]] =
-    Option(graft.functions.ExprHelpers.minhashSignature(
-        org.apache.spark.unsafe.types.UTF8String.fromString(text), w, k))
-      .map(a => (0 until k).map(i => a.getUTF8String(i).toString))
+  /** `df`'s columns renamed, in order, to the fields of `T` — the batch
+    * kernels' column names as the twins' result types. */
+  private def typed[T](df: DataFrame)(implicit enc: Encoder[T]): Dataset[T] =
+    df.toDF(enc.schema.fieldNames.toIndexedSeq: _*).as[T]
+
+  /** The first-seen register behind the candidate twins, over (key, id)
+    * rows with a string key (bucket and cell ids are cast): the first id
+    * to bring a key is kept as that key's state, and every later id of
+    * the key is emitted as (key, id, first_id). Within a micro-batch the
+    * smallest id comes first. A `ttl` (see [[streamingNearDupCandidates]])
+    * opts into processing-time expiry: a key that stays quiet that long
+    * is evicted. `None` keeps every register for the life of the query. */
+  private def firstSeen(keyed: DataFrame, ttl: Option[String]): DataFrame = {
+    import keyed.sparkSession.implicits._
+    val timeout =
+      if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
+      else GroupStateTimeout.NoTimeout
+    keyed.groupBy(col("key")).as[String, (String, Long)]
+      .flatMapGroupsWithState[Long, (String, Long, Long)](OutputMode.Append, timeout) {
+        case (_, _, state: GroupState[Long]) if state.hasTimedOut =>
+          state.remove(); Iterator.empty
+        case (key, it, state: GroupState[Long]) =>
+          val ids = it.map(_._2).toSeq.distinct.sorted
+          val first = state.getOption.getOrElse(ids.head)
+          state.update(first) // unconditional: a TTL refresh needs a write
+          ttl.foreach(state.setTimeoutDuration)
+          ids.filterNot(_ == first).map(dup => (key, dup, first)).iterator
+      }.toDF("key", "id", "first_id")
+  }
+
+  /** A doc stream's LSH band keys as (band, key, id) rows: the batch
+    * [[graft.functions.MinHashSigExpr]] signature per row, banded by
+    * [[graft.operators.Dedup.bandKeys]]. A doc shorter than one shingle
+    * has no signature and so no band keys, as in the batch operator: a
+    * sentinel key would make every blank doc collide. */
+  private def streamBands(docs: Dataset[(Long, String)], shingleWidth: Int,
+                          numHashes: Int, bands: Int): DataFrame = {
+    require(numHashes % bands == 0)
+    val keys = graft.operators.Dedup.bandKeys(
+      i => col("sig").getItem(i), bands, numHashes / bands)
+    docs.toDF("id", "text")
+      .select(col("id"), org.apache.spark.sql.GraftColumnShim
+        .minhashSignatureColumn(col("text"), shingleWidth, numHashes).as("sig"))
+      .select(col("id"),
+        posexplode(when(col("sig").isNotNull, keys)).as(Seq("band", "key")))
+  }
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -119,14 +157,12 @@ object StreamOps {
 
   /** Streaming MinHash+LSH near-dup candidates — the unbounded twin of
     * [[graft.operators.Dedup.minhashNearDups]]'s candidate stage. Each
-    * incoming (id, text) is shingled, min-hashed (same construction as
-    * the batch operator: salted digests md5(j + "#" + shingle), four
-    * disjoint 8-hex windows per digest) and banded ON THE MAP SIDE; the
-    * only stateful op is a per-band-key
-    * first-seen register, so state is one id per observed band key.
-    * Emits (id, firstSeenId) for every later doc that collides with a
-    * key's first document — the same pair may arrive via several bands;
-    * dedup downstream if exact pairs are needed.
+    * incoming (id, text) gets the batch signature and band keys
+    * ([[streamBands]]) ON THE MAP SIDE; the only stateful op is a
+    * per-band-key first-seen register, so state is one id per observed
+    * band key. Emits (id, firstSeenId) for every later doc that collides
+    * with a key's first document — the same pair may arrive via several
+    * bands; dedup downstream if exact pairs are needed.
     *
     * State is one register row per DISTINCT band key — which grows with
     * distinct content, i.e. contractually unbounded over an endless
@@ -144,43 +180,15 @@ object StreamOps {
                                  bands: Int = 4,
                                  ttl: Option[String] = None): Dataset[(Long, Long)] = {
     import docs.sparkSession.implicits._
-    require(numHashes % bands == 0)
     // a processing-time TTL makes the query free-run empty batches
     // under the default trigger — arm the runtime guard (see
     // [[pacedTrigger]] for the fix the guard demands)
     if (ttl.isDefined)
       FreeRunGuard.arm(docs.sparkSession, "streamingNearDupCandidates(ttl)")
-    val rows = numHashes / bands
-    val banded: Dataset[(String, Long)] = docs.flatMap { case (id, text) =>
-      // docs shorter than one full shingle produce NO band keys — the
-      // batch signature drops them, and mapping them to a sentinel would
-      // make every blank doc collide
-      minhashSig(text, shingleWidth, numHashes).toSeq.flatMap { sig =>
-        (0 until bands).map { b =>
-          (b.toString + "|" + (0 until rows).map(r => sig(b * rows + r)).mkString("|"), id)
-        }
-      }
-    }
-    banded.groupByKey(_._1)
-      .flatMapGroupsWithState[Long, (Long, Long)](
-        OutputMode.Append, registerTimeout(ttl)) {
-        case (_, _, state: GroupState[Long]) if state.hasTimedOut =>
-          state.remove(); Iterator.empty
-        case (_, it, state: GroupState[Long]) =>
-          val ids = it.map(_._2).toSeq.distinct.sorted
-          val first = state.getOption.getOrElse(ids.head)
-          state.update(first) // unconditional: a TTL refresh needs a write
-          ttl.foreach(state.setTimeoutDuration)
-          ids.filterNot(_ == first).map(dup => (dup, first)).iterator
-      }
+    val banded = streamBands(docs, shingleWidth, numHashes, bands)
+      .select(concat_ws("|", col("band").cast("string"), col("key")).as("key"), col("id"))
+    typed[(Long, Long)](firstSeen(banded, ttl).select(col("id"), col("first_id")))
   }
-
-  /** Timeout conf for the first-seen registers: a `ttl` opts into
-    * processing-time expiry (the register's eviction knob), `None`
-    * keeps the register for the life of the query. */
-  private def registerTimeout(ttl: Option[String]): GroupStateTimeout =
-    if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-    else GroupStateTimeout.NoTimeout
 
   /** The MANDATORY trigger for TTL'd twins: a processing-time-timeout
     * query never latches "no new data" (the engine keeps batches
@@ -198,83 +206,45 @@ object StreamOps {
 
   /** Streaming embedding near-dup candidates — the unbounded twin of
     * [[graft.operators.Dedup.embeddingNearDups]]'s bucket stage: each
-    * incoming (id, vector) is random-hyperplane-bucketed MAP-SIDE with
-    * the batch operator's exact seeded planes (md5-derived signs); the
-    * only stateful op is a per-bucket first-seen register, so state is
-    * one id per observed bucket (≤ 2^planes rows, ever). Emits
+    * incoming (id, vector) is bucketed MAP-SIDE by the batch
+    * [[graft.operators.Similarity.bucketExpr]] itself; the only
+    * stateful op is a per-bucket first-seen register, so state is one
+    * id per observed bucket (≤ 2^planes rows, ever). Emits
     * (id, firstSeenId) for every later arrival in a bucket; exact
     * cosine verification of candidates happens downstream, exactly as
     * in the batch operator. */
   def streamingEmbeddingNearDupCandidates(vecs: Dataset[(Long, Seq[Float])],
                                           planes: Int, dims: Int): Dataset[(Long, Long)] = {
     import vecs.sparkSession.implicits._
-    val signs = Array.tabulate(planes, dims)((p, j) =>
-      graft.operators.Similarity.planeSign(p, j))
-    val bc = vecs.sparkSession.sparkContext.broadcast(signs)
-    val keyed: Dataset[(String, Long)] = vecs.map { case (id, v) =>
-      val s = bc.value
-      var bucket = 0L
-      var p = 0
-      while (p < planes) {
-        var d = 0.0; var j = 0
-        while (j < dims) { d += v(j) * s(p)(j); j += 1 }
-        if (d > 0) bucket |= (1L << p)
-        p += 1
-      }
-      (bucket.toString, id)
-    }
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState[Long, (Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (_, it, state: GroupState[Long]) =>
-          val ids = it.map(_._2).toSeq.distinct.sorted
-          val first = state.getOption.getOrElse(ids.head)
-          if (!state.exists) state.update(first)
-          ids.filterNot(_ == first).map(dup => (dup, first)).iterator
-      }
+    graft.functions.GraftFunctions.register(vecs.sparkSession) // graft_dot
+    val keyed = vecs.toDF("id", "vec").select(
+      graft.operators.Similarity.bucketExpr(col("vec"), planes, dims)
+        .cast("string").as("key"), col("id"))
+    typed[(Long, Long)](firstSeen(keyed, None).select(col("id"), col("first_id")))
   }
 
   /** Streaming SemDeDup candidates — the unbounded twin of
     * [[graft.operators.Similarity.semanticDedup]]'s cell stage: each
-    * incoming (id, vector) is assigned its IVF cell MAP-SIDE with the
-    * batch operator's exact deterministic pseudo-centroids (argmax of
-    * the md5-derived ±1 projections, first-max tie-break — the scalar
-    * replay of `cellExpr`, planes offset by 7919 exactly as batch); the
-    * only stateful op is a per-cell first-seen register, so state is
-    * one id per observed cell — ≤ nlist rows EVER, the tightest state
-    * bound of any twin here. Emits (id, firstSeenId, cell) for every
-    * later arrival in a cell; exact cosine verification of candidates
-    * happens downstream, exactly as the batch operator's within-cell
-    * pairwise step (a capped batch run verifies only the cap's
-    * survivors — the register's first-id star is the streaming
+    * incoming (id, vector) is assigned its IVF cell MAP-SIDE by the
+    * batch [[graft.operators.Similarity.cellExpr]] itself (flat argmax
+    * up to `FlatNlistMax`, the two-bank product above it); the only
+    * stateful op is a per-cell first-seen register, so state is one id
+    * per observed cell — bounded by the cell domain EVER, the tightest
+    * state bound of any twin here. Emits (id, firstSeenId, cell) for
+    * every later arrival in a cell; exact cosine verification of
+    * candidates happens downstream, exactly as the batch operator's
+    * within-cell pairwise step (a capped batch run verifies only the
+    * cap's survivors — the register's first-id star is the streaming
     * counterpart of that bound). */
   def streamingSemanticDedupCandidates(vecs: Dataset[(Long, Seq[Float])],
                                        nlist: Int, dims: Int): Dataset[(Long, Long, Long)] = {
     import vecs.sparkSession.implicits._
-    val signs = Array.tabulate(nlist, dims)((c, j) =>
-      graft.operators.Similarity.planeSign(c + 7919, j))
-    val bc = vecs.sparkSession.sparkContext.broadcast(signs)
-    val keyed: Dataset[(Long, Long)] = vecs.map { case (id, v) =>
-      val s = bc.value
-      var best = 0; var bestD = Double.NegativeInfinity
-      var c = 0
-      while (c < nlist) {
-        var d = 0.0; var j = 0
-        while (j < dims) { d += v(j) * s(c)(j); j += 1 }
-        if (d > bestD) { bestD = d; best = c } // strict > keeps the FIRST max
-        c += 1
-      }
-      (best.toLong, id)
-    }
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState[Long, (Long, Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (cell, it, state: GroupState[Long]) =>
-          val ids = it.map(_._2).toSeq.distinct.sorted
-          val first = state.getOption.getOrElse(ids.head)
-          if (!state.exists) state.update(first)
-          ids.filterNot(_ == first).map(dup => (dup, first, cell)).iterator
-      }
+    graft.functions.GraftFunctions.register(vecs.sparkSession) // graft_dot
+    val keyed = vecs.toDF("id", "vec").select(
+      graft.operators.Similarity.cellExpr(col("vec"), nlist, dims)
+        .cast("string").as("key"), col("id"))
+    typed[(Long, Long, Long)](firstSeen(keyed, None)
+      .select(col("id"), col("first_id"), col("key").cast("long")))
   }
 
   /** Streaming CDC chunk-dedup candidates — the unbounded twin of
@@ -294,7 +264,11 @@ object StreamOps {
     * evicted after it, the clock refreshing on every sighting; a chunk
     * recurring after eviction re-registers as first-seen), with the
     * same contract as [[streamingNearDupCandidates]]. `None` keeps the
-    * full register — batch-parity over any replay, bounded runs only. */
+    * full register — batch-parity over any replay, bounded runs only.
+    *
+    * The chunking is a scalar copy of the batch chunk stage, which
+    * numbers each doc's tokens with a per-doc window — not legal on a
+    * stream. */
   def streamingCdcChunkCandidates(docs: Dataset[(Long, String)],
                                   boundaryHexFirst: Int = 1,
                                   ttl: Option[String] = None): Dataset[(Long, Long, String)] = {
@@ -321,18 +295,8 @@ object StreamOps {
         chunks.map(c => md5hex(c.mkString(" "))).distinct.map(d => (d, id)).toSeq
       }
     }
-    chunked.groupByKey(_._1)
-      .flatMapGroupsWithState[Long, (Long, Long, String)](
-        OutputMode.Append, registerTimeout(ttl)) {
-        case (_, _, state: GroupState[Long]) if state.hasTimedOut =>
-          state.remove(); Iterator.empty
-        case (dig, it, state: GroupState[Long]) =>
-          val ids = it.map(_._2).toSeq.distinct.sorted
-          val first = state.getOption.getOrElse(ids.head)
-          state.update(first) // unconditional: a TTL refresh needs a write
-          ttl.foreach(state.setTimeoutDuration)
-          ids.filterNot(_ == first).map(dup => (dup, first, dig)).iterator
-      }
+    typed[(Long, Long, String)](firstSeen(chunked.toDF("key", "id"), ttl)
+      .select(col("id"), col("first_id"), col("key")))
   }
 
   /** Streaming cross-corpus dedup candidates — the admission gate "is
@@ -340,8 +304,8 @@ object StreamOps {
     * unbounded twin of [[graft.operators.Dedup.crossCorpusNearDups]]'s
     * candidate stage. The static corpus's LSH band keys are computed
     * ONCE with the batch operators and eagerly checkpointed; each
-    * streamed doc is shingled/min-hashed/banded map-side (the exact
-    * batch construction) and meets them in a STATELESS stream-static
+    * streamed doc gets the same signature and band keys map-side
+    * ([[streamBands]]) and meets them in a STATELESS stream-static
     * equi-join on (band, key) — no state store at all, unlike the
     * within-stream register of [[streamingNearDupCandidates]]. Emits
     * (streamId, corpusId) once per shared band — dedup/verify
@@ -351,24 +315,14 @@ object StreamOps {
                                     textCol: String, shingleWidth: Int = 3,
                                     numHashes: Int = 12,
                                     bands: Int = 4): DataFrame = {
-    import docs.sparkSession.implicits._
-    require(numHashes % bands == 0)
-    val rows = numHashes / bands
+    val streamKeys = streamBands(docs, shingleWidth, numHashes, bands)
+      .select(col("band"), col("key"), col("id").as("stream_id"))
     val staticKeys = graft.operators.Dedup.lshBands(
         graft.operators.Dedup.minhashSignature(
           corpus, idCol, textCol, shingleWidth, numHashes),
-        bands, rows)
+        bands, numHashes / bands)
       .select(col("band"), col("key"), col("id").as("corpus_id"))
       .localCheckpoint() // one batch computation, re-read per micro-batch
-    val streamKeys = docs.flatMap { case (id, text) =>
-      // the batch signature and banding, row by row (see
-      // streamingNearDupCandidates for short docs)
-      minhashSig(text, shingleWidth, numHashes).toSeq.flatMap { sig =>
-        (0 until bands).map { b =>
-          (b, (0 until rows).map(r => sig(b * rows + r)).mkString("|"), id)
-        }
-      }
-    }.toDF("band", "key", "stream_id")
     streamKeys.join(staticKeys, Seq("band", "key"))
       .select(col("stream_id"), col("corpus_id"), col("band"))
   }
@@ -376,32 +330,25 @@ object StreamOps {
   /** Streaming benchmark-contamination tracking — the unbounded twin of
     * [[graft.operators.Dedup.contamination]] with the roles arranged the
     * way deployment actually runs them: the EVAL sets are static and
-    * small (benchmarks, by definition) so their distinct shingles are
-    * collected and broadcast; the TRAIN corpus is what streams. Each
-    * arriving train doc is shingled map-side; shingles hitting the
-    * broadcast eval index emit (eval_id, shingle), and a streaming
-    * dropDuplicates keeps only FIRST-TIME matches — state is bounded by
-    * the eval sets' total shingle count, never by the stream. Running
-    * per-eval-doc contamination is a downstream aggregation of these
-    * first-match rows over the (also broadcastable) per-doc totals. */
+    * small (benchmarks, by definition), so their distinct shingles are
+    * computed once by the batch operator's own eval stage and eagerly
+    * checkpointed; the TRAIN corpus is what streams. Each arriving train
+    * doc is shingled map-side with [[graft.operators.Dedup.shingleArray]]
+    * and meets the eval shingles in a stream-static join, emitting
+    * (eval_id, shingle); a streaming dropDuplicates keeps only
+    * FIRST-TIME matches — state is bounded by the eval sets' total
+    * shingle count, never by the stream. Running per-eval-doc
+    * contamination is a downstream aggregation of these first-match
+    * rows over the (also static) per-doc totals. */
   def streamingContamination(docs: Dataset[(Long, String)], eval: DataFrame,
                              idCol: String, textCol: String, w: Int): DataFrame = {
-    import docs.sparkSession.implicits._
-    val evalIndex: Map[String, Seq[Long]] = eval.select(
-        col(idCol).cast("long").as("id"), col(textCol).as("t"))
-      .collect().flatMap { r =>
-        val toks = tokenStrings(r.getString(1)).toSeq
-        toks.sliding(w).filter(_.length == w).map(_.mkString(" "))
-          .toSeq.distinct.map(sh => sh -> r.getLong(0))
-      }.groupBy(_._1).map { case (sh, hits) => sh -> hits.map(_._2).toSeq }
-    val bc = docs.sparkSession.sparkContext.broadcast(evalIndex)
-    docs.flatMap { case (_, text) =>
-      val idx = bc.value
-      val toks = tokenStrings(text).toSeq
-      toks.sliding(w).filter(_.length == w).map(_.mkString(" "))
-        .toSeq.distinct
-        .flatMap(sh => idx.getOrElse(sh, Nil).map(id => (id, sh)))
-    }.toDF("eval_id", "shingle")
+    val evalSh = graft.operators.Dedup.shingleSet(eval, idCol, textCol, w)
+      .select(col("id").cast("long").as("eval_id"), col("shingle"))
+      .localCheckpoint() // one batch computation, re-read per micro-batch
+    docs.toDF("id", "text")
+      .select(explode(graft.operators.Dedup.shingleArray(col("text"), w)).as("shingle"))
+      .join(evalSh, "shingle")
+      .select(col("eval_id"), col("shingle"))
       .dropDuplicates("eval_id", "shingle")
   }
 
@@ -687,7 +634,11 @@ object StreamOps {
     * same ln/mean — the parity spec asserts exact equality). The
     * broadcast bounds this twin to models that fit in executor memory
     * (the bloom-bitmap class of trade); past that, score in micro-batch
-    * joins with `foreachBatch` against the distributed model instead. */
+    * joins with `foreachBatch` against the distributed model instead.
+    *
+    * The scorer is a scalar copy of the batch one: the model is a
+    * corpus-sized map, and as a `typedLit` it would be embedded in the
+    * plan. */
   def streamingLmScore(docs: Dataset[(Long, String)],
                        train: DataFrame, trainTextCol: String): Dataset[LmScored] = {
     import docs.sparkSession.implicits._
@@ -719,52 +670,30 @@ object StreamOps {
 
   /** Streaming BM25 scoring — the unbounded twin of
     * [[graft.operators.TextAnalysis.bm25]]: corpus statistics (N, avgdl,
-    * per-term df) are computed ONCE from the static reference corpus and
-    * broadcast; each streamed doc is scored map-side against ITS OWN
-    * length and tfs — stateless, no state store, no shuffle. Same
-    * deployment trade as [[streamingLmScore]]: the model side is frozen
-    * at stream start (scores match the batch operator run against the
-    * same reference corpus; they are NOT re-normalized as the stream
-    * itself grows — that is the standard retrieval-filter contract). */
+    * per-term df) come from the batch operator's own stats aggregate
+    * over the static reference corpus, collected ONCE on the driver;
+    * each streamed doc runs the batch tf projection and score
+    * expression with those statistics as literals — stateless, no state
+    * store, no shuffle. Same deployment trade as [[streamingLmScore]]:
+    * the model side is frozen at stream start (scores match the batch
+    * operator run against the same reference corpus; they are NOT
+    * re-normalized as the stream itself grows — that is the standard
+    * retrieval-filter contract). */
   def streamingBm25(docs: Dataset[(Long, String)], corpus: DataFrame,
                     corpusTextCol: String, terms: Seq[String],
                     k1: Double = 1.2, b: Double = 0.75): Dataset[Bm25Scored] = {
     import docs.sparkSession.implicits._
-    // same input contract as the batch twin — divergent validation would
-    // let duplicate terms double-count here while batch rejects them
-    require(terms.nonEmpty && terms.distinct.size == terms.size,
-      "terms must be non-empty and distinct")
-    val toks = graft.operators.TextAnalysis.tokens(col(corpusTextCol))
-    val statAggs = count(lit(1)).cast("double").as("nn") +:
-      avg(size(toks).cast("double")).as("avgdl") +:
-      terms.zipWithIndex.map { case (t, i) =>
-        sum(when(array_contains(toks, t), 1.0).otherwise(0.0)).as(s"df$i")
-      }
-    val row = corpus.agg(statAggs.head, statAggs.tail: _*).head()
-    // an empty reference corpus has no avgdl (null aggregate) — every
-    // doc then scores 0 via the dl>0 ∧ avgdl>0 guard below, the same
-    // degenerate-input behavior as the batch operator, not an NPE
-    val nn = row.getDouble(0)
-    val avgdl = if (row.isNullAt(1)) 0.0 else row.getDouble(1)
-    val dfs = terms.indices.map(i => row.getDouble(2 + i)).toArray
-    val bc = docs.sparkSession.sparkContext.broadcast((terms.toArray, dfs))
-    docs.map { case (id, text) =>
-      val (ts, dfArr) = bc.value
-      val tk = tokenStrings(text)
-      val dl = tk.length.toDouble
-      var score = 0.0; var hits = 0L
-      var i = 0
-      while (i < ts.length) {
-        val tf = tk.count(_ == ts(i)).toDouble
-        if (tf > 0) hits += 1
-        if (dl > 0 && avgdl > 0) {
-          val idf = math.log(1.0 + (nn - dfArr(i) + 0.5) / (dfArr(i) + 0.5))
-          score += idf * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-        }
-        i += 1
-      }
-      Bm25Scored(id, hits, score)
-    }
+    val TA = graft.operators.TextAnalysis
+    val stats = TA.termStats(
+      TA.termFreqs(corpus, lit(0L), col(corpusTextCol), terms), terms.size).head()
+    // an empty (or all-blank) reference corpus has no positive avgdl:
+    // every doc then scores 0 rather than dividing by it
+    val score =
+      if (stats.isNullAt(1) || stats.getDouble(1) <= 0) lit(0.0)
+      else TA.bm25Score(terms.size, k1, b, lit(stats.getDouble(0)),
+        lit(stats.getDouble(1)), i => lit(stats.getDouble(2 + i)))
+    typed[Bm25Scored](TA.termFreqs(docs.toDF("id", "text"), col("id"), col("text"), terms)
+      .select(col("id"), TA.queryHits(terms.size), score))
   }
 
   /** One TF-IDF-scored document: id, query hits, smooth-idf score. */
@@ -773,37 +702,21 @@ object StreamOps {
   /** Streaming TF-IDF scoring — the unbounded twin of
     * [[graft.operators.TextAnalysis.tfidf]]: corpus statistics (N,
     * per-term df — smooth sklearn idf) come from the STATIC reference
-    * corpus in one batch aggregate, are broadcast, and each streamed
-    * doc is scored map-side. Stateless — no state store, no shuffle,
+    * corpus in the batch operator's one stats aggregate, collected on
+    * the driver, and each streamed doc runs the batch score expression
+    * with them as literals. Stateless — no state store, no shuffle,
     * model frozen at stream start, exactly the [[streamingBm25]]
     * deployment contract. */
   def streamingTfidf(docs: Dataset[(Long, String)], corpus: DataFrame,
                      corpusTextCol: String, terms: Seq[String]): Dataset[TfidfScored] = {
     import docs.sparkSession.implicits._
-    require(terms.nonEmpty && terms.distinct.size == terms.size,
-      "terms must be non-empty and distinct")
-    val toks = graft.operators.TextAnalysis.tokens(col(corpusTextCol))
-    val statAggs = count(lit(1)).cast("double").as("nn") +:
-      terms.zipWithIndex.map { case (t, i) =>
-        sum(when(array_contains(toks, t), 1.0).otherwise(0.0)).as(s"df$i")
-      }
-    val row = corpus.agg(statAggs.head, statAggs.tail: _*).head()
-    val nn = row.getDouble(0)
-    val dfs = terms.indices.map(i => row.getDouble(1 + i)).toArray
-    val bc = docs.sparkSession.sparkContext.broadcast((terms.toArray, dfs))
-    docs.map { case (id, text) =>
-      val (ts, dfArr) = bc.value
-      val tk = tokenStrings(text)
-      var score = 0.0; var hits = 0L
-      var i = 0
-      while (i < ts.length) {
-        val tf = tk.count(_ == ts(i)).toDouble
-        if (tf > 0) hits += 1
-        score += tf * (math.log((nn + 1.0) / (dfArr(i) + 1.0)) + 1.0)
-        i += 1
-      }
-      TfidfScored(id, hits, score)
-    }
+    val TA = graft.operators.TextAnalysis
+    val stats = TA.termStats(
+      TA.termFreqs(corpus, lit(0L), col(corpusTextCol), terms), terms.size).head()
+    typed[TfidfScored](TA.termFreqs(docs.toDF("id", "text"), col("id"), col("text"), terms)
+      .select(col("id"), TA.queryHits(terms.size),
+        TA.tfidfScore(terms.size, lit(stats.getDouble(0)),
+          i => lit(stats.getDouble(2 + i)))))
   }
 
   /** One Gopher-rule-scored document. */
@@ -813,36 +726,18 @@ object StreamOps {
 
   /** Streaming Gopher-rule filtering — the unbounded twin of
     * [[graft.operators.TextAnalysis.gopherQuality]]. The batch operator
-    * is a pure per-row projection (no corpus statistics at all), so the
-    * twin is the same arithmetic as a map over the stream: fully
-    * stateless, the admission-gate shape — score-and-drop before
-    * anything stateful sees the doc. Metric rounding matches the batch
-    * column form (4 decimals, 1e-9 nudge, -0.0 normalized). */
+    * is a pure per-row projection (no corpus statistics at all), so it
+    * runs on the stream as it is: fully stateless, the admission-gate
+    * shape — score-and-drop before anything stateful sees the doc. */
   def streamingGopherQuality(docs: Dataset[(Long, String)],
                              minWords: Long = 50, maxWords: Long = 100000,
                              minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
                              minAlphaFrac: Double = 0.8,
                              minStopHits: Long = 2): Dataset[GopherScored] = {
     import docs.sparkSession.implicits._
-    val stops = Set("the", "be", "to", "of", "and", "that", "have", "with")
-    def r4(v: Double): Double = {
-      val r = BigDecimal(v + 1e-9)
-        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      if (r == 0.0) 0.0 else r // normalize -0.0 like the batch `+ 0.0`
-    }
-    docs.map { case (id, text) =>
-      val tk = tokenStrings(text)
-      val n = tk.length.toLong
-      val meanLen = if (n == 0) 0.0 else tk.map(_.length.toLong).sum.toDouble / n
-      val alphaFrac = if (n == 0) 0.0
-        else tk.count(_.exists(c => (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')))
-          .toDouble / n
-      val stopHits = tk.count(stops.contains).toLong
-      GopherScored(id, n, r4(meanLen), r4(alphaFrac), stopHits,
-        n >= minWords && n <= maxWords && meanLen >= minMeanLen &&
-          meanLen <= maxMeanLen && alphaFrac > minAlphaFrac &&
-          stopHits >= minStopHits)
-    }
+    typed[GopherScored](graft.operators.TextAnalysis.gopherQuality(
+      docs.toDF("id", "text"), "id", "text", minWords, maxWords, minMeanLen,
+      maxMeanLen, minAlphaFrac, minStopHits))
   }
 
   /** One tier-assigned row: id, metric value, quantile tier. */
@@ -852,39 +747,34 @@ object StreamOps {
     * [[graft.operators.Sampling.quantileTiers]]: the nTiers−1 rounded
     * thresholds are computed ONCE from the static reference corpus with
     * the batch operator's own aggregate (exact or approx — the same
-    * `approx` scale lever), collected (nTiers−1 doubles) and broadcast;
-    * each streamed (id, metric) is tier-assigned map-side with the
-    * identical strict-> comparison chain. Stateless — no state store,
-    * no shuffle, thresholds frozen at stream start (the deployment
-    * contract of a tier-stratified admission gate). */
+    * `approx` scale lever) and collected (nTiers−1 doubles); each
+    * streamed (id, metric) runs the batch tier expression with them as
+    * literals. Stateless — no state store, no shuffle, thresholds
+    * frozen at stream start (the deployment contract of a
+    * tier-stratified admission gate). */
   def streamingQuantileTiers(rows: Dataset[(Long, Double)], corpus: DataFrame,
                              metric: Column, nTiers: Int,
                              approx: Boolean = false,
                              accuracy: Int = 10000): Dataset[TierAssigned] = {
     import rows.sparkSession.implicits._
-    require(nTiers >= 2, s"nTiers must be at least 2, got $nTiers")
-    val thrRow =
-      if (approx) {
-        val ps = array((1 until nTiers).map(i => lit(i.toDouble / nTiers)): _*)
-        corpus.agg(approx_percentile(metric.cast("double"), ps, lit(accuracy))
-            .as("__ta"))
-          .select((1 until nTiers).map(i =>
-            round(element_at(col("__ta"), i), 4).as(s"__t$i")): _*)
-          .head()
-      } else {
-        val thrAggs = (1 until nTiers).map(i =>
-          round(percentile(metric.cast("double"), lit(i.toDouble / nTiers)), 4)
-            .as(s"__t$i"))
-        corpus.agg(thrAggs.head, thrAggs.tail: _*).head()
-      }
-    val thresholds = (0 until nTiers - 1).map(thrRow.getDouble).toArray
-    val bc = rows.sparkSession.sparkContext.broadcast(thresholds)
-    rows.map { case (id, m) =>
-      val ts = bc.value
-      var tier = 1; var i = 0
-      while (i < ts.length) { if (m > ts(i)) tier += 1; i += 1 }
-      TierAssigned(id, m, tier)
-    }
+    val S = graft.operators.Sampling
+    val thr = S.tierThresholds(corpus, metric, nTiers, approx, accuracy).head()
+    typed[TierAssigned](rows.toDF("id", "m").select(col("id"), col("m"),
+      S.tierExpr(col("m"), nTiers, i => lit(thr.getDouble(i - 1))).cast("int")))
+  }
+
+  /** Per doc of a stream: `n`, its token count, and `s`, the sum over
+    * its tokens, in order, of `model(hashBucket256(token))` — the
+    * batch [[graft.operators.Sampling.hashBucket256]] looked up in a
+    * frozen 256-entry model. A null text has no tokens. */
+  private def bucketSum(docs: Dataset[(Long, String)], model: Array[Double]): DataFrame = {
+    val toks = coalesce(graft.operators.TextAnalysis.tokens(col("text")),
+      array().cast("array<string>"))
+    val m = typedLit(model)
+    docs.toDF("id", "text").select(col("id"), size(toks).cast("long").as("n"),
+      aggregate(transform(toks,
+          t => element_at(m, graft.operators.Sampling.hashBucket256(t) + 1)),
+        lit(0.0), (acc, x) => acc + x).as("s"))
   }
 
   /** One DSIR-scored document: id, token count, hashed-unigram
@@ -892,125 +782,68 @@ object StreamOps {
   case class DsirScored(id: Long, nToks: Long, logratio: Double)
 
   /** Streaming DSIR scoring — the unbounded twin of
-    * [[graft.operators.Sampling.dsirLogRatio]]: the ≤256-bucket
+    * [[graft.operators.Sampling.dsirLogRatio]]: the 256-bucket
     * target/source log-ratio model is computed ONCE from the static
     * reference corpus (the batch operator's own model stage — identical
-    * smoothing and tie behavior), collected (256 rows), and broadcast;
-    * each streamed doc is scored map-side with the JVM twin of the
-    * md5-first-byte bucket hash. Stateless — no state store, no
-    * shuffle, model frozen at stream start (the deployment contract of
-    * an importance-resampling admission gate). */
+    * smoothing and tie behavior) and collected (256 rows); each
+    * streamed doc sums its tokens' log ratios through the batch bucket
+    * hash ([[bucketSum]]). Stateless — no state store, no shuffle,
+    * model frozen at stream start (the deployment contract of an
+    * importance-resampling admission gate). */
   def streamingDsir(docs: Dataset[(Long, String)], reference: DataFrame,
                     refIdCol: String, refTextCol: String,
                     targetPred: org.apache.spark.sql.Column): Dataset[DsirScored] = {
     import docs.sparkSession.implicits._
-    val lrs = graft.operators.Sampling
-      .dsirModel(reference, refIdCol, refTextCol, targetPred)
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    val bc = docs.sparkSession.sparkContext.broadcast(lrs)
-    docs.mapPartitions { it =>
-      val m = bc.value
-      // ONE digest per partition, not per token — getInstance is a JCA
-      // provider lookup; digest() resets the instance between calls
-      val md = java.security.MessageDigest.getInstance("MD5")
-      it.map { case (id, text) =>
-        val tk = tokenStrings(text)
-        var sum = 0.0
-        var i = 0
-        while (i < tk.length) {
-          // JVM twin of Sampling.hashBucket256: first md5 byte unsigned.
-          // The model frame is complete (all 256 buckets, smoothed), so
-          // the lookup is total.
-          val d = md.digest(tk(i).getBytes("UTF-8"))
-          sum += m(d(0) & 0xff)
-          i += 1
-        }
-        DsirScored(id, tk.length.toLong, sum)
-      }
-    }
+    // the model frame is complete (all 256 buckets, smoothed), so the
+    // lookup is total
+    val lrs = new Array[Double](256)
+    graft.operators.Sampling.dsirModel(reference, refIdCol, refTextCol, targetPred)
+      .collect().foreach(r => lrs(r.getInt(0)) = r.getDouble(1))
+    typed[DsirScored](bucketSum(docs, lrs))
   }
 
   /** One BPE-counted document: id, word count, BPE token count. */
   case class BpeCounted(id: Long, nWords: Long, nBpeTokens: Long)
 
   /** Streaming BPE token counting — the unbounded twin of
-    * [[graft.operators.TextAnalysis.bpeEncode]]: trained merges are
-    * broadcast; each streamed doc is tokenized and every word segmented
-    * by the same greedy left-to-right merge loop, map-side and
-    * stateless. Where the batch operator amortizes merge application
-    * over the corpus-wide distinct-word dictionary, the stream cannot —
-    * a per-partition word→count memo amortizes the Zipf head within
-    * each task instead (unbounded only by the task's distinct words,
-    * cleared with the partition). */
+    * [[graft.operators.TextAnalysis.bpeEncode]]: each streamed doc is
+    * tokenized and every word segmented by the batch word→symbols
+    * expression ([[graft.operators.TextAnalysis.bpeSymbols]]), the
+    * symbol counts summed per doc — map-side and stateless. Where the
+    * batch operator segments each distinct word of the corpus once, the
+    * stream segments every word occurrence. */
   def streamingBpeCount(docs: Dataset[(Long, String)],
                         merges: Seq[(String, String)]): Dataset[BpeCounted] = {
     import docs.sparkSession.implicits._
-    val bc = docs.sparkSession.sparkContext.broadcast(merges.toArray)
-    docs.mapPartitions { it =>
-      val ms = bc.value
-      val memo = new scala.collection.mutable.HashMap[String, Long]()
-      def symCount(word: String): Long = memo.getOrElseUpdate(word, {
-        var syms = word.map(_.toString).toArray
-        var m = 0
-        while (m < ms.length && syms.length > 1) {
-          val (a, b) = ms(m)
-          val out = new scala.collection.mutable.ArrayBuffer[String](syms.length)
-          var i = 0
-          while (i < syms.length) {
-            if (i + 1 < syms.length && syms(i) == a && syms(i + 1) == b) {
-              out += (a + b); i += 2
-            } else { out += syms(i); i += 1 }
-          }
-          syms = out.toArray
-          m += 1
-        }
-        syms.length.toLong
-      })
-      it.map { case (id, text) =>
-        val tk = tokenStrings(text)
-        var nb = 0L
-        var i = 0
-        while (i < tk.length) { nb += symCount(tk(i)); i += 1 }
-        BpeCounted(id, tk.length.toLong, nb)
-      }
-    }
+    val ms = merges.toArray
+    val toks = coalesce(graft.operators.TextAnalysis.tokens(col("text")),
+      array().cast("array<string>"))
+    typed[BpeCounted](docs.toDF("id", "text").select(col("id"),
+      size(toks).cast("long"),
+      aggregate(transform(toks, w =>
+          size(graft.operators.TextAnalysis.bpeSymbols(w, ms)).cast("long")),
+        lit(0L), (acc, x) => acc + x)))
   }
 
   /** One classifier-scored document: id, token count, P(label). */
   case class QualityScored(id: Long, nToks: Long, p: Double)
 
   /** Streaming quality-classifier scoring — the unbounded twin of
-    * [[graft.operators.Classifier.logisticScore]]: weights trained once
-    * (batch, on the exemplar corpus) are broadcast; each streamed doc
-    * is featurized and scored map-side with the JVM twin of the
-    * md5-bucket hash and the same length-normalized features.
-    * Stateless — the admission-gate deployment shape of a
-    * fasttext-style quality filter. */
+    * [[graft.operators.Classifier.logisticScore]]: with weights trained
+    * once (batch, on the exemplar corpus), each streamed doc sums its
+    * tokens' weights through the batch bucket hash ([[bucketSum]]); the
+    * length-normalized features make the logit that sum over the token
+    * count, plus the bias. Stateless — the admission-gate deployment
+    * shape of a fasttext-style quality filter. */
   def streamingQualityScore(docs: Dataset[(Long, String)],
                             weights: Array[Double],
                             bias: Double): Dataset[QualityScored] = {
     import docs.sparkSession.implicits._
     require(weights.length == 256, "expected 256 bucket weights")
-    val bc = docs.sparkSession.sparkContext.broadcast((weights, bias))
-    docs.mapPartitions { it =>
-      val (w, b) = bc.value
-      // ONE digest per partition, not per token (see streamingDsir)
-      val md = java.security.MessageDigest.getInstance("MD5")
-      it.map { case (id, text) =>
-      val tk = tokenStrings(text)
-      var dot = 0.0
-      var i = 0
-      while (i < tk.length) {
-        // JVM twin of Sampling.hashBucket256: first md5 byte unsigned
-        val d = md.digest(tk(i).getBytes("UTF-8"))
-        dot += w(d(0) & 0xff)
-        i += 1
-      }
-      // x_b = count_b / n sums to dot/n over per-token weights
-      val z = if (tk.isEmpty) b else dot / tk.length + b
-      QualityScored(id, tk.length.toLong, 1.0 / (1.0 + math.exp(-z)))
-      }
-    }
+    val z = when(col("n") === 0, lit(bias))
+      .otherwise(col("s") / col("n").cast("double") + lit(bias))
+    typed[QualityScored](bucketSum(docs, weights).select(col("id"), col("n"),
+      lit(1.0) / (lit(1.0) + exp(-z))))
   }
 
   /** One surviving Misra-Gries counter: the bucket it lives in, the key,

@@ -682,7 +682,7 @@ class ExpressionSpec extends AnyFunSuite {
   }
 
   test("the gate, tokens and shingles plan no regex expression") {
-    import org.apache.spark.sql.catalyst.expressions.{RegExpCount, RegExpExtractAll, RegExpReplace}
+    import org.apache.spark.sql.catalyst.expressions.{RLike, RegExpCount, RegExpExtractAll, RegExpReplace}
     val docs = spark.read.parquet(documentsSf001)
     val t = col("text")
     val gate = docs.select(col("doc_id"), TA.langId(t).as("lang"),
@@ -691,11 +691,12 @@ class ExpressionSpec extends AnyFunSuite {
       "gate projection" -> gate,
       "filtered gate" -> gate.filter(col("quality") >= 0.5),
       "tokens" -> docs.select(TA.tokens(t)),
-      "shingleArray" -> docs.select(Dedup.shingleArray(t, 3)))
+      "shingleArray" -> docs.select(Dedup.shingleArray(t, 3)),
+      "gopherQuality" -> TA.gopherQuality(docs, "doc_id", "text"))
     plans.foreach { case (name, df) =>
       val plan = df.queryExecution.optimizedPlan
       val regex = plan.collect { case p => p.expressions }.flatten.flatMap(_.collect {
-        case e @ (_: RegExpCount | _: RegExpExtractAll | _: RegExpReplace) => e
+        case e @ (_: RegExpCount | _: RegExpExtractAll | _: RegExpReplace | _: RLike) => e
       })
       assert(regex.isEmpty, s"$name plans a regex:\n$plan")
     }

@@ -834,8 +834,8 @@ class StreamingParitySpec extends AnyFunSuite {
   test("parity: streamingBm25 ≡ batch bm25, stateless map-side scorer") {
     implicit val sq = spark.sqlContext
     // q85 shape: corpus stats (N, avgdl, df) frozen from the full
-    // sf0.001 corpus; the same docs stream through the broadcast-stats
-    // scorer
+    // sf0.001 corpus; the same docs stream through the batch score
+    // expression with those stats as literals
     val terms = Seq("spark", "join", "window")
     val batch = graft.operators.TextAnalysis.bm25(docs, "doc_id", "text", terms)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
@@ -866,7 +866,7 @@ class StreamingParitySpec extends AnyFunSuite {
   test("parity: streamingTfidf ≡ batch tfidf, stateless map-side scorer") {
     implicit val sq = spark.sqlContext
     // q98 shape: (N, df) frozen from the full sf0.001 corpus; the same
-    // docs stream through the broadcast-stats scorer
+    // docs stream through the batch score expression
     val terms = Seq("spark", "join", "window")
     val batch = graft.operators.TextAnalysis.tfidf(docs, "doc_id", "text", terms)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
@@ -894,17 +894,22 @@ class StreamingParitySpec extends AnyFunSuite {
   test("parity: streamingGopherQuality ≡ batch gopherQuality, stateless") {
     implicit val sq = spark.sqlContext
     // no corpus statistics at all — the twin must be BIT-equal per row,
-    // rounding included
-    val batch = graft.operators.TextAnalysis.gopherQuality(docs, "doc_id", "text")
+    // rounding included. Two extra docs hold astral tokens: a word's
+    // length counts code points, not UTF-16 units
+    val gdocs = docs.select(col("doc_id"), col("text")).union(Seq(
+      (900001L, "the cat \uD83D\uDE00\uD83D\uDE00\uD83D\uDE00 of and to"),
+      (900002L, "\uD835\uDC9C\uD835\uDCB7\uD835\uDCB8 the and")).toDF("doc_id", "text"))
+    val batch = graft.operators.TextAnalysis.gopherQuality(gdocs, "doc_id", "text")
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getLong(4), r.getBoolean(5)))
       .toMap
+    assert(batch(900001L)._2 == 2.6667 && batch(900002L)._2 == 3.0)
 
     val mem = MemoryStream[(Long, String)]
     val out = StreamOps.streamingGopherQuality(mem.toDS())
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName("parity_gopher").start()
-    val rows = docs.select(col("doc_id"), col("text")).orderBy(col("doc_id"))
+    val rows = gdocs.orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     replay(mem, rows, chunk = 100, q)
     val stateRows = Option(q.lastProgress)
@@ -921,7 +926,7 @@ class StreamingParitySpec extends AnyFunSuite {
   test("parity: streamingQuantileTiers ≡ batch quantileTiers, stateless") {
     implicit val sq = spark.sqlContext
     // q101 shape: decile thresholds of n_chars frozen from the full
-    // sf0.001 corpus; the same rows stream through the broadcast
+    // sf0.001 corpus; the same rows stream through the batch
     // comparison chain — tier assignment must be bit-equal
     val src = docs.select(col("doc_id"),
       col("n_chars").cast("double").as("m"))
@@ -979,7 +984,7 @@ class StreamingParitySpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     // q89 shape: the 256-bucket target/source log-ratio model frozen
     // from the full sf0.001 corpus; the same docs stream through the
-    // broadcast-model scorer
+    // frozen-model scorer
     val batch = graft.operators.Sampling
       .dsirLogRatio(docs, "doc_id", "text", col("lang") === "en")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
@@ -1051,49 +1056,51 @@ class StreamingParitySpec extends AnyFunSuite {
     // must stream as a star on its first-arrived (= smallest, ordered
     // replay) id — and that register must SURVIVE a hard restart
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val nlist = 8
-    val cells = graft.operators.Similarity.ivfAssign(emb, "vec_id", "embedding", nlist)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val expected = cells.groupBy(_._2).toSeq.flatMap { case (cell, grp) =>
-      val ids = grp.map(_._1).sorted
-      ids.tail.map(id => (id, ids.head, cell))
-    }.toSet
+    // 25 cells take cellExpr's two-bank product path (> FlatNlistMax)
+    Seq(8, 25).foreach { nlist =>
+      val cells = graft.operators.Similarity.ivfAssign(emb, "vec_id", "embedding", nlist)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      val expected = cells.groupBy(_._2).toSeq.flatMap { case (cell, grp) =>
+        val ids = grp.map(_._1).sorted
+        ids.tail.map(id => (id, ids.head, cell))
+      }.toSet
 
-    val dims = emb.selectExpr("size(embedding)").first().getInt(0)
-    val rows = emb.orderBy(col("vec_id")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_sink_").toString
-    val mem = MemoryStream[(Long, Seq[Float])]
-    val out = StreamOps.streamingSemanticDedupCandidates(mem.toDS(), nlist, dims)
-      .toDF("id", "first_id", "cell")
+      val dims = emb.selectExpr("size(embedding)").first().getInt(0)
+      val rows = emb.orderBy(col("vec_id")).collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
+      val outDir = java.nio.file.Files.createTempDirectory("graft_sink_").toString
+      val mem = MemoryStream[(Long, Seq[Float])]
+      val out = StreamOps.streamingSemanticDedupCandidates(mem.toDS(), nlist, dims)
+        .toDF("id", "first_id", "cell")
 
-    // first half, fully committed, then a hard stop
-    val q1 = out.writeStream.outputMode("append").format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckpt).start()
-    replay(mem, rows.take(250), chunk = 50, q1)
-    val stateRows1 = Option(q1.lastProgress)
-      .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)
-    q1.stop()
+      // first half, fully committed, then a hard stop
+      val q1 = out.writeStream.outputMode("append").format("parquet")
+        .option("path", outDir).option("checkpointLocation", ckpt).start()
+      replay(mem, rows.take(250), chunk = 50, q1)
+      val stateRows1 = Option(q1.lastProgress)
+        .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)
+      q1.stop()
 
-    // restart FROM THE CHECKPOINT: the per-cell first-seen registers
-    // must come back, or post-restart arrivals elect NEW firsts
-    val q2 = out.writeStream.outputMode("append").format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckpt).start()
-    replay(mem, rows.drop(250), chunk = 50, q2)
-    val stateRows2 = Option(q2.lastProgress)
-      .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)
-    q2.stop()
+      // restart FROM THE CHECKPOINT: the per-cell first-seen registers
+      // must come back, or post-restart arrivals elect NEW firsts
+      val q2 = out.writeStream.outputMode("append").format("parquet")
+        .option("path", outDir).option("checkpointLocation", ckpt).start()
+      replay(mem, rows.drop(250), chunk = 50, q2)
+      val stateRows2 = Option(q2.lastProgress)
+        .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)
+      q2.stop()
 
-    val streamed = spark.read.parquet(outDir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(streamed == expected,
-      s"extra=${(streamed -- expected).take(5)} missing=${(expected -- streamed).take(5)}")
-    // state = one register per OBSERVED cell, bounded by nlist ever
-    val nCells = cells.map(_._2).distinct.length
-    assert(stateRows2 == nCells.toLong,
-      s"state rows $stateRows2 vs $nCells observed cells")
-    assert(stateRows1 <= nlist.toLong && stateRows2 <= nlist.toLong)
+      val streamed = spark.read.parquet(outDir).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(streamed == expected,
+        s"extra=${(streamed -- expected).take(5)} missing=${(expected -- streamed).take(5)}")
+      // state = one register per OBSERVED cell, bounded by nlist ever
+      val nCells = cells.map(_._2).distinct.length
+      assert(stateRows2 == nCells.toLong,
+        s"state rows $stateRows2 vs $nCells observed cells")
+      assert(stateRows1 <= nlist.toLong && stateRows2 <= nlist.toLong)
+    }
   }
 
   test("parity: streamingCdcChunkCandidates ≡ batch CDC chunk digests") {
@@ -1284,7 +1291,7 @@ class StreamingParitySpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     import graft.operators.{Dedup, TextAnalysis => TA}
     // q55 shape: eval = every 25th doc truncated to 12 tokens; the TRAIN
-    // corpus streams against the broadcast eval shingle index
+    // corpus streams against the checkpointed eval shingle frame
     val eval = docs.filter(col("doc_id") % 25 === 0)
       .select(col("doc_id"),
         array_join(slice(TA.tokens(col("text")), 1, 12), " ").as("text"))
@@ -1314,22 +1321,26 @@ class StreamingParitySpec extends AnyFunSuite {
       s"state rows $stateRows vs ${batch.values.sum} matched pairs")
   }
 
-  test("parity: streamingBpeCount ≡ batch bpeEncode, stateless memoized scorer") {
+  test("parity: streamingBpeCount ≡ batch bpeEncode, stateless scorer") {
     implicit val sq = spark.sqlContext
-    // q88 shape: merges trained batch-side on the full sf0.001 corpus,
-    // broadcast; the same docs stream through the greedy segmenter
+    // q88 shape: merges trained batch-side on the full sf0.001 corpus;
+    // the same docs stream through the batch word segmenter
     val (mergesDf, _) = graft.operators.TextAnalysis.bpeTrain(docs, "text", 6)
     val merges = mergesDf.orderBy("rank").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
+    // one extra doc holds astral characters: a word's symbols are its
+    // code points, not its UTF-16 units
+    val bdocs = docs.select(col("doc_id"), col("text")).union(Seq(
+      (900001L, "ab ab \uD83D\uDE00x \uD835\uDC9C\uD835\uDCB7")).toDF("doc_id", "text"))
     val batch = graft.operators.TextAnalysis
-      .bpeEncode(docs, "doc_id", "text", merges)
+      .bpeEncode(bdocs, "doc_id", "text", merges)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
 
     val mem = MemoryStream[(Long, String)]
     val out = StreamOps.streamingBpeCount(mem.toDS(), merges)
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName("parity_bpe").start()
-    val rows = docs.select(col("doc_id"), col("text")).orderBy(col("doc_id"))
+    val rows = bdocs.orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     replay(mem, rows, chunk = 100, q)
     val stateRows = Option(q.lastProgress)
@@ -1344,7 +1355,7 @@ class StreamingParitySpec extends AnyFunSuite {
   test("parity: streamingQualityScore ≡ batch logisticScore, stateless scorer") {
     implicit val sq = spark.sqlContext
     // q91 shape: weights trained batch-side on the full sf0.001 corpus,
-    // frozen and broadcast; the same docs stream through the scorer
+    // frozen; the same docs stream through the scorer
     val C = graft.operators.Classifier
     val pred = col("lang") === "en"
     val (w, b) = C.logisticTrain(docs, "doc_id", "text", pred, iters = 3, lr = 0.5)

@@ -243,4 +243,71 @@ class StreamingSpec extends AnyFunSuite {
     val ns = spark.table("session_out").collect().map(_.getAs[Long]("n")).sorted.toSeq
     assert(ns == Seq(2L, 2L)) // two closed 2-event sessions
   }
+
+  test("infinite: a rate source yields a gap-free idx and value = f(idx) across batches") {
+    // semantic.h:1763-1783: an unbounded generator whose element at
+    // index i is f(i). Drive the rate source until several micro-batches
+    // have committed, then check every delivered row against f.
+    val st = StreamOps.infinite(spark, 20, c => c * 3 + 1)
+    assert(st.isStreaming)
+    assert(st.columns.toSeq == Seq("timestamp", "idx", "value"))
+    val q = st.writeStream.outputMode("append").format("memory")
+      .queryName("infinite_out").start()
+    try {
+      val deadline = System.currentTimeMillis + 60000
+      while ((Option(q.lastProgress).forall(_.batchId < 3) ||
+          spark.table("infinite_out").count() < 20) &&
+          System.currentTimeMillis < deadline) Thread.sleep(200)
+    } finally q.stop()
+    val rows = spark.table("infinite_out").collect()
+      .map(r => (r.getTimestamp(0).getTime, r.getLong(1), r.getLong(2)))
+      .sortBy(_._2).toSeq
+    assert(rows.length >= 20, s"only ${rows.length} rows arrived")
+    assert(rows.map(_._2) == rows.indices.map(_.toLong)) // 0, 1, 2, … no gap, no repeat
+    assert(rows.forall { case (_, i, v) => v == 3 * i + 1 })
+    assert(rows.map(_._1) == rows.map(_._1).sorted) // time advances with idx
+  }
+
+  test("the streaming twins plan no typed map closure before the register or sink") {
+    // Each twin applies its batch Column kernel to the stream. A
+    // MapElements or MapPartitions node in the analyzed plan would be a
+    // Scala closure doing that work a second way, free to drift from
+    // the batch kernel.
+    import org.apache.spark.sql.catalyst.plans.logical.{MapElements, MapPartitions}
+    implicit val sq = spark.sqlContext
+    val corpus = Seq((1L, "the spark join window the of"), (2L, "a join of two tables"))
+      .toDF("doc_id", "text")
+    val texts = MemoryStream[(Long, String)].toDS()
+    val vecs = MemoryStream[(Long, Seq[Float])].toDS()
+    val metrics = MemoryStream[(Long, Double)].toDS()
+    val terms = Seq("spark", "join")
+    val twins: Seq[(String, org.apache.spark.sql.Dataset[_])] = Seq(
+      "streamingNearDupCandidates" -> StreamOps.streamingNearDupCandidates(texts),
+      "streamingCrossDedupCandidates" ->
+        StreamOps.streamingCrossDedupCandidates(texts, corpus, "doc_id", "text"),
+      "streamingEmbeddingNearDupCandidates" ->
+        StreamOps.streamingEmbeddingNearDupCandidates(vecs, 4, 3),
+      "streamingSemanticDedupCandidates" ->
+        StreamOps.streamingSemanticDedupCandidates(vecs, 25, 3),
+      "streamingContamination" ->
+        StreamOps.streamingContamination(texts, corpus, "doc_id", "text", 2),
+      "streamingBm25" -> StreamOps.streamingBm25(texts, corpus, "text", terms),
+      "streamingTfidf" -> StreamOps.streamingTfidf(texts, corpus, "text", terms),
+      "streamingGopherQuality" -> StreamOps.streamingGopherQuality(texts),
+      "streamingQuantileTiers" -> StreamOps.streamingQuantileTiers(metrics,
+        corpus.select(col("doc_id").cast("double").as("m")), col("m"), 2),
+      "streamingDsir" ->
+        StreamOps.streamingDsir(texts, corpus, "doc_id", "text", col("doc_id") === 1L),
+      "streamingBpeCount" -> StreamOps.streamingBpeCount(texts, Seq(("j", "o"))),
+      "streamingQualityScore" ->
+        StreamOps.streamingQualityScore(texts, Array.fill(256)(0.1), -0.5))
+    twins.foreach { case (name, ds) =>
+      assert(ds.isStreaming, name)
+      val plan = ds.queryExecution.analyzed
+      val closures = plan.collect {
+        case n @ (_: MapElements | _: MapPartitions) => n.nodeName
+      }
+      assert(closures.isEmpty, s"$name plans ${closures.mkString(", ")}:\n$plan")
+    }
+  }
 }
