@@ -347,10 +347,9 @@ object QueriesText {
     // BPE tokenizer round-trip: train 6 merges on the corpus's word-
     // frequency dictionary, then ENCODE the same corpus and report
     // per-doc token counts — the token-budgeting number packing, mixing
-    // and cost estimation all start from. Encode applies merges to the
-    // DISTINCT-word frame only (O(vocab·merges), not O(corpus·merges));
-    // the corpus is scanned once and joins the vocab-sized count dict
-    // broadcast-side, so it never shuffles by word
+    // and cost estimation all start from. Encode is one projection over
+    // the docs: no shuffle, and each task merges each distinct word
+    // once (O(vocab·merges), not O(corpus·merges))
     "q88_bpe_encode" -> ((s, dir) => {
       val docs = Readers.table(s, dir, "documents")
       // merges-only trainer: the encode path re-segments through
@@ -422,8 +421,8 @@ object QueriesText {
 
     // tokenizer fertility: chars per BPE token by language — the
     // tokenizer-fairness metric multilingual pipelines budget with.
-    // Rides the q88 train+encode; one extra broadcast-dict join + a
-    // #langs-row rollup
+    // Rides the q88 train+encode; the per-doc counts join the docs'
+    // language and length on doc_id, then a #langs-row rollup
     "q92_tokenizer_fertility" -> ((s, dir) => {
       val docs = Readers.table(s, dir, "documents")
       // merges-only trainer, sorted on the driver (see q88)

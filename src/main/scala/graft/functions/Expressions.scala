@@ -2,10 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the charsequence surface that Spark's
@@ -312,22 +312,30 @@ object ExprHelpers {
     * order, one greedy left-to-right non-overlapping adjacent-merge pass
     * — EXACTLY [[graft.operators.TextAnalysis.mergeAdjacent]]'s carry
     * semantics ("a a a" → ["aa", "a"]; a null element never matches,
-    * flushes a pending carry, and is copied through). Arrays ping-pong;
-    * sizes only shrink. */
+    * flushes a pending carry, and is copied through). */
   def bpeApplyMerges(arr: org.apache.spark.sql.catalyst.util.ArrayData,
                      a: Array[UTF8String], b: Array[UTF8String],
                      ab: Array[UTF8String]): GenericArrayData = {
-    var n = arr.numElements()
-    var cur = new Array[AnyRef](n)
+    val syms = new Array[AnyRef](arr.numElements())
     var i = 0
-    while (i < n) {
-      cur(i) = if (arr.isNullAt(i)) null else arr.getUTF8String(i)
+    while (i < syms.length) {
+      syms(i) = if (arr.isNullAt(i)) null else arr.getUTF8String(i)
       i += 1
     }
+    new GenericArrayData(bpeMergeAll(syms, a, b, ab))
+  }
+
+  /** [[bpeApplyMerges]]'s loop over a symbol array it may overwrite:
+    * `syms` and one more array ping-pong, and sizes only shrink. Returns
+    * the merged symbols. */
+  private def bpeMergeAll(syms: Array[AnyRef], a: Array[UTF8String],
+                          b: Array[UTF8String], ab: Array[UTF8String]): Array[AnyRef] = {
+    var cur = syms
+    var out = if (a.isEmpty) syms else new Array[AnyRef](syms.length)
+    var n = syms.length
     var k = 0
     while (k < a.length) {
       val ak = a(k); val bk = b(k); val abk = ab(k)
-      val out = new Array[AnyRef](n)
       var m = 0
       var carry: AnyRef = null // non-null iff a pending `a` may merge
       var j = 0
@@ -344,11 +352,23 @@ object ExprHelpers {
         j += 1
       }
       if (carry != null) { out(m) = carry; m += 1 }
-      cur = out; n = m
+      val done = cur; cur = out; out = done; n = m
       k += 1
     }
-    if (n < cur.length) cur = java.util.Arrays.copyOf(cur, n)
-    new GenericArrayData(cur)
+    if (n < cur.length) java.util.Arrays.copyOf(cur, n) else cur
+  }
+
+  /** The BPE symbol count of one word: its characters exactly as
+    * `filter(split(word, ""), _ != "")` gives them
+    * ([[graft.operators.TextAnalysis.bpeSegment]]; code points on valid
+    * UTF-8, Spark's lead-byte rule on invalid bytes), after the whole
+    * merge list. */
+  def bpeSymbolCount(word: UTF8String, a: Array[UTF8String], b: Array[UTF8String],
+                     ab: Array[UTF8String]): Int = {
+    // a UTF8String[] is an Object[], and the merge loop stores only
+    // UTF8Strings into it
+    val syms = word.split(UTF8String.EMPTY_UTF8, -1).filter(_.numBytes() > 0)
+    bpeMergeAll(syms.asInstanceOf[Array[AnyRef]], a, b, ab).length
   }
 
   /** True for the six ASCII whitespace bytes `[ \t\n\r\x0B\f]`
@@ -606,6 +626,30 @@ case class HexVotes16Expr(child: Expression) extends StringInput {
     copy(child = newChild)
 }
 
+/** A BPE merge list as constructor data (like [[PqCodesExpr]]'s
+  * codebook): it must not be mutated after construction, and case-class
+  * equality on it is reference-based — conservative (missed
+  * subexpression elimination), never incorrect. Generated code reads
+  * the three arrays through `ctx.addReferenceObj`, so every merge list
+  * shares one generated body. */
+trait BpeMergeList {
+  def merges: Array[(String, String)]
+
+  @transient protected lazy val aArr: Array[UTF8String] =
+    merges.map(m => UTF8String.fromString(m._1))
+  @transient protected lazy val bArr: Array[UTF8String] =
+    merges.map(m => UTF8String.fromString(m._2))
+  @transient protected lazy val abArr: Array[UTF8String] =
+    merges.map(m => UTF8String.fromString(m._1 + m._2))
+
+  /** (a, b, ab) as generated-code references. */
+  protected def mergeRefs(ctx: CodegenContext): (String, String, String) = {
+    val cls = "org.apache.spark.unsafe.types.UTF8String[]"
+    (ctx.addReferenceObj("bpeA", aArr, cls), ctx.addReferenceObj("bpeB", bArr, cls),
+      ctx.addReferenceObj("bpeAb", abArr, cls))
+  }
+}
+
 /** A full BPE merge list applied to a symbol array as ONE native
   * expression — per word: one tight loop per merge over a ping-pong
   * pair of arrays, instead of nMerges interpreted `aggregate` HOF
@@ -613,26 +657,15 @@ case class HexVotes16Expr(child: Expression) extends StringInput {
   * (§4). Semantics are exactly the chained
   * [[graft.operators.TextAnalysis.mergeAdjacent]] folds it replaces
   * (greedy left-to-right, non-overlapping, carry may re-arm on `a`),
-  * pinned against the HOF form in ExpressionSpec. The merge list is
-  * constructor data (like [[PqCodesExpr]]'s codebook) and must not be
-  * mutated after construction; case-class equality on it is
-  * reference-based — conservative (missed subexpression elimination),
-  * never incorrect. */
+  * pinned against the HOF form in ExpressionSpec. */
 case class BpeMergesExpr(child: Expression, merges: Array[(String, String)])
-  extends UnaryExpression {
+  extends UnaryExpression with BpeMergeList {
 
   override def dataType: DataType = child.dataType match {
     case ArrayType(_, n) => ArrayType(StringType, containsNull = n)
     case _ => ArrayType(StringType, containsNull = true)
   }
   override def prettyName: String = "graft_bpe_merges"
-
-  @transient private lazy val aArr: Array[UTF8String] =
-    merges.map(m => UTF8String.fromString(m._1))
-  @transient private lazy val bArr: Array[UTF8String] =
-    merges.map(m => UTF8String.fromString(m._2))
-  @transient private lazy val abArr: Array[UTF8String] =
-    merges.map(m => UTF8String.fromString(m._1 + m._2))
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
@@ -649,15 +682,103 @@ case class BpeMergesExpr(child: Expression, merges: Array[(String, String)])
       aArr, bArr, abArr)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = "org.apache.spark.unsafe.types.UTF8String[]"
-    val aRef = ctx.addReferenceObj("bpeA", aArr, cls)
-    val bRef = ctx.addReferenceObj("bpeB", bArr, cls)
-    val abRef = ctx.addReferenceObj("bpeAb", abArr, cls)
+    val (aRef, bRef, abRef) = mergeRefs(ctx)
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.functions.ExprHelpers.bpeApplyMerges($c, $aRef, $bRef, $abRef);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): BpeMergesExpr =
+    copy(child = newChild)
+}
+
+/** Per-text BPE counts against one merge list, with a memo of each
+  * word's merged symbol count, so a task merges each distinct word once
+  * (the cost stays O(vocabulary · merges), not O(corpus tokens ·
+  * merges)). The memo is bounded: it starts over at [[BpeCounter.MemoWords]]
+  * words or [[BpeCounter.MemoBytes]] key bytes. Not thread-safe: one
+  * instance per task (a generated-class field, or the expression's own
+  * per-task copy). */
+final class BpeCounter(a: Array[UTF8String], b: Array[UTF8String], ab: Array[UTF8String]) {
+  private val memo = new java.util.HashMap[UTF8String, Integer]()
+  private var memoBytes = 0L
+
+  /** (n_words, n_bpe_tokens) of `text` ([[BpeCountExpr]]); (0, 0) when
+    * the text is null or has no token. */
+  def count(text: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
+    var nWords = 0L
+    var nSyms = 0L
+    if (text != null) {
+      val spans = ExprHelpers.tokenSpans(text)
+      var t = 0
+      while (t < spans.length) {
+        // a view of the token's bytes; copied only when memoized
+        val word = UTF8String.fromAddress(text.getBaseObject,
+          text.getBaseOffset + spans(t), spans(t + 1) - spans(t))
+        nSyms += symbolCount(word)
+        nWords += 1
+        t += 2
+      }
+    }
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](nWords, nSyms))
+  }
+
+  private def symbolCount(word: UTF8String): Int = {
+    val hit = memo.get(word)
+    if (hit != null) hit.intValue
+    else {
+      val n = ExprHelpers.bpeSymbolCount(word, a, b, ab)
+      if (memo.size >= BpeCounter.MemoWords ||
+          memoBytes + word.numBytes() > BpeCounter.MemoBytes) {
+        memo.clear(); memoBytes = 0L
+      }
+      memo.put(word.copy(), n)
+      memoBytes += word.numBytes()
+      n
+    }
+  }
+}
+
+object BpeCounter {
+  val MemoWords = 1 << 16
+  val MemoBytes = 8L << 20
+}
+
+/** Per-document BPE counts as ONE native expression:
+  * `struct<n_words: bigint, n_bpe_tokens: bigint>` — the text's
+  * [[ExprHelpers.tokenSpans]] tokens, and the sum of their symbol counts
+  * after the whole merge list ([[ExprHelpers.bpeSymbolCount]]: the
+  * symbols and merge loop of [[BpeMergesExpr]]). Null or token-less text
+  * gives (0, 0). Each distinct word is merged once per task
+  * ([[BpeCounter]]). ExpressionSpec pins it against the explode /
+  * distinct / join form it replaced. */
+case class BpeCountExpr(child: Expression, merges: Array[(String, String)])
+  extends StringInput with BpeMergeList {
+
+  override def dataType: DataType = StructType(Seq(
+    StructField("n_words", LongType, nullable = false),
+    StructField("n_bpe_tokens", LongType, nullable = false)))
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_bpe_count"
+
+  @transient private lazy val counter = new BpeCounter(aArr, bArr, abArr)
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    counter.count(child.eval(input).asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val (aRef, bRef, abRef) = mergeRefs(ctx)
+    val cls = classOf[BpeCounter].getName
+    val counterRef = ctx.addMutableState(cls, "bpeCounter",
+      v => s"$v = new $cls($aRef, $bRef, $abRef);", forceInline = true)
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} =
+      |  $counterRef.count(${c.isNull} ? null : ${c.value});""".stripMargin,
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): BpeCountExpr =
     copy(child = newChild)
 }
 

@@ -766,39 +766,38 @@ object TextAnalysis {
     * checkpoint every 8 merges to bound the expression tree; the native
     * expression is one plan node at any merge count, so neither the
     * passes nor the checkpoints remain (§4, before/after in
-    * OPTIMIZATION_r20.md). Adds `syms` (array&lt;string&gt;). */
+    * OPTIMIZATION_r20.md). A word's symbols are its characters as
+    * `split(word, "")` gives them (code points on valid UTF-8), the
+    * symbols [[bpeEncode]] counts. Adds `syms` (array&lt;string&gt;). */
   def bpeSegment(words: org.apache.spark.sql.DataFrame, wordCol: String,
                  merges: Seq[(String, String)]): org.apache.spark.sql.DataFrame =
-    words.withColumn("syms", bpeSymbols(col(wordCol), merges.toArray))
-
-  /** One word's BPE symbols: its code points, then the whole merge list
-    * in rank order ([[graft.functions.BpeMergesExpr]]). */
-  private[graft] def bpeSymbols(word: Column, merges: Array[(String, String)]): Column =
-    org.apache.spark.sql.GraftColumnShim.bpeMergesColumn(
-      filter(split(word, ""), x => x =!= ""), merges)
+    words.withColumn("syms", org.apache.spark.sql.GraftColumnShim.bpeMergesColumn(
+      filter(split(col(wordCol), ""), x => x =!= ""), merges.toArray))
 
   /** BPE-encode a corpus against a trained merge list and report per-doc
     * token counts — the tokenizer-application step of an LLM data
     * pipeline (token budgeting, sequence packing, cost estimation all
-    * start from exactly this number). Same dictionary trick as the
-    * trainer: the corpus is scanned ONCE into (doc, word) rows; merges
-    * are applied to the DISTINCT-word frame only (O(vocab · nMerges),
-    * not O(corpus tokens · nMerges)); the per-word symbol counts join
-    * back on `word` — a vocab-sized build side the planner broadcasts,
-    * so the corpus never shuffles; Zipf-hot words are plain
-    * broadcast-probe skew, not a partition pin. Docs with no tokens
-    * survive with zero counts. Returns (idCol, n_words, n_bpe_tokens). */
+    * start from exactly this number). One projection over `docs`, with
+    * no shuffle, aggregate or join: the native
+    * [[graft.functions.BpeCountExpr]] walks each text's tokens
+    * ([[tokens]]), splits every word into the symbols [[bpeSegment]]
+    * gives it, applies the merge list in rank order, and sums the
+    * symbol counts. A per-task memo of word → symbol count merges each
+    * distinct word once per task, so merge work stays O(vocab · nMerges)
+    * per task, not O(corpus tokens · nMerges); Zipf-hot words are memo
+    * hits, never a partition pin. Returns (idCol, n_words,
+    * n_bpe_tokens), one row per input row, in input order.
+    *
+    * Contract: null or token-less text gives (0, 0). Each row is counted
+    * on its own text, so `idCol` is a key (as for [[Dedup.jaccard]]):
+    * rows that share an id each keep their own counts, and a null id
+    * gets its text's counts. */
   def bpeEncode(docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
-                merges: Seq[(String, String)]): org.apache.spark.sql.DataFrame = {
-    val words = docs.select(col(idCol).as(idCol), explode(tokens(col(textCol))).as("__w"))
-    val dict = bpeSegment(words.select(col("__w").as("__word")).distinct(), "__word", merges)
-      .select(col("__word"), size(col("syms")).cast("long").as("__ns"))
-    val perDoc = words.join(dict, col("__w") === col("__word"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("__nw"), sum(col("__ns")).as("__nb"))
-    docs.select(col(idCol))
-      .join(perDoc, Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("__nw"), lit(0L)).as("n_words"),
-        coalesce(col("__nb"), lit(0L)).as("n_bpe_tokens"))
-  }
+                merges: Seq[(String, String)]): org.apache.spark.sql.DataFrame =
+    // two projections: the struct is computed once, then read per field
+    docs.select(col(idCol),
+        org.apache.spark.sql.GraftColumnShim.bpeCountColumn(col(textCol), merges.toArray)
+          .as("__bpe"))
+      .select(col(idCol), col("__bpe.n_words").as("n_words"),
+        col("__bpe.n_bpe_tokens").as("n_bpe_tokens"))
 }

@@ -806,23 +806,15 @@ object StreamOps {
   case class BpeCounted(id: Long, nWords: Long, nBpeTokens: Long)
 
   /** Streaming BPE token counting — the unbounded twin of
-    * [[graft.operators.TextAnalysis.bpeEncode]]: each streamed doc is
-    * tokenized and every word segmented by the batch word→symbols
-    * expression ([[graft.operators.TextAnalysis.bpeSymbols]]), the
-    * symbol counts summed per doc — map-side and stateless. Where the
-    * batch operator segments each distinct word of the corpus once, the
-    * stream segments every word occurrence. */
+    * [[graft.operators.TextAnalysis.bpeEncode]], which is one projection
+    * ([[graft.functions.BpeCountExpr]]) and runs on the stream as it is:
+    * each streamed doc is counted on its own, map-side and stateless,
+    * with each distinct word merged once per task. */
   def streamingBpeCount(docs: Dataset[(Long, String)],
                         merges: Seq[(String, String)]): Dataset[BpeCounted] = {
     import docs.sparkSession.implicits._
-    val ms = merges.toArray
-    val toks = coalesce(graft.operators.TextAnalysis.tokens(col("text")),
-      array().cast("array<string>"))
-    typed[BpeCounted](docs.toDF("id", "text").select(col("id"),
-      size(toks).cast("long"),
-      aggregate(transform(toks, w =>
-          size(graft.operators.TextAnalysis.bpeSymbols(w, ms)).cast("long")),
-        lit(0L), (acc, x) => acc + x)))
+    typed[BpeCounted](graft.operators.TextAnalysis.bpeEncode(
+      docs.toDF("id", "text"), "id", "text", merges))
   }
 
   /** One classifier-scored document: id, token count, P(label). */

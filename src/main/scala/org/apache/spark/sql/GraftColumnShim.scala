@@ -52,6 +52,10 @@ object GraftColumnShim {
   def bpeMergesColumn(syms: Column, merges: Array[(String, String)]): Column =
     nativeColumn(syms)(graft.functions.BpeMergesExpr(_, merges))
 
+  /** Column over the native [[graft.functions.BpeCountExpr]]. */
+  def bpeCountColumn(text: Column, merges: Array[(String, String)]): Column =
+    nativeColumn(text)(graft.functions.BpeCountExpr(_, merges))
+
   /** Release the cached blocks behind a `localCheckpoint()`ed Dataset:
     * its analyzed plan is a `LogicalRDD` over the checkpointed
     * (persisted) RDD, so unpersist that RDD directly —

@@ -593,6 +593,65 @@ class ExpressionSpec extends AnyFunSuite {
     }
   }
 
+  /** [[TA.bpeEncode]] as it was planned before [[graft.functions.BpeCountExpr]]:
+    * explode the (doc, word) rows, segment the distinct words, join the
+    * symbol counts back, group by doc, and left-join the docs. */
+  private def explodeBpeEncode(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
+    val words = docs.select(col("id"), explode(TA.tokens(col("text"))).as("__w"))
+    val dict = TA.bpeSegment(words.select(col("__w").as("__word")).distinct(), "__word", merges)
+      .select(col("__word"), size(col("syms")).cast("long").as("__ns"))
+    val perDoc = words.join(dict, col("__w") === col("__word"))
+      .groupBy(col("id"))
+      .agg(count(lit(1)).as("__nw"), sum(col("__ns")).as("__nb"))
+    docs.select(col("id"))
+      .join(perDoc, Seq("id"), "left")
+      .select(col("id"), coalesce(col("__nw"), lit(0L)).as("n_words"),
+        coalesce(col("__nb"), lit(0L)).as("n_bpe_tokens"))
+  }
+
+  /** `n` merges over the symbol pool of `text`: each merges two symbols
+    * drawn half the time from the 60 oldest and half from the whole
+    * pool, and adds their concatenation to it, so early merges fire on
+    * many words and late ones on few. Seeded. */
+  private def randomMerges(text: String, n: Int, seed: Int): Seq[(String, String)] = {
+    val rnd = new scala.util.Random(seed)
+    val pool = scala.collection.mutable.ArrayBuffer(text.codePoints().toArray.distinct
+      .map(cp => new String(Character.toChars(cp))).filter(_.trim.nonEmpty).toSeq: _*)
+    def pick(): String =
+      pool(if (rnd.nextBoolean()) rnd.nextInt(math.min(60, pool.size)) else rnd.nextInt(pool.size))
+    Seq.fill(n) { val (a, b) = (pick(), pick()); pool += a + b; (a, b) }
+  }
+
+  test("BpeCountExpr == the explode/distinct/join bpeEncode, eval and codegen") {
+    val corpus = textCorpus().union(spark.sparkContext.parallelize(Seq(
+        (10000L, Array[Byte](0x61, 0x80.toByte, 0x20, 0xE6.toByte, 0x62)), // invalid UTF-8
+        (10001L, Array[Byte](0xF0.toByte, 0x9F.toByte, 0x20, 0x61, 0x62, 0xC3.toByte))), 1)
+      .toDF("id", "raw").select(col("id"), col("raw").cast("string").as("text")))
+    val texts = (edgeTexts.filter(_ != null) :+ "the spark table window data").mkString(" ")
+    val lists = Seq(
+      "no merges" -> Nil,
+      "hand list" -> Seq(("t", "h"), ("th", "e"), ("a", "a"), ("aa", "a"),
+        ("\uD83C\uDF89", " "), ("e", "\u00E9"), ("\u65E5", "\u672C")),
+      "1000 merges" -> randomMerges(texts, 1000, seed = 7))
+    val want = lists.map { case (name, ms) =>
+      name -> explodeBpeEncode(corpus, ms).collect().map(canonical).toSet }
+    assert(want.forall(_._2.size == edgeTexts.length + 502))
+    // the merges do fire: the lists give different counts
+    assert(want.map(_._2).distinct.size == lists.size)
+    inFactoryModes { mode =>
+      lists.zip(want).foreach { case ((name, ms), (_, expected)) =>
+        val got = TA.bpeEncode(corpus, "id", "text", ms)
+        val ref = explodeBpeEncode(corpus, ms)
+        assert(got.schema.map(_.dataType) == ref.schema.map(_.dataType), s"$mode $name")
+        assert(got.collect().map(canonical).toSet == expected, s"$mode $name")
+        val plan = got.queryExecution.executedPlan.toString
+        val line = plan.split("\n").find(_.contains("graft_bpe_count"))
+        assert(line.isDefined, plan)
+        assert(line.get.contains("*(") == (mode == "CODEGEN_ONLY"), s"$mode:\n$plan")
+      }
+    }
+  }
+
   test("tokenCount(null) is size(null): null under ANSI, -1 without") {
     val key = "spark.sql.ansi.enabled"
     val prev = spark.conf.getOption(key)
@@ -662,6 +721,8 @@ class ExpressionSpec extends AnyFunSuite {
         GraftColumnShim.hexVotes16Column(md5(col("text"))))),
       "graft_bpe_merges" -> (() => words.select(col("w"),
         GraftColumnShim.bpeMergesColumn(col("syms"), mergeList))),
+      "graft_bpe_count" -> (() => corpus.select(col("id"),
+        GraftColumnShim.bpeCountColumn(col("text"), mergeList))),
       "graft_utf32le_encode" -> (() => corpus.select(col("id"),
         call_function("graft_utf32le_encode", col("text")))),
       "graft_utf32be_decode" -> (() => corpus.select(col("id"),

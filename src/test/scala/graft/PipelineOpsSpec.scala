@@ -487,12 +487,62 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(got == exp)
   }
 
-  test("bpeEncode plan: merges run on the distinct-word frame, no window") {
+  test("bpeEncode plan: one projection over docs, no exchange, aggregate, join or window") {
     val docs = Seq((1L, "xy xy zz")).toDF("doc_id", "text")
     val df = TA.bpeEncode(docs, "doc_id", "text", Seq(("x", "y")))
     val plan = df.queryExecution.optimizedPlan.toString.toLowerCase
     assert(!plan.contains("windowexpression"), s"window in plan:\n$plan")
     assert(!plan.contains("cartesian"), s"cartesian in plan:\n$plan")
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Repartition, RepartitionByExpression}
+    val shuffling = df.queryExecution.optimizedPlan.collect {
+      case n @ (_: Aggregate | _: Join | _: Repartition | _: RepartitionByExpression) => n.nodeName
+    }
+    assert(shuffling.isEmpty, s"bpeEncode plans ${shuffling.mkString(", ")}:\n$plan")
+    val physical = df.queryExecution.executedPlan.toString.toLowerCase
+    Seq("exchange", "aggregate", "join").foreach(n =>
+      assert(!physical.contains(n), s"$n in the physical plan:\n$physical"))
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq ==
+      Seq((1L, 3L, 4L))) // xy → 1 symbol twice, zz → 2
+  }
+
+  test("bpeEncode contract: null, blank, astral and invalid UTF-8 text; ids are keys") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
+    val ab = Seq(("a", "b"))
+    val astral = Seq(("\uD83D\uDE00", "x")) // 😀 + x
+    def utf8(s: String): Array[Byte] = s.getBytes("UTF-8")
+    // (case, merges, (id, text bytes) rows, expected (id, n_words, n_bpe_tokens) rows)
+    val cases: Seq[(String, Seq[(String, String)], Seq[(java.lang.Long, Array[Byte])],
+                    Seq[(Option[Long], Long, Long)])] = Seq(
+      ("null text", ab, Seq((1L, null)), Seq((Some(1L), 0L, 0L))),
+      ("empty text", ab, Seq((1L, utf8(""))), Seq((Some(1L), 0L, 0L))),
+      ("blank text", ab, Seq((1L, utf8(" \t\n\r\u000B\f "))), Seq((Some(1L), 0L, 0L))),
+      // 😀x merges to one symbol; 𝒜𝒷 is two code points (four UTF-16 units)
+      ("astral text", astral, Seq((1L, utf8("\uD83D\uDE00x \uD835\uDC9C\uD835\uDCB7"))),
+        Seq((Some(1L), 2L, 3L))),
+      ("empty merge list: tokens are code points", Nil,
+        Seq((1L, utf8("\uD83D\uDE00x \uD835\uDC9C\uD835\uDCB7 ab"))), Seq((Some(1L), 3L, 6L))),
+      // 'a', a stray continuation byte, a space, a truncated 3-byte lead, 'b':
+      // split(word, "") reads 0x80 as one character and 0xE6 as the lead
+      // of a 3-byte character that swallows the 'b'
+      ("invalid UTF-8", ab, Seq((1L, Array[Byte](0x61, 0x80.toByte, 0x20, 0xE6.toByte, 0x62))),
+        Seq((Some(1L), 2L, 3L))),
+      ("null id counts its text", ab, Seq((null, utf8("ab ab c"))), Seq((None, 3L, 3L))),
+      ("duplicate ids: each row on its own text", ab,
+        Seq((7L, utf8("ab")), (7L, utf8("ab cd")), (8L, null)),
+        Seq((Some(7L), 1L, 1L), (Some(7L), 2L, 3L), (Some(8L), 0L, 0L))))
+    val schema = StructType(Seq(StructField("doc_id", LongType), StructField("raw", BinaryType)))
+    cases.foreach { case (name, merges, rows, want) =>
+      val docs = spark.createDataFrame(
+          spark.sparkContext.parallelize(rows.map { case (id, b) => Row(id, b) }, 2), schema)
+        .select(col("doc_id"), col("raw").cast("string").as("text"))
+      val out = TA.bpeEncode(docs, "doc_id", "text", merges)
+      assert(out.columns.toSeq == Seq("doc_id", "n_words", "n_bpe_tokens"), name)
+      assert(!out.schema("n_words").nullable && !out.schema("n_bpe_tokens").nullable, name)
+      val got = out.collect().map(r =>
+        (if (r.isNullAt(0)) None else Some(r.getLong(0)), r.getLong(1), r.getLong(2))).toSeq
+      assert(got.sortBy(_.toString) == want.sortBy(_.toString), name)
+    }
   }
 
   // --- dsirLogRatio ---------------------------------------------------

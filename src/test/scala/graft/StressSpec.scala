@@ -645,9 +645,10 @@ class StressSpec extends AnyFunSuite {
   test("bpeEncode: one Zipf-head word owns 80% of 500k tokens", SlowStress) {
     failAfter(Span(900, Seconds)) {
       // the canonical tokenizer-apply skew: "the" dominates the corpus.
-      // The dictionary trick means the merge fold runs ~100k+1 times
-      // (distinct words), NOT 500k (corpus tokens); the count join's hot
-      // key is broadcast-probe skew, never a partition pin. Closed form:
+      // bpeEncode is one projection: each task's word memo merges "the"
+      // once and every other distinct word once, so the merge loop runs
+      // ~100k + #tasks times (distinct words per task), NOT 500k (corpus
+      // tokens), and there is no shuffle for a hot key to pin. Closed form:
       // "the" → 1 symbol after merges (t+h, th+e); every zipfXXX word
       // stays 1 symbol per char except the trained merges don't apply.
       val docs = spark.range(100000).select(col("id").as("doc_id"),
@@ -656,8 +657,7 @@ class StressSpec extends AnyFunSuite {
       val merges = Seq(("t", "h"), ("th", "e")) // hand-trained: "the" → 1 sym
       val out = graft.operators.TextAnalysis
         .bpeEncode(docs, "doc_id", "text", merges)
-      // structural: window-free, and the merge fold's input is the
-      // DISTINCT-word frame (an Aggregate feeds the syms projection)
+      // structural: window-free (PipelineOpsSpec pins the single projection)
       val plan = out.queryExecution.optimizedPlan.toString.toLowerCase
       assert(!plan.contains("windowexpression"), s"window in plan:\n$plan")
       val stats = out.agg(sum(col("n_words")), sum(col("n_bpe_tokens"))).head()
