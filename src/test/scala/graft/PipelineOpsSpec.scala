@@ -487,7 +487,9 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(got == exp)
   }
 
-  test("bpeEncode plan: one projection over docs, no exchange, aggregate, join or window") {
+  // The merges run once per distinct word (the kernel's per-task memo), in
+  // one projection over docs: no exchange, aggregate, join or window.
+  test("bpeEncode plan: merges run on the distinct-word frame, no window") {
     val docs = Seq((1L, "xy xy zz")).toDF("doc_id", "text")
     val df = TA.bpeEncode(docs, "doc_id", "text", Seq(("x", "y")))
     val plan = df.queryExecution.optimizedPlan.toString.toLowerCase
